@@ -69,6 +69,22 @@ def test_range_join_matches_equi(spark, pages):
     assert a == b
 
 
+def test_range_join_null_cell_keeps_big_leaf_exact(spark):
+    """A null cell_id sharing an Arrow batch with a leaf ID above 2^53
+    must not cost that leaf its low bits: the null row is dropped and the
+    leaf still stabs the covering that holds exactly it."""
+    leaf = 4611686018427400249  # odd leaf id, > 2^53
+    df = spark.createDataFrame(
+        [(1, leaf), (2, None)], "doc_id long, cell_id long"
+    ).coalesce(1)
+    regions = {9: np.array([leaf], dtype=np.int64).view(np.uint64)}
+    got = [
+        (r["doc_id"], r["region_id"])
+        for r in CJ.containment_join_range(df, regions).collect()
+    ]
+    assert got == [(1, 9)]
+
+
 def test_polygon_pip_vs_numpy_oracle(spark, pages):
     """Triangle PIP through covering join + ray-cast UDF vs a brute-force
     numpy ray-cast over ALL pages."""
