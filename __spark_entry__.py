@@ -334,7 +334,7 @@ def _q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bulk PIP against a polygons TABLE (120 generated star polygons):
-    coverings computed on the EXECUTORS (mapInPandas over the polygon
+    coverings computed on the EXECUTORS (mapInArrow over the polygon
     frame — no per-polygon driver BFS), normalized natively, covering
     equi-join, then a NATIVE higher-order-function ray-cast over the
     region's vertex arrays carried by the join (no per-region UDF
@@ -396,7 +396,7 @@ def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _pages_with_cells(spark, sf_dir)
     size = 1 << (30 - KNNJ_LEVEL)
     # the interior filter below references _fij 4x; derive it from the
-    # OPAQUE pandas-UDF encode (bit-identical to the native arm), not
+    # OPAQUE Arrow UDF encode (bit-identical to the native arm), not
     # from pages' native cell_id — a filter on a native-cell derivation
     # would be pushdown-substituted through the encode stack and explode
     # the plan (CLAUDE.md native-cell filter-pushdown trap). The query
@@ -479,7 +479,7 @@ def _q_cell_union_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2CellUnion.Normalize (operators.cellunion.normalize_cell_union):
     minimal disjoint mixed-level form of a redundant cell set — one
     native window pass + groupBy to merge leaf intervals, then a greedy
-    maximal-dyadic-block walk per island (mapInPandas, metadata-scale).
+    maximal-dyadic-block walk per island (mapInArrow, metadata-scale).
     Oracle: the same greedy walk as a DuckDB recursive CTE over an
     identical VALUES input — two independent derivations of the unique
     minimal cover."""

@@ -1,4 +1,4 @@
-"""S2 function surface for Spark: native Catalyst exprs + pandas UDFs.
+"""S2 function surface for Spark: native Catalyst exprs + Arrow UDFs.
 
 ``from s2cell_spark import functions as S2F`` then use e.g.
 ``S2F.lat_lon_to_cell_id(...)`` (Arrow kernel) and

@@ -3,7 +3,7 @@
 Everything here compiles to JVM-side whole-stage-codegen expressions — no
 Python boundary — so Catalyst can constant-fold them, push filters through
 them, and prune parquet row groups on them. Only the trig-heavy encode /
-decode paths need the pandas-UDF kernels (`s2cell_spark.functions.udfs`).
+decode paths need the Arrow UDF kernels (`s2cell_spark.functions.udfs`).
 
 Cell IDs live in ``LongType`` carrying the S2 uint64 bits two's-complement
 (SURVEY.md §1.2): faces 4-5 are negative longs. All masking/truncation is

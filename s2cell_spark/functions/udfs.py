@@ -1,34 +1,30 @@
-"""Arrow-batched pandas UDFs wrapping the numpy kernels.
+"""Arrow UDFs wrapping the numpy kernels.
 
 Only the operations that genuinely need float math (cube-face projection,
 quadratic ST<->UV, Hilbert lookups) cross the JVM->Python Arrow boundary;
 all bit/token operations have native Catalyst forms in
 :mod:`s2cell_spark.functions.exprs` and should be preferred in filters so
-they push down (a predicate behind a pandas UDF does not).
+they push down (a predicate behind a Python UDF does not).
 
 Null convention (SURVEY.md §1.2): invalid input rows yield null output —
 the reference raises InvalidCellID/InvalidToken scalar-side
 (s2cell/s2cell.py:26-30); a distributed engine must not fail a 100-TB job
 on one bad row. Validity is queryable via the native exprs.
 
-int64<->uint64: Spark longs arrive as pandas int64; kernels reinterpret the
-same 64 bits via ``.view(np.uint64)`` — no value conversion anywhere.
-
-CRITICAL Arrow-boundary trap this module guards against: a LongType batch
-containing ANY null reaches pandas as float64, silently destroying the
-low bits of every value above 2^53 — i.e. of every real cell ID — for
-ALL rows sharing the batch. The public Column API below therefore
-``coalesce``s long inputs to 0 BEFORE the UDF (so batches are always
-non-nullable int64) and re-nulls the output; the raw pandas UDFs (also
-registered for spark.sql) detect a float64 batch and either recover
-exactly (all |values| <= 2^53) or raise with guidance rather than
-corrupt.
+Boundary convention, shared by every Python stage in the library: a
+stage receives pyarrow arrays, reads each through :func:`arrow_to_numpy`
+as numpy values plus the validity bitmap (nulls arrive as that bitmap,
+never as a float64 NaN detour, so int64 cell IDs above 2^53 stay exact
+next to nulls), masks nulls in numpy, and writes results back through
+:func:`numpy_to_arrow`. int64<->uint64: kernels reinterpret the same
+64 bits via ``.view(np.uint64)`` — no value conversion anywhere.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,190 +41,138 @@ from pyspark.sql.types import (
 from s2cell_spark import kernels as K
 
 
-def _i64_to_u64(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """(uint64 values, not-null mask) from a nullable int64 Series.
-
-    See module docstring: a nullable batch arrives as float64. Values at
-    or below 2^53 convert back exactly; beyond that the bits are already
-    gone at the Arrow boundary, so raise instead of returning corrupt
-    cell IDs (the Column API prevents this by coalescing first)."""
-    notnull = s.notna().to_numpy()
-    if s.dtype == np.float64:
-        filled = s.fillna(0.0).to_numpy(dtype=np.float64)
-        if np.any(np.abs(filled) > 2.0**53):
-            raise ValueError(
-                "nullable LongType batch reached the UDF as float64 with "
-                "values beyond 2^53 — low bits were lost at the Arrow "
-                "boundary. COALESCE the column to 0 before the UDF (the "
-                "s2cell_spark Column API does this automatically)."
-            )
-        vals = filled.astype(np.int64).view(np.uint64)
+def arrow_to_numpy(arr: pa.Array, dtype, fill=0) -> tuple[np.ndarray, np.ndarray]:
+    """(values as `dtype`, validity) of an Arrow array; null slots read as
+    `fill`. Zero-copy for a null-free primitive array of the same type."""
+    if arr.null_count:
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        arr = pc.fill_null(arr, fill)
     else:
-        vals = s.fillna(0).to_numpy(dtype=np.int64, copy=False).view(np.uint64)
-    return vals, notnull
+        valid = np.ones(len(arr), dtype=bool)
+    return np.asarray(arr.to_numpy(zero_copy_only=False), dtype=dtype), valid
 
 
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def numpy_to_arrow(values: np.ndarray, valid: np.ndarray | None = None, type=None) -> pa.Array:
+    """Arrow array of `values`, null where `valid` is False."""
+    mask = None if valid is None or valid.all() else ~valid
+    return pa.array(values, type=type, mask=mask)
 
 
-def _null_guard(cid, udf, *extra):
-    """Column-API guard: run `udf` on COALESCE(cid, 0) so the Arrow batch
-    stays non-nullable int64, and re-null the output for null input."""
-    cid = _col(cid)
-    return F.when(cid.isNotNull(), udf(F.coalesce(cid, F.lit(0)), *extra))
-
-
-def _u64_to_nullable(vals: np.ndarray, ok: np.ndarray) -> pd.Series:
-    if ok.all():
-        # fast path (the common case): zero-copy int64 series, no mask
-        return pd.Series(vals.view(np.int64))
-    out = pd.Series(vals.view(np.int64), dtype="Int64")
-    out[~ok] = pd.NA
-    return out
-
-
-@F.pandas_udf(LongType())
-def s2_lat_lon_to_cell_id(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
+@F.arrow_udf(LongType())
+def s2_lat_lon_to_cell_id(lat: pa.Array, lon: pa.Array, level: pa.Array) -> pa.Array:
     """Vectorized lat/lon degrees -> cell ID (s2cell/s2cell.py:625-674).
     Null when any input is null or level is outside 0..30."""
-    ok = (
-        lat.notna().to_numpy()
-        & lon.notna().to_numpy()
-        & level.notna().to_numpy()
-    )
-    lvl = level.fillna(0).to_numpy(dtype=np.int64)
-    ok &= (lvl >= 0) & (lvl <= 30)
-    ids = K.lat_lon_to_cell_id(
-        lat.fillna(0.0).to_numpy(dtype=np.float64),
-        lon.fillna(0.0).to_numpy(dtype=np.float64),
-        np.clip(lvl, 0, 30).astype(np.uint64),
-    )
-    return _u64_to_nullable(ids, ok)
+    la, ok_la = arrow_to_numpy(lat, np.float64)
+    lo, ok_lo = arrow_to_numpy(lon, np.float64)
+    lvl, ok = arrow_to_numpy(level, np.int64)
+    ok &= ok_la & ok_lo & (lvl >= 0) & (lvl <= 30)
+    ids = K.lat_lon_to_cell_id(la, lo, np.clip(lvl, 0, 30).astype(np.uint64))
+    return numpy_to_arrow(ids.view(np.int64), ok)
 
 
-_LATLON_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
-)
+def _cell_ids(cid: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(uint64 cell IDs, not-null, valid) of a LongType cell column."""
+    vals, notnull = arrow_to_numpy(cid, np.int64)
+    vals = vals.view(np.uint64)
+    return vals, notnull, notnull & K.cell_id_is_valid(vals)
 
 
-@F.pandas_udf(_LATLON_SCHEMA)
-def _s2_cell_id_to_lat_lon_raw(cid: pd.Series) -> pd.DataFrame:
+@F.arrow_udf(StructType([StructField("lat", DoubleType()), StructField("lon", DoubleType())]))
+def s2_cell_id_to_lat_lon(cid: pa.Array) -> pa.Array:
     """cell ID -> struct(lat, lon) of the cell center
-    (s2cell/s2cell.py:708-771); null lat/lon for invalid IDs."""
-    vals, notnull = _i64_to_u64(cid)
-    ok = notnull & K.cell_id_is_valid(vals)
+    (s2cell/s2cell.py:708-771); null lat/lon for invalid IDs, null
+    struct for a null ID."""
+    vals, notnull, ok = _cell_ids(cid)
     lat, lon = K.cell_id_to_lat_lon(np.where(ok, vals, np.uint64(1)))
-    return pd.DataFrame(
-        {
-            "lat": pd.array(np.where(ok, lat, np.nan), dtype="Float64"),
-            "lon": pd.array(np.where(ok, lon, np.nan), dtype="Float64"),
-        }
-    ).mask(~np.repeat(ok[:, None], 2, axis=1))
+    return pa.StructArray.from_arrays(
+        [numpy_to_arrow(lat, ok), numpy_to_arrow(lon, ok)],
+        names=["lat", "lon"],
+        mask=pa.array(~notnull),
+    )
 
 
-@F.pandas_udf(LongType())
-def s2_token_to_cell_id(tok: pd.Series) -> pd.Series:
+@F.arrow_udf(LongType())
+def s2_token_to_cell_id(tok: pa.Array) -> pa.Array:
     """Token -> cell ID (s2cell/s2cell.py:583-618); null for malformed
     tokens. (Prefer exprs.token_to_cell_id in filters — it pushes down.)"""
-    notnull = tok.notna().to_numpy()
-    arr = tok.fillna("").to_numpy(dtype="U17")
-    ids, well_formed = K.token_to_cell_id(arr)
-    return _u64_to_nullable(ids, notnull & well_formed)
+    toks, notnull = arrow_to_numpy(tok, "U17", fill="")
+    ids, well_formed = K.token_to_cell_id(toks)
+    return numpy_to_arrow(ids.view(np.int64), notnull & well_formed)
 
 
-@F.pandas_udf(StringType())
-def _s2_cell_id_to_token_raw(cid: pd.Series) -> pd.Series:
+@F.arrow_udf(StringType())
+def s2_cell_id_to_token(cid: pa.Array) -> pa.Array:
     """cell ID -> token (s2cell/s2cell.py:552-580). Native expr exists too;
     this kernel form is for parity testing and kernel-side pipelines."""
-    vals, notnull = _i64_to_u64(cid)
-    toks = K.cell_id_to_token(vals)
-    out = pd.Series(toks, dtype="object")
-    out[~notnull] = None
-    return out
+    vals, notnull, _ = _cell_ids(cid)
+    return numpy_to_arrow(K.cell_id_to_token(vals), notnull, pa.string())
 
 
-@F.pandas_udf(IntegerType())
-def _s2_cell_id_to_level_raw(cid: pd.Series) -> pd.Series:
+@F.arrow_udf(IntegerType())
+def s2_cell_id_to_level(cid: pa.Array) -> pa.Array:
     """cell ID -> level (s2cell/s2cell.py:916-950); null when invalid."""
-    vals, notnull = _i64_to_u64(cid)
-    ok = notnull & K.cell_id_is_valid(vals)
-    lvl = K.cell_id_to_level(vals)
-    out = pd.Series(lvl, dtype="Int32")
-    out[~ok] = pd.NA
-    return out
+    vals, _, ok = _cell_ids(cid)
+    return numpy_to_arrow(K.cell_id_to_level(vals), ok, pa.int32())
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def _s2_neighbor_cell_ids_raw(cid: pd.Series, edge: pd.Series, corner: pd.Series) -> pd.Series:
+@F.arrow_udf(ArrayType(LongType()))
+def s2_neighbor_cell_ids(cid: pa.Array, edge: pa.Array, corner: pa.Array) -> pa.Array:
     """Edge/corner neighbors at the cell's own level, in the reference's
     down/right/up/left interleaved order (s2cell/s2cell.py:1076-1143).
     Null for invalid cell IDs; cube-corner cells drop the off-face corner."""
-    vals, notnull = _i64_to_u64(cid)
-    ok = notnull & K.cell_id_is_valid(vals)
+    vals, _, ok = _cell_ids(cid)
     grid, valid, corner_flags = K.cell_id_to_neighbor_cell_ids_grid(
         np.where(ok, vals, np.uint64(1))
     )
-    signed = grid.view(np.int64)
-    edge_v = edge.fillna(True).to_numpy(dtype=bool)
-    corner_v = corner.fillna(False).to_numpy(dtype=bool)
-    out = []
-    for row in range(vals.shape[0]):
-        if not ok[row]:
-            out.append(None)
-            continue
-        keep = [
-            int(signed[row, col])
-            for col in range(8)
-            if valid[row, col]
-            and (
-                (edge_v[row] and not corner_flags[col])
-                or (corner_v[row] and corner_flags[col])
-            )
-        ]
-        out.append(keep)
-    return pd.Series(out, dtype="object")
-
-
-_FACE_IJ_SCHEMA = StructType(
-    [
-        StructField("face", IntegerType()),
-        StructField("i", LongType()),
-        StructField("j", LongType()),
-    ]
-)
-
-
-@F.pandas_udf(_FACE_IJ_SCHEMA)
-def _s2_cell_id_to_face_ij_raw(cid: pd.Series) -> pd.DataFrame:
-    """cell ID -> (face, i, j) leaf coords — public since reference v1.8.0
-    (s2cell/s2cell.py:345-426); null struct members for invalid IDs."""
-    vals, notnull = _i64_to_u64(cid)
-    ok = notnull & K.cell_id_is_valid(vals)
-    face, i, j = K.cell_id_to_face_ij(np.where(ok, vals, np.uint64(1)))
-    out = pd.DataFrame(
-        {
-            "face": pd.array(face.astype(np.int32), dtype="Int32"),
-            "i": pd.array(i.view(np.int64), dtype="Int64"),
-            "j": pd.array(j.view(np.int64), dtype="Int64"),
-        }
+    edge_v, _ = arrow_to_numpy(edge, bool, fill=True)
+    corner_v, _ = arrow_to_numpy(corner, bool, fill=False)
+    keep = (
+        ok[:, None]
+        & valid
+        & ((edge_v[:, None] & ~corner_flags) | (corner_v[:, None] & corner_flags))
     )
-    out.loc[~ok, :] = pd.NA
-    return out
+    offsets = np.zeros(len(vals) + 1, dtype=np.int32)
+    np.cumsum(keep.sum(axis=1), out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(grid[keep].view(np.int64)), mask=pa.array(~ok)
+    )
 
 
-@F.pandas_udf(LongType())
-def s2_face_ij_to_cell_id(face: pd.Series, i: pd.Series, j: pd.Series, level: pd.Series) -> pd.Series:
+@F.arrow_udf(
+    StructType(
+        [
+            StructField("face", IntegerType()),
+            StructField("i", LongType()),
+            StructField("j", LongType()),
+        ]
+    )
+)
+def s2_cell_id_to_face_ij(cid: pa.Array) -> pa.Array:
+    """cell ID -> (face, i, j) leaf coords — public since reference v1.8.0
+    (s2cell/s2cell.py:345-426); null struct members for invalid IDs, null
+    struct for a null ID."""
+    vals, notnull, ok = _cell_ids(cid)
+    face, i, j = K.cell_id_to_face_ij(np.where(ok, vals, np.uint64(1)))
+    return pa.StructArray.from_arrays(
+        [
+            numpy_to_arrow(face.astype(np.int32), ok),
+            numpy_to_arrow(i.view(np.int64), ok),
+            numpy_to_arrow(j.view(np.int64), ok),
+        ],
+        names=["face", "i", "j"],
+        mask=pa.array(~notnull),
+    )
+
+
+@F.arrow_udf(LongType())
+def s2_face_ij_to_cell_id(face: pa.Array, i: pa.Array, j: pa.Array, level: pa.Array) -> pa.Array:
     """(face, i, j, level) -> cell ID (s2cell/s2cell.py:429-502); null when
     any input is null or out of range."""
-    ok = (
-        face.notna().to_numpy() & i.notna().to_numpy()
-        & j.notna().to_numpy() & level.notna().to_numpy()
-    )
-    f = face.fillna(0).to_numpy(dtype=np.int64)
-    lvl = level.fillna(0).to_numpy(dtype=np.int64)
-    iv = i.fillna(0).to_numpy(dtype=np.int64)
-    jv = j.fillna(0).to_numpy(dtype=np.int64)
+    f, ok_f = arrow_to_numpy(face, np.int64)
+    iv, ok_i = arrow_to_numpy(i, np.int64)
+    jv, ok_j = arrow_to_numpy(j, np.int64)
+    lvl, ok = arrow_to_numpy(level, np.int64)
+    ok &= ok_f & ok_i & ok_j
     ok &= (f >= 0) & (f <= 5) & (lvl >= 0) & (lvl <= 30)
     # out-of-range leaf coords would wrap through the nibble masks into a
     # plausible-looking but meaningless ID — null them as documented
@@ -239,46 +183,14 @@ def s2_face_ij_to_cell_id(face: pd.Series, i: pd.Series, j: pd.Series, level: pd
         np.clip(jv, 0, K.MAX_SIZE - 1).view(np.uint64),
         np.clip(lvl, 0, 30).astype(np.uint64),
     )
-    return _u64_to_nullable(ids, ok)
+    return numpy_to_arrow(ids.view(np.int64), ok)
 
 
-@F.pandas_udf(BooleanType())
-def _s2_cell_id_is_valid_raw(cid: pd.Series) -> pd.Series:
+@F.arrow_udf(BooleanType())
+def s2_cell_id_is_valid(cid: pa.Array) -> pa.Array:
     """Kernel-parity validity (prefer the native expr in query plans)."""
-    vals, notnull = _i64_to_u64(cid)
-    out = pd.Series(K.cell_id_is_valid(vals), dtype="boolean")
-    out[~notnull] = pd.NA
-    return out
-
-
-
-
-# Null-guarded Column API for the cid-input kernels (see module docstring:
-# coalescing BEFORE the UDF keeps the Arrow batch int64; the raw UDFs stay
-# registered for spark.sql and fail loudly instead of corrupting).
-
-def s2_cell_id_to_lat_lon(cid) -> Column:
-    return _null_guard(cid, _s2_cell_id_to_lat_lon_raw)
-
-
-def s2_cell_id_to_token(cid) -> Column:
-    return _null_guard(cid, _s2_cell_id_to_token_raw)
-
-
-def s2_cell_id_to_level(cid) -> Column:
-    return _null_guard(cid, _s2_cell_id_to_level_raw)
-
-
-def s2_neighbor_cell_ids(cid, edge, corner) -> Column:
-    return _null_guard(cid, _s2_neighbor_cell_ids_raw, edge, corner)
-
-
-def s2_cell_id_to_face_ij(cid) -> Column:
-    return _null_guard(cid, _s2_cell_id_to_face_ij_raw)
-
-
-def s2_cell_id_is_valid(cid) -> Column:
-    return _null_guard(cid, _s2_cell_id_is_valid_raw)
+    vals, notnull, _ = _cell_ids(cid)
+    return numpy_to_arrow(K.cell_id_is_valid(vals), notnull)
 
 
 # -- convenience wrappers ----------------------------------------------------
@@ -288,8 +200,7 @@ def lat_lon_to_cell_id(lat: Column, lon: Column, level: Column | int = 30) -> Co
     return s2_lat_lon_to_cell_id(lat, lon, lvl.cast("int"))
 
 
-def cell_id_to_lat_lon(cid: Column) -> Column:
-    return s2_cell_id_to_lat_lon(cid)
+cell_id_to_lat_lon = s2_cell_id_to_lat_lon
 
 
 def neighbor_cell_ids(cid: Column, edge: bool = True, corner: bool = False) -> Column:
@@ -302,7 +213,7 @@ def register_sql_functions(spark) -> None:
     Two tiers:
 
     * the float-math kernels (encode/decode/neighbors/face-IJ) register
-      as the Arrow pandas UDFs — they genuinely need numpy;
+      as the Arrow UDFs — they genuinely need numpy;
     * every bit/token operation registers as a **SQL scalar function**
       (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``, Spark >= 4)
       whose body is RENDERED FROM the native Catalyst exprs in
@@ -314,9 +225,9 @@ def register_sql_functions(spark) -> None:
     from s2cell_spark.functions import exprs as X
 
     spark.udf.register("s2_lat_lon_to_cell_id", s2_lat_lon_to_cell_id)
-    spark.udf.register("s2_cell_id_to_lat_lon", _s2_cell_id_to_lat_lon_raw)
-    spark.udf.register("s2_neighbor_cell_ids", _s2_neighbor_cell_ids_raw)
-    spark.udf.register("s2_cell_id_to_face_ij", _s2_cell_id_to_face_ij_raw)
+    spark.udf.register("s2_cell_id_to_lat_lon", s2_cell_id_to_lat_lon)
+    spark.udf.register("s2_neighbor_cell_ids", s2_neighbor_cell_ids)
+    spark.udf.register("s2_cell_id_to_face_ij", s2_cell_id_to_face_ij)
     spark.udf.register("s2_face_ij_to_cell_id", s2_face_ij_to_cell_id)
 
     # Render each Catalyst expr to SQL text by analyzing a zero-row

@@ -16,7 +16,7 @@ Design rules (see SURVEY.md §4.3):
     Spark UDF layer nulls invalid rows (engine convention, SURVEY.md §1.2).
 
 No Spark imports here — this module is imported inside executors by the
-pandas-UDF layer (`s2cell_spark.functions`) and by driver-side helpers.
+Arrow UDF layer (`s2cell_spark.functions`) and by driver-side helpers.
 
 Reference parity citations use ``s2cell/s2cell.py:<line>`` into
 ``/root/reference`` so parity can be audited function-by-function.

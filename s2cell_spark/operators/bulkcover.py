@@ -6,13 +6,14 @@ handful of query regions, wrong for a user joining pages against
 10^5-10^6 admin/geofence polygons, where every covering BFS would
 serialize through the driver before the join starts. Here the polygons
 are a DataFrame and the covering runs as an executor-side
-``mapInPandas`` stage (the numpy coverer kernels are already
-batch-friendly), so covering cost scales out with polygon-table
-partitions and the driver never sees a vertex.
+``mapInArrow`` stage (the numpy coverer kernels are already
+batch-friendly; each batch's vertices are read as one numpy array and
+sliced into rings by the Arrow list offsets), so covering cost scales
+out with polygon-table partitions and the driver never sees a vertex.
 
 Pipeline (``bulk_pip_join``):
 
-1. polygons (region_id, rings) --mapInPandas--> mixed-level covering
+1. polygons (region_id, rings) --mapInArrow--> mixed-level covering
    rows (region_id, cell_id, level);
 2. native single-level normalization (containment.normalize_covering_df
    — explode/sequence, no driver);
@@ -21,8 +22,11 @@ Pipeline (``bulk_pip_join``):
    sets the same key degrades to one co-partitioning shuffle of the
    covering side only;
 4. exact even-odd ray-cast per candidate — NATIVE higher-order-function
-   expression over the region's vertex arrays (carried by the join; no
-   per-region UDF closures, no Python in the pages path): crossing
+   expression over the region's vertex arrays (carried by a join that
+   broadcasts the rings with the covering, or — for huge polygon sets —
+   only when the plan-stats gate ``plans.joins.broadcast_if_small``
+   finds them small; no per-region UDF closures, no Python in the pages
+   path): crossing
    PARITY, identical arithmetic term order to
    containment.point_in_polygon_udf and the DuckDB oracle.
 
@@ -36,7 +40,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -47,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from s2cell_spark import kernels as K
+from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 from s2cell_spark.operators import covering as COV
 
 RINGS_TYPE = "array<array<struct<lat:double,lon:double>>>"
@@ -78,31 +83,44 @@ def cover_polygons(
     parallelizes across the cluster instead of the driver.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rids, cells = [], []
-            for rid, rings in zip(pdf[id_col], pdf[rings_col]):
-                arrs = [
-                    np.array([(v["lat"], v["lon"]) for v in ring], dtype=np.float64)
-                    for ring in rings
-                ]
+            ids, _ = arrow_to_numpy(batch.column(id_col), np.int64)
+            for rid, rings in zip(ids, _polygon_rings(batch.column(rings_col))):
                 cov = COV.polygon_covering(
-                    arrs, max_level=max_level, min_emit_level=min_emit_level
+                    rings, max_level=max_level, min_emit_level=min_emit_level
                 )
                 rids.append(np.full(cov.shape, rid, dtype=np.int64))
                 cells.append(cov)
-            cell_arr = np.concatenate(cells) if cells else np.empty(0, np.uint64)
-            yield pd.DataFrame(
-                {
-                    "region_id": np.concatenate(rids) if rids else np.empty(0, np.int64),
-                    "cell_id": cell_arr.view(np.int64),
-                    "level": K.cell_id_to_level(cell_arr).astype(np.int32),
-                }
+            if not cells:
+                continue
+            cell_arr = np.concatenate(cells)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    numpy_to_arrow(np.concatenate(rids)),
+                    numpy_to_arrow(cell_arr.view(np.int64)),
+                    numpy_to_arrow(K.cell_id_to_level(cell_arr), type=pa.int32()),
+                ],
+                names=_COV_SCHEMA.names,
             )
 
-    return polygons.select(id_col, rings_col).mapInPandas(run, schema=_COV_SCHEMA)
+    return polygons.select(id_col, rings_col).mapInArrow(run, schema=_COV_SCHEMA)
+
+
+def _polygon_rings(rings: pa.ListArray) -> list[list[np.ndarray]]:
+    """Per polygon, its rings as (k, 2) float64 (lat, lon) arrays, sliced
+    out of the nested Arrow list by offsets (one numpy read per batch)."""
+    ring_off = rings.offsets.to_numpy()
+    vert_off = rings.values.offsets.to_numpy()
+    verts = rings.values.values
+    lat, _ = arrow_to_numpy(verts.field("lat"), np.float64)
+    lon, _ = arrow_to_numpy(verts.field("lon"), np.float64)
+    latlon = np.column_stack([lat, lon])
+    return [
+        [latlon[vert_off[r] : vert_off[r + 1]] for r in range(ring_off[p], ring_off[p + 1])]
+        for p in range(len(rings))
+    ]
 
 
 def pip_parity_expr(rings: Column, lat: Column, lon: Column) -> Column:
@@ -156,10 +174,14 @@ def bulk_pip_join(
     ``broadcast_covering``: True (default) for dim-sized polygon tables
     — the pages side never shuffles. For very large polygon sets pass
     False: the equi-join then shuffles BOTH sides on the covering key
-    (pages co-partition once; still no driver trip anywhere).
+    (pages co-partition once; still no driver trip anywhere), and the
+    rings side of the exact stage broadcasts only under the session's
+    broadcast threshold, so a huge polygon table is never force-shipped
+    to every executor.
     """
     from s2cell_spark.functions.exprs import cell_id_to_parent_cell_id
     from s2cell_spark.operators.containment import normalize_covering_df
+    from s2cell_spark.plans.joins import broadcast_if_small
 
     cov = normalize_covering_df(
         cover_polygons(polygons, max_level=max_level), level
@@ -170,7 +192,8 @@ def bulk_pip_join(
     cand = pages.join(cov, on=key == F.col("cov_cell"), how="inner").drop(
         "cov_cell"
     )
-    verts = F.broadcast(polygons.select("region_id", "rings"))
+    verts = polygons.select("region_id", "rings")
+    verts = F.broadcast(verts) if broadcast_covering else broadcast_if_small(verts)
     return (
         cand.join(verts, on="region_id", how="inner")
         .filter(pip_parity_expr(F.col("rings"), F.col("lat"), F.col("lon")))

@@ -21,7 +21,7 @@ property (SURVEY §1.1) gives a closed form in LEAF-INTERVAL space:
 3. each merged island decomposes into maximal aligned blocks by a greedy
    O(levels) walk — the unique minimal dyadic cover, which IS the
    normalized union. Islands are metadata-scale (a covering, not a
-   pages table), so the walk runs vectorized-per-batch in mapInPandas;
+   pages table), so the walk runs per Arrow batch in mapInArrow;
    rows stay distributed, nothing funnels through the driver.
 
 Minimality/uniqueness: dyadic blocks either nest or are disjoint, so the
@@ -36,12 +36,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from s2cell_spark import functions as S2F
+from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 
 _FACE_BLOCK = 1 << 60  # leaves per face = 4^30
 
@@ -104,22 +105,24 @@ def _walk_islands(islands: DataFrame, groups: list[str]) -> DataFrame:
         [islands.schema[g] for g in groups] + [StructField("cell_id", LongType(), False)]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
+    def walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows, ids = [], []
-            los = pdf["_lo"].to_numpy(np.int64)
-            his = pdf["_hi"].to_numpy(np.int64)
-            for i in range(len(pdf)):
+            los, _ = arrow_to_numpy(batch.column("_lo"), np.int64)
+            his, _ = arrow_to_numpy(batch.column("_hi"), np.int64)
+            for i in range(batch.num_rows):
                 cells = _decompose_island(int(los[i]), int(his[i]))
                 rows.extend([i] * len(cells))
                 ids.extend(cells)
-            out = pdf.iloc[rows][groups].copy() if groups else pd.DataFrame(index=range(len(ids)))
-            out["cell_id"] = np.array(ids, dtype=np.uint64).view(np.int64)
-            yield out
+            if not ids:
+                continue
+            out = batch.select(groups).take(np.array(rows, dtype=np.int64))
+            cell_ids = np.array(ids, dtype=np.uint64).view(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                out.columns + [numpy_to_arrow(cell_ids)], names=groups + ["cell_id"]
+            )
 
-    return islands.mapInPandas(walk, schema=schema)
+    return islands.mapInArrow(walk, schema=schema)
 
 
 def normalize_cell_union(

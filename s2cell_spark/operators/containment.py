@@ -9,7 +9,7 @@ equivalently ``parent(d, level(c)) == c``. Three join strategies:
    pages side, no shuffle of it (broadcast), Catalyst-native. Default.
 2. :func:`containment_join_range` — mixed-level coverings without
    expansion: broadcast the sorted ``[range_min, range_max]`` sortable
-   intervals and binary-search each Arrow batch (`mapInPandas` +
+   intervals and binary-search each Arrow batch (`mapInArrow` +
    np.searchsorted). Avoids the O(n·m) BroadcastNestedLoopJoin Spark would
    pick for a non-equi range condition.
 3. :func:`containment_join_salted` — strategy 1 plus explicit hot-cell
@@ -29,12 +29,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
+from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 from s2cell_spark.operators import covering as COV
 
 
@@ -226,26 +228,24 @@ def containment_join_range(
         list(pages.schema.fields) + [StructField("region_id", LongType(), False)]
     )
 
-    # null cells can't be contained anywhere; they are dropped INSIDE the
-    # Arrow stab (pandas mask per batch), NOT as a plan-level filter —
-    # a Filter on `cell_col` would be pushed through whatever projection
-    # stack produced it, and pushdown SUBSTITUTES aliases into the
-    # condition: through the native encode stack (functions/
-    # native_encode) that expansion is multiplicative and planning OOMs
-    # (the CLAUDE.md native-cell filter-pushdown trap). The in-batch drop
-    # also still guarantees int64 Arrow batches (a nullable long batch
-    # with actual nulls degrades to float64 and corrupts IDs over 2^53 —
-    # dropped rows never reach the searchsorted).
+    # Null cells can't be contained anywhere. They arrive in each Arrow
+    # batch as the validity bitmap and are masked out of the stab in
+    # numpy, NOT dropped by a plan-level filter: a Filter on `cell_col`
+    # would be pushed through whatever projection stack produced it, and
+    # pushdown SUBSTITUTES aliases into the condition — through the
+    # native encode stack (functions/native_encode) that expansion is
+    # multiplicative and planning OOMs (the CLAUDE.md native-cell
+    # filter-pushdown trap). The surviving IDs are read as int64 straight
+    # off the Arrow buffer, so a null never costs a neighbour its bits.
 
-    def stab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf[cell_col].isna().any():
-                pdf = pdf[pdf[cell_col].notna()]
-            if pdf.empty:
-                continue
-            cells = pdf[cell_col].to_numpy(np.int64).view(np.uint64)
-            sortable = (cells ^ np.uint64(1 << 63)).view(np.int64)
-            pos = np.searchsorted(lo_arr, sortable, side="right")
+    def stab(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cells, valid = arrow_to_numpy(batch.column(cell_col), np.int64)
+            sortable = (cells.view(np.uint64) ^ np.uint64(1 << 63)).view(np.int64)
+            # a null lane starts at position 0: nothing left of it to stab
+            pos = np.where(
+                valid, np.searchsorted(lo_arr, sortable, side="right"), 0
+            )
             out_rows = []
             out_rids = []
             w = 1
@@ -265,13 +265,11 @@ def containment_join_range(
                 w += 1
             if not out_rows:
                 continue
-            rows = np.concatenate(out_rows)
-            rids_out = np.concatenate(out_rids)
-            res = pdf.iloc[rows].copy()
-            res["region_id"] = rids_out
-            yield res
+            yield batch.take(np.concatenate(out_rows)).append_column(
+                "region_id", numpy_to_arrow(np.concatenate(out_rids))
+            )
 
-    return pages.mapInPandas(stab, schema=schema)
+    return pages.mapInArrow(stab, schema=schema)
 
 
 def filter_in_rect(
@@ -294,15 +292,15 @@ def point_in_polygon_udf(rings: list[np.ndarray]):
     across rings supports holes. Planar semantics (edges are straight in
     lat/lon) — documented engine semantic; polygons crossing the
     antimeridian must be pre-split by the caller. Returns a BooleanType
-    pandas UDF usable as ``df.filter(pip(F.col('lat'), F.col('lon')))``
+    Arrow UDF usable as ``df.filter(pip(F.col('lat'), F.col('lon')))``
     after covering-cell candidate pruning.
     """
     closed = [np.asarray(r, dtype=np.float64) for r in rings]
 
-    @F.pandas_udf("boolean")
-    def pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        y = lat.to_numpy(np.float64)
-        x = lon.to_numpy(np.float64)
+    @F.arrow_udf("boolean")
+    def pip(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        y, ok_y = arrow_to_numpy(lat, np.float64)
+        x, ok_x = arrow_to_numpy(lon, np.float64)
         inside = np.zeros(y.shape, dtype=bool)
         for ring in closed:
             ry, rx = ring[:, 0], ring[:, 1]
@@ -315,6 +313,7 @@ def point_in_polygon_udf(rings: list[np.ndarray]):
                     x < (x2 - x1) * (y - y1) / (y2 - y1) + x1
                 )
                 inside ^= cond
-        return pd.Series(inside)
+        # a null coordinate is never inside
+        return numpy_to_arrow(inside & ok_y & ok_x)
 
     return pip

@@ -1,11 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads ride as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as Arrow-
-batched ``mapInPandas`` stages. The decode step itself is STUBBED in this
-container (no image/audio libs — clearly marked below); everything
-Spark-side — schema, batch shape, partitioning, UDF signatures, the
-deterministic fallback featurizer — is real and tested.
+struct; decode / feature-extract / resize / frame-sample run as
+``mapInArrow`` stages over Arrow record batches. The decode step itself
+is STUBBED in this container (no image/audio libs — clearly marked
+below); everything Spark-side — schema, batch shape, partitioning, UDF
+signatures, the deterministic fallback featurizer — is real and tested.
 
 Pattern at 100 TB: payload tables are wide; always project (key, media,
 meta) only, repartition by size-balanced key ranges before the Python
@@ -18,7 +18,8 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -30,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from s2cell_spark.functions.udfs import numpy_to_arrow
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -112,7 +115,7 @@ def deterministic_feature(payload: bytes, dim: int = 16) -> np.ndarray:
 
 
 def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
-    """(doc_id, media_type, n_bytes, feature[dim]) via mapInPandas.
+    """(doc_id, media_type, n_bytes, feature[dim]) via mapInArrow.
 
     Decoder dispatch happens once per executor (capability probe), not
     per row; the fallback featurizer is batch-vectorized (~7x faster
@@ -128,12 +131,14 @@ def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         use_real = media_decoder_available()
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            payloads = [bytes(p) for p in pdf["media"]]
+            media = batch.column("media")
+            payloads = media.to_pylist()
+            media_types = pc.struct_field(batch.column("meta"), "media_type")
             feats = None
             mode = "stub"
             if use_real:
@@ -144,8 +149,8 @@ def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
                 try:
                     feats = np.stack(
                         [
-                            decode_media(p, m["media_type"] if m is not None else "unknown")
-                            for p, m in zip(payloads, pdf["meta"])
+                            decode_media(p, m or "unknown")
+                            for p, m in zip(payloads, media_types.to_pylist())
                         ]
                     )
                     mode = "real"
@@ -153,17 +158,22 @@ def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
                     feats = None
             if feats is None:
                 feats = deterministic_features_batch(payloads, dim)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_type": [m["media_type"] for m in pdf["meta"]],
-                    "n_bytes": [len(p) for p in payloads],
-                    "decoded": mode,
-                    "feature": feats.tolist(),
-                }
+            n, width = feats.shape
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").cast(pa.int64()),
+                    media_types,
+                    pc.binary_length(media).cast(pa.int64()),
+                    pa.array([mode] * n, type=pa.string()),
+                    pa.ListArray.from_arrays(
+                        np.arange(0, n * width + 1, width, dtype=np.int32),
+                        numpy_to_arrow(feats.ravel()),
+                    ),
+                ],
+                names=schema.names,
             )
 
-    return media_df.select("doc_id", "media", "meta").mapInPandas(run, schema)
+    return media_df.select("doc_id", "media", "meta").mapInArrow(run, schema)
 
 
 def frame_sample_plan(media_df: DataFrame, every_ms: int = 1000) -> DataFrame:

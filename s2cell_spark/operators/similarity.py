@@ -2,8 +2,8 @@
 
 * :func:`cosine_topk_bruteforce` — exact top-k cosine neighbors for a
   (small, broadcast) query set against the full embeddings table. The dot
-  products run in one Arrow-batched pandas UDF as a single numpy matmul
-  per batch (queries broadcast in the closure) — the right baseline and
+  products run in one ``mapInArrow`` stage as a single numpy matmul per
+  batch (queries broadcast in the closure) — the right baseline and
   exactly what the oracle can check.
 * :func:`cosine_near_dup_pairs` — all pairs above a cosine threshold via
   sign-random-projection LSH bucketing (the scale path: equi-join on
@@ -25,14 +25,22 @@ from __future__ import annotations
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 
 
-def _to_matrix(col: pd.Series) -> np.ndarray:
-    return np.vstack([np.asarray(v, dtype=np.float64) for v in col])
+def _to_matrix(vecs: pa.ListArray) -> np.ndarray:
+    """(n, dim) float64 matrix of an Arrow list-of-float column; every
+    vector must have the same length."""
+    lens = np.diff(vecs.offsets.to_numpy())
+    if lens.size and (lens != lens[0]).any():
+        raise ValueError("embedding vectors differ in length within a batch")
+    flat, _ = arrow_to_numpy(vecs.flatten(), np.float64)
+    return flat.reshape(len(vecs), int(lens[0]) if lens.size else 0)
 
 
 def cosine_topk_bruteforce(
@@ -62,32 +70,28 @@ def cosine_topk_bruteforce(
     )
 
     def score(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            mat = _to_matrix(pdf[vec_col])
+            mat = _to_matrix(batch.column(vec_col))
             mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
             sims = q_norm @ mat.T  # (nq, batch)
-            nq, nb = sims.shape
-            ids = pdf[id_col].to_numpy(np.int64)
-            res = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, nb),
-                    "vec_id": np.tile(ids, nq),
-                    "cosine": sims.ravel(),
-                }
+            ids, _ = arrow_to_numpy(batch.column(id_col), np.int64)
+            qs, vs, cs = [], [], []
+            for qid, row in zip(q_ids, sims):
+                keep = ids != qid if exclude_self else np.ones(ids.shape, bool)
+                # per-batch top-k by (-cosine, vec_id), NaN last — bounds
+                # shuffle size
+                top = np.lexsort((ids[keep], -row[keep]))[:k]
+                qs.append(np.full(top.shape, qid))
+                vs.append(ids[keep][top])
+                cs.append(row[keep][top])
+            yield pa.RecordBatch.from_arrays(
+                [numpy_to_arrow(np.concatenate(c)) for c in (qs, vs, cs)],
+                names=out_schema.names,
             )
-            if exclude_self:
-                res = res[res["query_id"] != res["vec_id"]]
-            # keep only the per-batch top-k per query — bounds shuffle size
-            res = (
-                res.sort_values(["query_id", "cosine", "vec_id"], ascending=[True, False, True])
-                .groupby("query_id")
-                .head(k)
-            )
-            yield res
 
-    partial = embeddings.select(id_col, vec_col).mapInPandas(score, out_schema)
+    partial = embeddings.select(id_col, vec_col).mapInArrow(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -122,15 +126,15 @@ def _seq_dot(planes: np.ndarray, mat: np.ndarray) -> np.ndarray:
 
 
 def srp_bucket_udf(dim: int, n_bits: int = 16, seed: int = 23):
-    """Sign-random-projection bucket id (n_bits-bit) pandas UDF."""
+    """Sign-random-projection bucket id (n_bits-bit) Arrow UDF."""
     planes = srp_planes(dim, n_bits, seed)
 
-    @F.pandas_udf(LongType())
-    def bucket(vec: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def bucket(vec: pa.Array) -> pa.Array:
         mat = _to_matrix(vec)
         signs = _seq_dot(planes, mat) > 0  # (n_bits, n)
         weights = (1 << np.arange(n_bits, dtype=np.int64))[:, None]
-        return pd.Series((signs * weights).sum(axis=0).astype(np.int64))
+        return numpy_to_arrow((signs * weights).sum(axis=0).astype(np.int64))
 
     return bucket
 
@@ -218,15 +222,15 @@ def ivf_probes(
 
 
 def ivf_assign_udf(cents: np.ndarray):
-    """Nearest-centroid assignment pandas UDF (shared by the one-shot
+    """Nearest-centroid assignment Arrow UDF (shared by the one-shot
     query path and the bucketed index writer)."""
 
-    @F.pandas_udf(LongType())
-    def assign(vec: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def assign(vec: pa.Array) -> pa.Array:
         mat = _to_matrix(vec)
         # unnormalized dot: argmax is scale-invariant (|v| > 0), and the
         # sequential accumulation order matches the oracle's SQL fold
-        return pd.Series(np.argmax(_seq_dot(cents, mat), axis=0).astype(np.int64))
+        return numpy_to_arrow(np.argmax(_seq_dot(cents, mat), axis=0).astype(np.int64))
 
     return assign
 

@@ -19,9 +19,9 @@ Design, kept parity-safe and vectorized:
 * the build side aggregates per-partition partial bitmaps with the native
   ``bit_or`` of ``shiftleft(1L, pos % 64)`` grouped by word index — only
   ``m/64`` longs ever reach the driver, independent of dim row count;
-* the probe is ONE Arrow-batched pandas UDF doing pure numpy bitset
-  lookups against an ``sc.broadcast`` word array (ships once per
-  executor, never per task).
+* the probe is ONE Arrow UDF doing pure numpy bitset lookups against
+  an ``sc.broadcast`` word array (ships once per executor, never per
+  task).
 
 Result rows are identical to the plain join (the join itself removes the
 bloom's false positives) — asserted in tests, and the oracle for the
@@ -31,9 +31,11 @@ driver query is the plain SQL join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 
 
 def _positions(key_col: str, num_bits: int, num_hashes: int) -> list:
@@ -103,15 +105,15 @@ def bloom_pruned_join(
     bc = fact.sparkSession.sparkContext.broadcast(words)
     shift_mask = np.uint64(1)
 
-    @F.pandas_udf("boolean")
-    def might_contain(*pos_cols: pd.Series) -> pd.Series:
+    @F.arrow_udf("boolean")
+    def might_contain(*pos_cols: pa.Array) -> pa.Array:
         w = bc.value
         out = None
         for p in pos_cols:
-            pn = p.to_numpy(np.int64)
+            pn, _ = arrow_to_numpy(p, np.int64)
             hit = ((w[pn >> 6] >> (pn & 63).astype(np.uint64)) & shift_mask).astype(bool)
             out = hit if out is None else out & hit
-        return pd.Series(out)
+        return numpy_to_arrow(out)
 
     # The probe IS deterministic, but advertised nondeterministic on
     # purpose: InferFiltersFromConstraints would otherwise copy the

@@ -93,7 +93,7 @@ def with_cell_id(pages: DataFrame, level: int = 30) -> DataFrame:
     """Add ``cell_id`` (leaf by default), ``token`` and the order-preserving
     ``cell_id_sortable`` used for range partitioning / range joins.
 
-    The encode here is DELIBERATELY the pandas-UDF kernel arm, not the
+    The encode here is DELIBERATELY the Arrow UDF kernel arm, not the
     (1.4x faster, bit-identical) native Catalyst arm
     (functions/native_encode): Catalyst's alias substitution turns any
     INNER equi-join keyed on a native-cell derivation into a
@@ -164,9 +164,12 @@ def write_pages_partitioned(
     """Range-partition on the sortable cell ID and write parquet.
 
     Hilbert locality (SURVEY.md §1.1) means this clusters geographically:
-    parquet min/max stats on ``cell_id_sortable`` then prune whole files
-    for any cell-range predicate. ``sortWithinPartitions`` gives
-    deterministic output and tight row-group stats.
+    each file holds one contiguous ``cell_id_sortable`` range, and
+    ``sortWithinPartitions`` gives deterministic output and tight
+    row-group min/max stats on that column. Those stats prune only for a
+    scan predicate on ``cell_id_sortable``; the containment joins reach
+    pages through ``parent(cell_id, L)`` and emit no such predicate, so
+    today every file is still read.
     """
     (
         pages.repartitionByRange(num_partitions, "cell_id_sortable")

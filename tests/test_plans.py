@@ -494,13 +494,13 @@ def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, a
 
 def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry):
     """The bulk-PIP pipeline's scale contract: the polygon coverings are
-    an EXECUTOR stage (MapInPandas over the polygons frame, below a
+    an EXECUTOR stage (MapInArrow over the polygons frame, below a
     broadcast — never a per-polygon driver loop), the exact ray-cast is
     a native higher-order-function filter (no second Python node — the
     only ArrowEvalPython is the pages S2-encode kernel), and the pages
     side joins by broadcast with no sort-merge anywhere."""
     plan = _plan(entry._q_pip_regions_bulk(spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1  # the pages S2-encode kernel
     assert "BroadcastHashJoin" in plan
@@ -511,3 +511,47 @@ def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, en
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "doc_id" not in line and "url" not in line
+
+
+def test_bulk_pip_rings_broadcast_is_size_gated(spark, entry):
+    """The exact stage's rings side broadcasts only through the plan-stats
+    gate: on the large-polygon path (broadcast_covering=False) with a
+    1-byte broadcast threshold nothing in the plan is broadcast, while
+    the default path still broadcasts both the covering and the rings."""
+    from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
+
+    polys = spark.createDataFrame(
+        [(rid, rings) for rid, rings in entry._bulk_polygons(8).items()],
+        schema=f"region_id long, rings {RINGS_TYPE}",
+    )
+    pages = entry._pages_with_cells(spark, SF)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        large = _plan(bulk_pip_join(pages, polys, broadcast_covering=False))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in large
+    assert "NestedLoop" not in large
+    default = _plan(bulk_pip_join(pages, polys))
+    assert default.count("BroadcastExchange") == 2
+
+
+def test_one_python_boundary_style_outside_streaming():
+    """Every Python stage outside streaming/ crosses the JVM boundary as
+    Arrow (arrow_udf / mapInArrow). A pandas UDF or mapInPandas stage
+    would bring back the pandas null/dtype conversion, under which a
+    null in an int64 batch turns the whole batch float64 and corrupts
+    cell IDs above 2^53."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "s2cell_spark"
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if "streaming" not in path.relative_to(root).parts
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "pandas_udf" in line or "mapInPandas" in line
+    ]
+    assert hits == []
