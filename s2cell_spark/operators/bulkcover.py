@@ -7,9 +7,8 @@ handful of query regions, wrong for a user joining pages against
 serialize through the driver before the join starts. Here the polygons
 are a DataFrame and the covering runs as an executor-side
 ``mapInArrow`` stage (the numpy coverer kernels are already
-batch-friendly; each batch's vertices are read as one numpy array and
-sliced into rings by the Arrow list offsets), so covering cost scales
-out with polygon-table partitions and the driver never sees a vertex.
+batch-friendly), so covering cost scales out with polygon-table
+partitions and the driver never sees a vertex.
 
 Pipeline (``bulk_pip_join``):
 
@@ -22,11 +21,8 @@ Pipeline (``bulk_pip_join``):
    sets the same key degrades to one co-partitioning shuffle of the
    covering side only;
 4. exact even-odd ray-cast per candidate — NATIVE higher-order-function
-   expression over the region's vertex arrays (carried by a join that
-   broadcasts the rings with the covering, or — for huge polygon sets —
-   only when the plan-stats gate ``plans.joins.broadcast_if_small``
-   finds them small; no per-region UDF closures, no Python in the pages
-   path): crossing
+   expression over the region's vertex arrays (carried by the join; no
+   per-region UDF closures, no Python in the pages path): crossing
    PARITY, identical arithmetic term order to
    containment.point_in_polygon_udf and the DuckDB oracle.
 
