@@ -21,9 +21,10 @@ from collections.abc import Callable
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s2cell_spark.operators.containment import exact_rect_cond, rect_regions
 from s2cell_spark.sources.pages import LAT_SQL, LON_SQL, load_pages, pages_cte_duckdb, with_cell_id
 
 # ---------------------------------------------------------------------------
@@ -156,13 +157,8 @@ def _pages_with_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_cell_id(load_pages(spark, sf_dir))
 
 
-def _box_regions(max_level: int = 10, min_emit_level: int = 6):
-    from s2cell_spark.operators.covering import latlng_rect_covering
-
-    return {
-        rid: latlng_rect_covering(a, b, c, d, max_level=max_level, min_emit_level=min_emit_level)
-        for rid, a, b, c, d in PIP_BOXES
-    }
+def _box_regions():
+    return rect_regions(PIP_BOXES)
 
 
 def _bulk_polygons(n: int = 120) -> "dict[int, list[list[tuple[float, float]]]]":
@@ -204,23 +200,8 @@ def _bulk_polygons(n: int = 120) -> "dict[int, list[list[tuple[float, float]]]]"
     return polys
 
 
-def _exact_box_cond() -> Column:
-    """The exact-PIP predicate for the rectangle regions as a Column —
-    region-specific bounds in one codegen OR-chain (usable as a filter or,
-    null-safely, as a tag flag after a left containment join)."""
-    cond = F.lit(False)
-    for rid, a, b, c, d in PIP_BOXES:
-        cond = cond | (
-            (F.col("region_id") == rid)
-            & (F.col("lat") >= a) & (F.col("lat") <= b)
-            & (F.col("lon") >= c) & (F.col("lon") <= d)
-        )
-    return cond
-
-
 def _exact_box_filter(df: DataFrame) -> DataFrame:
-    """Exact PIP stage for the rectangle regions (see _exact_box_cond)."""
-    return df.filter(_exact_box_cond())
+    return df.filter(exact_rect_cond(PIP_BOXES))
 
 
 # ---------------------------------------------------------------------------
@@ -1143,9 +1124,8 @@ def _q_cell_distinct_hll_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified query bound-checks against exact counts. Deliberately NOT
     in the queries() registry (sketch estimates are engine-internal; no
     SQL oracle can reproduce them, so a registry entry is a permanent
-    red driver cell — round-4 verdict) — exercised instead by the bench
-    (bench.py HEADLINE) and a pytest rows floor
-    (tests/test_queries_oracle.py)."""
+    red driver cell — round-4 verdict) — exercised instead by a pytest
+    rows floor (``ROWS_ONLY`` in tests/test_queries_oracle.py)."""
     from s2cell_spark.operators.tiling import cell_distinct_urls_hll
 
     out = cell_distinct_urls_hll(_pages_with_cells(spark, sf_dir), 8, 4)
@@ -2079,11 +2059,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rollup) is deliberately NOT registered: sketch estimates have no
         # SQL oracle, so a registry entry can only ever be a red
         # rows-only cell in the driver artifact (round-4 verdict "what's
-        # wrong" #1). The operator stays first-class — benched every
-        # round (bench.py HEADLINE) and floor-tested
-        # (tests/test_queries_oracle.py) — and its sketch expression is
-        # value-certified by cell_distinct_urls_hll above, which
-        # bound-checks the IDENTICAL expression against exact counts.
+        # wrong" #1). The operator stays first-class — floor-tested
+        # (ROWS_ONLY in tests/test_queries_oracle.py) — and its sketch
+        # expression is value-certified by cell_distinct_urls_hll above,
+        # which bound-checks the IDENTICAL expression against exact counts.
     }
 
 

@@ -30,7 +30,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -272,17 +272,32 @@ def containment_join_range(
     return pages.mapInArrow(stab, schema=schema)
 
 
-def filter_in_rect(
-    df: DataFrame, lat_lo: float, lat_hi: float, lon_lo: float, lon_hi: float
-) -> DataFrame:
-    """Exact rectangle test (closed bounds) — the PIP 'exact' stage for
-    rectangular regions; native so it stays in codegen."""
-    return df.filter(
-        (F.col("lat") >= lat_lo)
-        & (F.col("lat") <= lat_hi)
-        & (F.col("lon") >= lon_lo)
-        & (F.col("lon") <= lon_hi)
-    )
+def rect_regions(
+    boxes, max_level: int = 10, min_emit_level: int = 6
+) -> dict[int, np.ndarray]:
+    """region_id -> covering cells for `boxes`, a sequence of closed
+    rectangles ``(region_id, lat_lo, lat_hi, lon_lo, lon_hi)``; the
+    `regions` argument of the containment joins. The default
+    `min_emit_level` bounds the level-10 normalization's expansion."""
+    return {
+        rid: COV.latlng_rect_covering(a, b, c, d, max_level=max_level, min_emit_level=min_emit_level)
+        for rid, a, b, c, d in boxes
+    }
+
+
+def exact_rect_cond(boxes) -> Column:
+    """The exact PIP test for the rectangles of :func:`rect_regions` as one
+    Column: (lat, lon) lies in the closed box of the row's own
+    ``region_id``. Native, so it stays in codegen; usable as a filter or,
+    null-safely, as a tag flag after a left containment join."""
+    cond = F.lit(False)
+    for rid, a, b, c, d in boxes:
+        cond = cond | (
+            (F.col("region_id") == rid)
+            & (F.col("lat") >= a) & (F.col("lat") <= b)
+            & (F.col("lon") >= c) & (F.col("lon") <= d)
+        )
+    return cond
 
 
 def point_in_polygon_udf(rings: list[np.ndarray]):

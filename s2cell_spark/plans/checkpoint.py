@@ -4,8 +4,8 @@ checkpoint with per-partition lineage + metrics").
 
 Each stage writes ``{root}/{stage}/data`` (parquet) plus
 ``{root}/{stage}/_LINEAGE.json`` recording: stage name, input stage names,
-row count, per-partition row counts, schema, wall time, and a canonical-
-plan fingerprint. A stage is complete iff its manifest exists, row counts
+row count, per-partition row counts, schema, wall time, and a plan
+fingerprint. A stage is complete iff its manifest exists, row counts
 match the footer, AND the fingerprint of the rebuilt (lazy) plan matches
 the recorded one — resume re-reads the snapshot instead of recomputing,
 while a stage whose logic changed recomputes rather than resuming stale
@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 import time
 from pathlib import Path
 from typing import Callable
@@ -39,13 +40,15 @@ from pyspark.sql import functions as F
 
 
 def plan_fingerprint(df: DataFrame) -> str | None:
-    """sha256 of the CANONICALIZED optimized plan (expression IDs
-    normalized, so the hash is stable across sessions). None when the
+    """sha256 of the optimized plan string with its expression IDs
+    (``#123``) stripped, so the same build logic hashes the same in a new
+    JVM. (The canonicalized plan is no good here: it orders commutative
+    AND/OR operands differently from one JVM to the next.) None when the
     backend doesn't expose the plan — callers treat that as 'cannot
     verify' and skip the fingerprint check rather than failing."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-        return hashlib.sha256(plan.encode()).hexdigest()[:16]
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return hashlib.sha256(re.sub(r"#\d+", "", plan).encode()).hexdigest()[:16]
     except Exception:
         return None
 

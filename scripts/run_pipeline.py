@@ -25,7 +25,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+# (region_id, lat_lo, lat_hi, lon_lo, lon_hi), closed bounds
+PIP_BOXES = [
+    (0, 39.7, 41.7, -75.0, -73.0),   # around NYC
+    (1, 50.5, 52.5, -1.1, 0.9),      # around London
+    (2, 34.7, 36.7, 138.7, 140.7),   # around Tokyo
+    (3, -10.0, 10.0, 0.0, 20.0),     # equatorial Africa slab
+    (4, -40.0, -20.0, 110.0, 155.0), # Australia-ish
+    (5, 55.0, 75.0, -160.0, -120.0), # Alaska/arctic
+]
 
 
 def main() -> None:
@@ -36,9 +45,11 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=64)
     args = ap.parse_args()
 
-    import __spark_entry__ as E
-    from s2cell_spark import functions as S2F
-    from s2cell_spark.operators.containment import containment_join_equi
+    from s2cell_spark.operators.containment import (
+        containment_join_equi,
+        exact_rect_cond,
+        rect_regions,
+    )
     from s2cell_spark.operators.tiling import tile_heatmap
     from s2cell_spark.plans.checkpoint import CheckpointedPipeline
     from s2cell_spark.sources.pages import load_pages, with_cell_id
@@ -63,12 +74,12 @@ def main() -> None:
         sort_cols=("cell_id_sortable", "url"),
     )
 
-    regions = E._box_regions()
+    regions = rect_regions(PIP_BOXES)
     pip = pipe.stage(
         "pip",
-        lambda: E._exact_box_filter(
-            containment_join_equi(pipe.read("encode"), spark, regions, level=10)
-        ).select("region_id", "doc_id", "url", "cell_id", "lat", "lon"),
+        lambda: containment_join_equi(pipe.read("encode"), spark, regions, level=10)
+        .filter(exact_rect_cond(PIP_BOXES))
+        .select("region_id", "doc_id", "url", "cell_id", "lat", "lon"),
         inputs=("encode",),
     )
 

@@ -77,7 +77,7 @@ def spark():
         # HotSpot won't JIT generated methods >8000 bytecodes while Spark
         # only falls back at 65535 — between the two a fused stage runs
         # interpreted (or worse, deopt-OOMs a 4g test JVM on the native
-        # encode stack). Same setting as bench.make_spark; CLAUDE.md trap.
+        # encode stack). Same setting as perfbench/session.py; CLAUDE.md trap.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.driver.memory", "8g")  # native-encode fused stages
         # intermittently deopt-OOM a 4g JVM (JIT scalar-replacement

@@ -337,15 +337,6 @@ def test_interval_join_is_equi_never_nested_loop(spark, entry):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_bench_headline_covers_every_query(entry):
-    """A new queries() entry must never silently drop out of the bench."""
-    import bench
-
-    qs = entry.queries()
-    names = bench.headline_names(qs)
-    assert set(names) == set(qs) and len(names) == len(qs)
-
-
 def test_cc_pipeline_is_fused_single_scan(spark, entry):
     """The pipeline's gates are bare exprs in ONE scan: no join of derived
     tables anywhere in the plan, exactly one parquet scan, and the only
@@ -444,52 +435,41 @@ def test_spatial_clusters_adjacency_is_equi_join(spark, entry):
     )
 
 
-@pytest.mark.parametrize("arm", ["native", "arrow"])
-def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, arm):
-    """The north-rule bench job's "pages/sec" honesty pin (round 4,
-    BENCH/MICRO.md): ONE pages scan with NOTHING pushed into it (outer-
+def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, monkeypatch):
+    """The tag-rollup throughput job's "pages/sec" honesty pin (round 4,
+    BENCH/MICRO.md), on the plan the gated perfbench `tag_rollup`
+    workload runs: ONE pages scan with NOTHING pushed into it (outer-
     join tag semantics make the rect predicate un-pushable, so every page
     is S2-encoded), one LEFT BroadcastHashJoin against the covering dim,
     and a partial+final rollup — no SortMergeJoin, no pages-side
-    exchange before the aggregate. Pinned for BOTH encode arms: the r5
-    default `native` arm must additionally have ZERO Python nodes (its
-    whole point — rows never leave the JVM)."""
-    import bench
-    from pyspark.sql import functions as F
+    exchange before the aggregate, and ZERO Python nodes (the native
+    encode's whole point — rows never leave the JVM)."""
+    from pathlib import Path
 
-    from s2cell_spark import functions as S2F
-    from s2cell_spark.functions.native_encode import (
-        with_cell_id as native_with_cell_id,
-    )
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent / "perfbench"))
+    import tracing
+    import workloads
+
     from s2cell_spark.operators.containment import normalized_coverings_df
     from s2cell_spark.sources.pages import load_pages
 
-    # materialize literal lat/lon columns like the bench input table
-    path = str(tmp_path / f"pages_{arm}")
+    # materialize literal lat/lon columns like the benchmark input table
+    path = str(tmp_path / "pages")
     load_pages(spark, SF).write.parquet(path)
-    if arm == "native":
-        pages = native_with_cell_id(
-            spark.read.parquet(path).select("lat", "lon"), level=30
-        )
-    else:
-        # the UDF arm, exactly as bench._make_throughput_job builds it
-        pages = spark.read.parquet(path).withColumn(
-            "cell_id", S2F.lat_lon_to_cell_id(F.col("lat"), F.col("lon"), 30)
-        )
-    cov_df = normalized_coverings_df(spark, entry._box_regions(), 10)
-    plan = _plan(bench.throughput_result_df(spark, pages, cov_df))
+    pages = spark.read.parquet(path).select("lat", "lon")
+    cov = normalized_coverings_df(spark, entry._box_regions(), 10)
+    df = workloads._tag_rollup_plans(tracing.Tracer(False), pages, cov, entry.PIP_BOXES)[3]
+    plan = _plan(df)
     scans = [ln for ln in plan.splitlines() if "Scan parquet" in ln]
     assert len(scans) == 1
     assert "DataFilters: []" in scans[0]  # nothing pushed: every page scans
     assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
     assert "SortMergeJoin" not in plan
-    if arm == "native":
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    else:
-        # the UDF arm must really contain its one encode stage
-        assert plan.count("ArrowEvalPython") == 1
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # rollup is partial+final around a single hash exchange of cell keys
     assert plan.count("HashAggregate") >= 2
+    row = df.collect()[0]
+    assert (row["p"], row["m"]) == (500, 87)
 
 
 def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry):
@@ -553,5 +533,24 @@ def test_one_python_boundary_style_outside_streaming():
         if "streaming" not in path.relative_to(root).parts
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if "pandas_udf" in line or "mapInPandas" in line
+    ]
+    assert hits == []
+
+
+def test_library_and_scripts_never_import_test_driver_or_bench():
+    """The library and the production entrypoint stand alone: nothing
+    under s2cell_spark/ or scripts/ imports the test driver
+    (__spark_entry__) or a benchmark harness module."""
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pat = re.compile(r"^\s*(import|from)\s+(__spark_entry__|bench)\b")
+    hits = [
+        f"{path.relative_to(repo)}:{n}"
+        for sub in ("s2cell_spark", "scripts")
+        for path in sorted((repo / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pat.match(line)
     ]
     assert hits == []
