@@ -272,15 +272,14 @@ def containment_join_range(
     return pages.mapInArrow(stab, schema=schema)
 
 
-def rect_regions(
-    boxes, max_level: int = 10, min_emit_level: int = 6
-) -> dict[int, np.ndarray]:
+def rect_regions(boxes) -> dict[int, np.ndarray]:
     """region_id -> covering cells for `boxes`, a sequence of closed
     rectangles ``(region_id, lat_lo, lat_hi, lon_lo, lon_hi)``; the
-    `regions` argument of the containment joins. The default
-    `min_emit_level` bounds the level-10 normalization's expansion."""
+    `regions` argument of the containment joins at ``level=10``, which
+    must match the covering's max level. Emitting no cell coarser than
+    level 6 bounds the level-10 normalization's expansion."""
     return {
-        rid: COV.latlng_rect_covering(a, b, c, d, max_level=max_level, min_emit_level=min_emit_level)
+        rid: COV.latlng_rect_covering(a, b, c, d, max_level=10, min_emit_level=6)
         for rid, a, b, c, d in boxes
     }
 
