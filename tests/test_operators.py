@@ -1329,6 +1329,29 @@ def test_connected_components_vs_union_find(spark):
         assert got == uf_labels(edges, nodes)
 
 
+def test_connected_components_converges_within_max_rounds(spark):
+    """Disjoint 8-cliques contract to stars in one round, and the second
+    round reproduces them: convergence is observable after 2 rounds, so
+    ``max_rounds=2`` must suffice. Checking convergence only every other
+    round needs a third round to see the fixed point and raised here."""
+    from s2cell_spark.operators.components import connected_components
+
+    cliques = [
+        (base + i, base + j)
+        for base in (0, 50, 100)
+        for i in range(8)
+        for j in range(i + 1, 8)
+    ]
+    pdf = pd.DataFrame(cliques, columns=["src", "dst"])
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(
+            spark.createDataFrame(pdf), max_rounds=2
+        ).collect()
+    }
+    assert got == {base + i: base for base in (0, 50, 100) for i in range(8)}
+
+
 def test_streaming_radius_alerts_match_batch(spark, tmp_path):
     """Stream-static within-radius join == the batch within_radius_join
     on the same input, row-for-row (circle_id, url, dist_fp)."""

@@ -435,6 +435,46 @@ def test_spatial_clusters_adjacency_is_equi_join(spark, entry):
     )
 
 
+def test_components_one_observed_checkpoint_per_star_round(spark, monkeypatch):
+    """Star rounds cost rounds, not actions: each round ends in ONE
+    action, its localCheckpoint, whose plan carries the convergence
+    observation (CollectMetrics) — no separate fingerprint collect. Every
+    star join in the executed (AQE final) plan is a broadcast."""
+    import pandas as pd
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from s2cell_spark.operators.components import connected_components
+
+    plans, collects = [], []
+    checkpoint, collect = DataFrame.localCheckpoint, DataFrame.collect
+
+    def recording_checkpoint(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(_plan(self))
+        return out
+
+    def counting_collect(self):
+        collects.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    path = pd.DataFrame([(i, i + 1) for i in range(1000, 1200)], columns=["src", "dst"])
+    connected_components(spark.createDataFrame(path), max_rounds=25)
+    monkeypatch.undo()
+
+    assert collects == []
+    # plans[0]: the canonical input edges; plans[-1]: the final labels
+    rounds = plans[1:-1]
+    assert len(rounds) >= 2
+    assert all("CollectMetrics" in p for p in plans[:-1])
+    for p in rounds:
+        final = p[: p.index("== Initial Plan ==")]
+        assert "isFinalPlan=true" in final
+        assert "BroadcastHashJoin" in final
+        assert "SortMergeJoin" not in final
+
+
 def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, monkeypatch):
     """The tag-rollup throughput job's "pages/sec" honesty pin (round 4,
     BENCH/MICRO.md), on the plan the gated perfbench `tag_rollup`
