@@ -12,11 +12,12 @@ graph shape, not O(diameter) like naive label propagation — at 10^12
 docs a chain of pairwise near-dups (common with templated boilerplate)
 would make propagation unbounded while star-alternation stays ~40 rounds
 even at 2^40 nodes. Each round is two groupBy-min + join passes — plain
-shuffles, no driver-side graph. Per-round ``localCheckpoint`` truncates
-the iterative plan lineage (otherwise Catalyst re-analyzes a
-geometrically growing tree); convergence is detected by an exact
-(count, decimal-sum-of-xxhash64) fingerprint of the canonical edge set —
-decimal sum so ANSI mode can't overflow.
+shuffles, no driver-side graph — and ends in ONE action, a
+``localCheckpoint`` that truncates the iterative plan lineage (otherwise
+Catalyst re-analyzes a geometrically growing tree). Convergence is an
+exact (count, decimal-sum-of-xxhash64) fingerprint of the canonical edge
+set, observed inside that same checkpoint job — decimal sum so ANSI mode
+can't overflow.
 
 Output: (node, component) with component = MIN node id of the component,
 for every node incident to an edge; singletons never enter the edge set
@@ -25,7 +26,7 @@ and are handled by the caller's left join (see dup_clusters query).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -37,12 +38,16 @@ def _canon(e: DataFrame) -> DataFrame:
     )
 
 
-def _fingerprint(e: DataFrame) -> tuple:
-    row = e.agg(
+def _checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Materialize canonical edges `e` in one action and return them with
+    their (count, hash-sum) fingerprint, observed inside that action."""
+    obs = Observation()
+    e = e.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.expr("sum(cast(xxhash64(u, v) AS DECIMAL(38,0)))").alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
+    ).localCheckpoint(eager=True)
+    return e, (obs.get["n"], obs.get["h"])
 
 
 def connected_components(
@@ -50,48 +55,44 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 40,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(node, component) for all nodes of `edges`; component = min node.
 
     Near-dup edge sets are usually TINY next to the corpus (pairs, not
-    pages), but each star round is ~6 shuffles — at the session's default
-    partition count the per-round fixed cost (task launch × partitions ×
-    shuffles × rounds) dwarfs the actual work. The shuffle width is
-    therefore scoped to the measured edge count (~1 partition per 100k
-    edges, capped at the session default) by swapping the session conf
-    around the loop and restoring it afterwards; every action of this
-    operator, including the final label materialization, runs inside the
-    guarded block (the function returns a localCheckpoint). Benched
-    13.9 s → see BENCH/MICRO.md on the 47-query suite's worst entry.
-    Callers sharing the session with CONCURRENT actions should pass
-    ``shuffle_partitions`` explicitly instead.
+    pages), but each star round is several shuffles — at the session's
+    default partition count the per-round fixed cost (task launch ×
+    partitions × shuffles × rounds) dwarfs the actual work. The shuffle
+    width is therefore sized from the observed edge count (~1 partition
+    per 100k edges, capped at the session default) by swapping the
+    session conf around the loop and restoring it afterwards; every action
+    of this operator, including the final label materialization, runs
+    inside the guarded block (the function returns a localCheckpoint).
+    The swap is on the session, so for the call's duration it also
+    applies to any concurrent action on that session.
     """
     spark = edges.sparkSession
-    e = _canon(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ).localCheckpoint(eager=True)
-    prev = _fingerprint(e)
+    e, prev = _checkpoint(
+        _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    )
     if prev[0] == 0:
         return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2, min(int(old_parts), int(prev[0] // 100_000) + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    width = max(2, min(int(old_parts), prev[0] // 100_000 + 1))
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         return _star_rounds(e, prev, max_rounds)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
-def _star_rounds(
-    e: DataFrame, prev: tuple, max_rounds: int, check_every: int = 2
-) -> DataFrame:
+def _star_rounds(e: DataFrame, prev: tuple, max_rounds: int) -> DataFrame:
     from s2cell_spark.plans.joins import broadcast_if_small
 
-    done = False
-    for i in range(max_rounds):
+    # Both stars emit canonical edges (u > v, distinct) from canonical
+    # input: large-star links v > u to m <= u, small-star links v to
+    # m < v. So neither re-canonicalizes.
+    for _ in range(max_rounds):
         # large-star: every neighbor v > u links to m = min(N(u) ∪ {u})
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -99,36 +100,25 @@ def _star_rounds(
             sym.join(broadcast_if_small(m), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # small-star: orient u >= v; every smaller neighbor (and u) links
-        # to the neighborhood min
-        o = _canon(e)
-        mins = o.groupBy("u").agg(F.min("v").alias("m"))
+        # small-star: every smaller neighbor (and u) links to the
+        # neighborhood min
+        mins = e.groupBy("u").agg(F.min("v").alias("m"))
         e = (
-            o.join(broadcast_if_small(mins), "u")
+            e.join(broadcast_if_small(mins), "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(mins.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # checkpoint + convergence fingerprint every `check_every` rounds
-        # (r5, verdict item 4): each is a per-round ACTION, and at
-        # near-dup-edge scale the fixed action cost (task launch x
-        # partitions x shuffles) dominates the actual work. Executing a
-        # 2-round plan under ONE action also lets the in-plan shuffles
-        # flow without a barrier. A converged graph is a fixed point of
-        # both stars, so checking two rounds apart still terminates; the
-        # worst case is one extra (cheap — already-contracted) round.
-        if i % check_every == check_every - 1 or i == max_rounds - 1:
-            e = e.localCheckpoint(eager=True)
-            cur = _fingerprint(_canon(e))
-            if cur == prev:
-                done = True
-                break
-            prev = cur
-    if not done:
+        # the round's one action; an unchanged fingerprint is a fixed
+        # point of both stars
+        e, cur = _checkpoint(e)
+        if cur == prev:
+            break
+        prev = cur
+    else:
         raise RuntimeError(f"connected_components: no convergence in {max_rounds} rounds")
 
     # converged: e is a set of min-rooted stars (u -> root); materialize

@@ -125,13 +125,10 @@ def dense_cell_clusters(
     # the iterative components rounds) instead of recomputing it for the
     # probe union, the adjacency join and the final label join.
     dense = dense.localCheckpoint(eager=True)
-    n_dense = dense.count()
-    edges = adjacency_edges(dense, level)
+    # no dense-cell count: components size their shuffle width from the
+    # observed edge count
     labels = connected_components(
-        edges,
-        src="tok_a",
-        dst="tok_b",
-        shuffle_partitions=max(1, min(32, n_dense // 64 + 1)),
+        adjacency_edges(dense, level), src="tok_a", dst="tok_b"
     )
     out = dense.join(
         labels, on=F.col("cell_token") == F.col("node"), how="left"
