@@ -47,7 +47,8 @@ def _checkpoint(e: DataFrame) -> tuple[DataFrame, tuple]:
         F.count(F.lit(1)).alias("n"),
         F.expr("sum(cast(xxhash64(u, v) AS DECIMAL(38,0)))").alias("h"),
     ).localCheckpoint(eager=True)
-    return e, (obs.get["n"], obs.get["h"])
+    fp = obs.get
+    return e, (fp["n"], fp["h"])
 
 
 def connected_components(

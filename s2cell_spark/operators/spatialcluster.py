@@ -125,8 +125,8 @@ def dense_cell_clusters(
     # the iterative components rounds) instead of recomputing it for the
     # probe union, the adjacency join and the final label join.
     dense = dense.localCheckpoint(eager=True)
-    # no dense-cell count: components size their shuffle width from the
-    # observed edge count
+    # connected_components sizes its shuffle width from the observed edge
+    # count
     labels = connected_components(
         adjacency_edges(dense, level), src="tok_a", dst="tok_b"
     )
