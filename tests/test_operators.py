@@ -1332,8 +1332,8 @@ def test_connected_components_vs_union_find(spark):
 def test_connected_components_converges_within_max_rounds(spark):
     """Disjoint 8-cliques contract to stars in one round, and the second
     round reproduces them: convergence is observable after 2 rounds, so
-    ``max_rounds=2`` must suffice. Checking convergence only every other
-    round needs a third round to see the fixed point and raised here."""
+    ``max_rounds=2`` must suffice. A check only every other round would
+    need a third round to see the fixed point."""
     from s2cell_spark.operators.components import connected_components
 
     cliques = [
