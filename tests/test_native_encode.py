@@ -90,6 +90,31 @@ def test_native_encode_single_codegen_stage(spark):
     assert stages == {"1"}, f"expected one codegen stage, saw {stages}"
 
 
+def test_native_encode_second_call_reuses_its_column_stack(spark, monkeypatch):
+    """The encode's Column stack is built once per (lat, lon, level, out):
+    a repeat call only applies the built withColumns steps, a few dozen
+    Py4J round trips instead of the thousands a rebuild costs."""
+    from py4j.java_gateway import GatewayClient
+
+    df = spark.range(10).select(
+        F.col("id").cast("double").alias("lat"), F.col("id").cast("double").alias("lon")
+    )
+    with_cell_id(df, level=30)
+    calls = 0
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    out = with_cell_id(df, level=30)
+    monkeypatch.undo()
+    assert calls < 200, calls
+    assert out.columns == ["lat", "lon", "cell_id"]
+
+
 def test_native_decode_corpus_and_kernel_parity(spark, decode_corpus):
     """Native decode meets the reference's own corpus gate (cell-center
     lat/lon within 1e-12 deg of the C++ values — s2cell's decode

@@ -493,6 +493,19 @@ def test_streaming_first_seen_dedups_across_batches(spark, tmp_path):
     assert len(got) < whole.count()  # the overlap really contained dups
 
 
+def test_empty_covering_joins_nothing(spark, pages):
+    """An empty region dict is a valid covering: it normalizes to an empty
+    (region_id, cov_cell) bigint frame, an inner containment join against
+    it returns no rows, and a LEFT join keeps every page untagged."""
+    cov = CJ.normalized_coverings_df(spark, {}, 10)
+    assert cov.schema.simpleString() == "struct<region_id:bigint,cov_cell:bigint>"
+    assert cov.count() == 0
+    assert CJ.containment_join_equi(pages, spark, {}, 10).count() == 0
+    left = CJ.containment_join_equi(pages, spark, {}, 10, how="left")
+    assert left.count() == pages.count() > 0
+    assert left.filter(F.col("region_id").isNotNull()).count() == 0
+
+
 def test_native_covering_expansion_matches_numpy(spark):
     """normalized_coverings_df's explode(sequence(...)) expansion must
     equal the numpy covering_to_level expansion cell-for-cell — including

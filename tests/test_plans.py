@@ -577,6 +577,53 @@ def test_one_python_boundary_style_outside_streaming():
     assert hits == []
 
 
+def test_driver_built_covering_is_a_local_relation(spark):
+    """A covering built on the driver ships as an Arrow LocalRelation with
+    the Arrow conf OFF (the default outside the test session). Pickled
+    Python rows would plan as a LogicalRDD (ExistingRDD scan), and every
+    action reading it would start a Python-worker job."""
+    from s2cell_spark.operators import covering as COV
+    from s2cell_spark.operators.containment import coverings_df
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        cells = COV.latlng_rect_covering(10.0, 12.0, 20.0, 23.0, max_level=8)
+        df = coverings_df(spark, {3: cells, 4: cells[:2]})
+        qe = df._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        executed = qe.executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert optimized.startswith("LocalRelation"), optimized
+    assert "ExistingRDD" not in executed
+    assert df.schema.simpleString() == "struct<region_id:bigint,cell_id:bigint,level:bigint>"
+    assert df.count() == len(cells) + 2
+
+
+def test_driver_built_tables_go_through_one_helper():
+    """Every createDataFrame call in the library is the one inside
+    functions/udfs.arrow_frame, so each driver-built table is an Arrow
+    LocalRelation with an explicit schema, never pickled Python rows."""
+    import ast
+    from pathlib import Path
+
+    def creates(node) -> bool:
+        return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame"
+
+    root = Path(__file__).resolve().parent.parent / "s2cell_spark"
+    calls, helper = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if creates(node):
+                calls.add(f"{rel}:{node.lineno}")
+            if rel == "functions/udfs.py" and getattr(node, "name", None) == "arrow_frame":
+                helper |= {f"{rel}:{n.lineno}" for n in ast.walk(node) if creates(n)}
+    assert helper and calls - helper == set(), sorted(calls - helper)
+
+
 def test_library_and_scripts_never_import_test_driver_or_bench():
     """The library and the production entrypoint stand alone: nothing
     under s2cell_spark/ or scripts/ imports the test driver
