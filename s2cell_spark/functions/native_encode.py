@@ -44,12 +44,23 @@ CollapseProject declines to inline non-cheap multi-consumer aliases
 stack into one function where each step is a reused local variable —
 exactly the CSE a hand-written loop would get. Plan shape is pinned by
 tests/test_plans.py (single codegen stage, no Python eval).
+
+The steps are built once per key — ``(lat_col, lon_col, level, out)``
+for the encode, ``(cell_col, lat_out, lon_out)`` for the decode — and
+kept as JVM Seqs of unresolved Columns, which resolve against whatever
+DataFrame they are applied to. A repeat call is one Py4J call per step
+(~26 for a level-30 encode) instead of rebuilding ~250 Column
+expressions (~3,600 round trips). A per-row ``level`` Column is not a
+key; that form builds its steps on every call.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
+import numpy as np
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -63,29 +74,43 @@ MAX_SIZE = kernels.MAX_SIZE  # 2^30
 # divides by 180 first — NOT bit-equivalent. Keep the multiply form.
 _DEG2RAD = math.pi / 180.0
 
-# The 1024-entry Hilbert position table as ONE shared array literal
-# (kernels._build_lookups, parity s2cell/s2cell.py:285-342). MUST be a
-# numpy array: ``F.lit(list)`` builds CreateArray with 1024 literal
-# CHILDREN — per-row array construction, and 16 inlined copies blow the
-# 64KB codegen method limit into interpreted fallback (measured 17x
-# slower end-to-end) — while ``F.lit(np.ndarray)`` builds one true
-# ``Literal(ArrayData)`` referenced as a constant object in generated
-# code. Reusing a single Column object shares that one JVM Literal
-# across all lookup-round expressions.
-import numpy as _np
 
-_LUT_POS: Column | None = None
-
-
-def _lut_pos() -> Column:
-    global _LUT_POS
-    if _LUT_POS is None:
-        _LUT_POS = F.lit(_np.asarray(kernels.LOOKUP_POS, dtype=_np.int64))
-    return _LUT_POS
+def _lut(table: np.ndarray) -> Column:
+    """A Hilbert lookup table (kernels._build_lookups, parity
+    s2cell/s2cell.py:285-342) as ONE array literal, shared by every
+    lookup round of a build. MUST be a numpy array: ``F.lit(list)``
+    builds CreateArray with 1024 literal CHILDREN — per-row array
+    construction, and 16 inlined copies blow the 64KB codegen method
+    limit into interpreted fallback (measured 17x slower end-to-end) —
+    while ``F.lit(np.ndarray)`` builds one true ``Literal(ArrayData)``
+    referenced as a constant object in generated code."""
+    return F.lit(np.asarray(table, dtype=np.int64))
 
 
 def _tmp(name: str) -> str:
     return f"_s2n_{name}"
+
+
+def _compile(steps: list[dict[str, Column]]) -> tuple:
+    """Built ``withColumns`` steps as JVM (names, columns) Seq pairs, plus
+    the Seq of temp names to drop; the last step's columns are the
+    outputs. Applying a built step is then one Py4J call."""
+    seq = SparkContext._active_spark_context._jvm.PythonUtils.toSeq
+    outputs = set(steps[-1])
+    temps = dict.fromkeys(n for step in steps[:-1] for n in step if n not in outputs)
+    return (
+        tuple((seq(list(step)), seq([c._jc for c in step.values()])) for step in steps),
+        seq(list(temps)),
+    )
+
+
+def _apply(df: DataFrame, built: tuple) -> DataFrame:
+    """`df` with the built steps applied and their temp columns dropped."""
+    steps, temps = built
+    jdf = df._jdf
+    for names, cols in steps:
+        jdf = jdf.withColumns(names, cols)
+    return DataFrame(jdf.drop(temps), df.sparkSession)
 
 
 def with_cell_id(
@@ -105,19 +130,29 @@ def with_cell_id(
     they exist so codegen computes each pipeline stage once (module
     docstring). Input columns are otherwise untouched.
     """
+    if isinstance(level, int):
+        if not 0 <= level <= MAX_LEVEL:
+            raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
+        return _apply(df, _encode_steps(lat_col, lon_col, level, out))
+    return _apply(df, _encode_steps.__wrapped__(lat_col, lon_col, level, out))
+
+
+@functools.lru_cache(maxsize=None)
+def _encode_steps(lat_col: str, lon_col: str, level: "int | Column", out: str) -> tuple:
+    """The encode's ``withColumns`` steps, built once per int-level key
+    (the per-row Column level calls the unwrapped builder)."""
     per_row_level = not isinstance(level, int)
     rounds = 8 if per_row_level else required_rounds(level)
-    if not per_row_level and not (0 <= level <= MAX_LEVEL):
-        raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
+    steps: list[dict[str, Column]] = []
 
     lat_r = F.col(lat_col) * F.lit(_DEG2RAD)
     lon_r = F.col(lon_col) * F.lit(_DEG2RAD)
-    x, y, z, face, u, v, s, t, i, j, o, pos = (
+    x, y, z, axis_c, face, u, v, s, t, i, j, o, pos = (
         _tmp(n)
-        for n in ("x", "y", "z", "face", "u", "v", "s", "t", "i", "j", "o", "pos")
+        for n in ("x", "y", "z", "axis", "face", "u", "v", "s", "t", "i", "j", "o", "pos")
     )
     # 1. XYZ on the unit sphere (s2cell/s2cell.py:649-662)
-    df = df.withColumns(
+    steps.append(
         {
             x: F.cos(lat_r) * F.cos(lon_r),
             y: F.cos(lat_r) * F.sin(lon_r),
@@ -130,19 +165,18 @@ def with_cell_id(
     axis = F.when(
         ax >= ay, F.when(ax >= az, F.lit(0)).otherwise(F.lit(2))
     ).otherwise(F.when(ay >= az, F.lit(1)).otherwise(F.lit(2)))
-    df = df.withColumn(_tmp("axis"), axis)
+    steps.append({axis_c: axis})
     comp = (
-        F.when(F.col(_tmp("axis")) == 0, F.col(x))
-        .when(F.col(_tmp("axis")) == 1, F.col(y))
+        F.when(F.col(axis_c) == 0, F.col(x))
+        .when(F.col(axis_c) == 1, F.col(y))
         .otherwise(F.col(z))
     )
-    df = df.withColumn(
-        face,
-        (
-            F.when(comp < 0.0, F.col(_tmp("axis")) + F.lit(3)).otherwise(
-                F.col(_tmp("axis"))
-            )
-        ).cast("long"),
+    steps.append(
+        {
+            face: (
+                F.when(comp < 0.0, F.col(axis_c) + F.lit(3)).otherwise(F.col(axis_c))
+            ).cast("long")
+        }
     )
     # 3. face UV (sign x numerator / dominant component — identical term
     # order to hilbert_sql.leaf_bits_cte, s2cell/s2cell.py:193-238)
@@ -162,7 +196,7 @@ def with_cell_id(
     )
     u_sign = F.when(fc.isin(1, 2, 5), F.lit(-1.0)).otherwise(F.lit(1.0))
     v_sign = F.when(fc.isin(2, 4, 5), F.lit(-1.0)).otherwise(F.lit(1.0))
-    df = df.withColumns({u: u_sign * u_num / den, v: v_sign * v_num / den})
+    steps.append({u: u_sign * u_num / den, v: v_sign * v_num / den})
     # 4. quadratic ST (s2cell/s2cell.py:90-103) -> clamped leaf IJ (:122-134)
     def _st(c: Column) -> Column:
         return F.when(c >= 0.0, F.lit(0.5) * F.sqrt(F.lit(1.0) + F.lit(3.0) * c)).otherwise(
@@ -176,15 +210,15 @@ def with_cell_id(
             F.greatest(F.lit(0).cast("long"), F.floor(F.lit(float(MAX_SIZE)) * c)),
         )
 
-    df = df.withColumns({s: _st(F.col(u)), t: _st(F.col(v))})
-    df = df.withColumns({i: _ij(F.col(s)), j: _ij(F.col(t))})
+    steps.append({s: _st(F.col(u)), t: _st(F.col(v))})
+    steps.append({i: _ij(F.col(s)), j: _ij(F.col(t))})
     # 5. Hilbert lookup rounds (s2cell/s2cell.py:429-502): orientation o
     # threads the rounds, pos accumulates val>>2 at bit 8k+1 (the +1 is
     # the trailing-bit slot). Each round's LUT value is its own column so
     # it is computed once and consumed twice (pos term + next orientation).
-    lut = _lut_pos()
-    df = df.withColumn(o, F.col(face).bitwiseAND(F.lit(1)))
-    df = df.withColumn(pos, F.lit(0).cast("long"))
+    lut = _lut(kernels.LOOKUP_POS)
+    steps.append({o: F.col(face).bitwiseAND(F.lit(1))})
+    steps.append({pos: F.lit(0).cast("long")})
     for k in range(7, 7 - rounds, -1):
         key = (
             F.col(o)
@@ -192,8 +226,8 @@ def with_cell_id(
             + F.shiftright(F.col(j), 4 * k).bitwiseAND(F.lit(15)) * F.lit(4)
         )
         vcol = _tmp(f"v{k}")
-        df = df.withColumn(vcol, F.get(lut, key.cast("int")).cast("long"))
-        df = df.withColumns(
+        steps.append({vcol: F.get(lut, key.cast("int")).cast("long")})
+        steps.append(
             {
                 pos: F.col(pos)
                 + F.shiftright(F.col(vcol), 2) * F.lit(1 << (8 * k + 1)).cast("long"),
@@ -212,11 +246,8 @@ def with_cell_id(
         lsb = F.call_function("shiftleft", F.lit(1).cast("long"), bits)
     else:
         lsb = F.lit(1 << (2 * (MAX_LEVEL - level)))
-    cell = trunc0.bitwiseAND(-lsb).bitwiseOR(lsb)
-    df = df.withColumn(out, cell)
-    return df.drop(
-        *(c for c in df.columns if c.startswith("_s2n_") and c != out)
-    )
+    steps.append({out: trunc0.bitwiseAND(-lsb).bitwiseOR(lsb)})
+    return _compile(steps)
 
 
 # ---------------------------------------------------------------------------
@@ -224,15 +255,6 @@ def with_cell_id(
 # ---------------------------------------------------------------------------
 
 _RAD2DEG = 180.0 / math.pi  # numpy rad2deg multiplies by this constant
-
-_LUT_IJ: Column | None = None
-
-
-def _lut_ij() -> Column:
-    global _LUT_IJ
-    if _LUT_IJ is None:
-        _LUT_IJ = F.lit(_np.asarray(kernels.LOOKUP_IJ, dtype=_np.int64))
-    return _LUT_IJ
 
 
 def with_lat_lon(
@@ -254,27 +276,34 @@ def with_lat_lon(
     the corpus gate's 1e-12 tolerance (the reference's own decode gate)
     and far inside the repo's 1e-7-deg fixed-point comparison grid.
     """
+    return _apply(df, _decode_steps(cell_col, lat_out, lon_out))
+
+
+@functools.lru_cache(maxsize=None)
+def _decode_steps(cell_col: str, lat_out: str, lon_out: str) -> tuple:
+    """The decode's ``withColumns`` steps, built once per key."""
+    steps: list[dict[str, Column]] = []
     cid = F.col(cell_col)
     face_c, i_c, j_c, o_c = (
         _tmp(n) for n in ("dface", "di", "dj", "do")
     )
-    lut = _lut_ij()
-    df = df.withColumns(
+    lut = _lut(kernels.LOOKUP_IJ)
+    steps.append(
         {
             face_c: F.shiftrightunsigned(cid, 61).bitwiseAND(F.lit(7)).cast("long"),
             i_c: F.lit(0).cast("long"),
             j_c: F.lit(0).cast("long"),
         }
     )
-    df = df.withColumn(o_c, F.col(face_c).bitwiseAND(F.lit(1)))
+    steps.append({o_c: F.col(face_c).bitwiseAND(F.lit(1))})
     for k in range(7, -1, -1):
         mask = 15 if k == 7 else 255
         key = F.col(o_c) + F.shiftright(cid, k * 8 + 1).bitwiseAND(
             F.lit(mask)
         ) * F.lit(4)
         vcol = _tmp(f"dv{k}")
-        df = df.withColumn(vcol, F.get(lut, key.cast("int")).cast("long"))
-        df = df.withColumns(
+        steps.append({vcol: F.get(lut, key.cast("int")).cast("long")})
+        steps.append(
             {
                 i_c: F.col(i_c)
                 + F.shiftright(F.col(vcol), 6) * F.lit(1 << (4 * k)).cast("long"),
@@ -293,7 +322,7 @@ def with_lat_lon(
     )
     delta = F.when(is_leaf, F.lit(1)).when(corr, F.lit(2)).otherwise(F.lit(0))
     si_c, ti_c, u_c, v_c = (_tmp(n) for n in ("si", "ti", "du", "dv"))
-    df = df.withColumns(
+    steps.append(
         {
             si_c: F.lit(2).cast("long") * F.col(i_c) + delta.cast("long"),
             ti_c: F.lit(2).cast("long") * F.col(j_c) + delta.cast("long"),
@@ -311,7 +340,7 @@ def with_lat_lon(
             third * (F.lit(1.0) - F.lit(4.0) * (F.lit(1.0) - st) * (F.lit(1.0) - st))
         )
 
-    df = df.withColumns({u_c: _uv(F.col(si_c)), v_c: _uv(F.col(ti_c))})
+    steps.append({u_c: _uv(F.col(si_c)), v_c: _uv(F.col(ti_c))})
     fc, u, v = F.col(face_c), F.col(u_c), F.col(v_c)
     one = F.lit(1.0)
     x = (
@@ -327,7 +356,7 @@ def with_lat_lon(
         .when(fc == 3, -u).when(fc == 4, -u).otherwise(-one)
     )
     xyz = {_tmp("dx"): x, _tmp("dy"): y, _tmp("dz"): z}
-    df = df.withColumns(xyz)
+    steps.append(xyz)
     xx, yy, zz = (F.col(c) for c in xyz)
     # Spark's Atan2 expression adds 0.0 to BOTH operands, erasing signed
     # zeros — but the antimeridian is decided by them: faces 2/3 have
@@ -341,10 +370,10 @@ def with_lat_lon(
     lon = F.when(
         F.col(face_c).isin(2, 3) & (F.col(v_c) == 0.0), F.lit(-180.0)
     ).otherwise(lon_raw)
-    df = df.withColumns(
+    steps.append(
         {
             lat_out: F.atan2(zz, F.sqrt(xx * xx + yy * yy)) * F.lit(_RAD2DEG),
             lon_out: lon,
         }
     )
-    return df.drop(*(c for c in df.columns if c.startswith("_s2n_")))
+    return _compile(steps)

@@ -22,11 +22,15 @@ next to nulls), masks nulls in numpy, and writes results back through
 
 from __future__ import annotations
 
+from collections.abc import Mapping, Sequence
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -56,6 +60,32 @@ def numpy_to_arrow(values: np.ndarray, valid: np.ndarray | None = None, type=Non
     """Arrow array of `values`, null where `valid` is False."""
     mask = None if valid is None or valid.all() else ~valid
     return pa.array(values, type=type, mask=mask)
+
+
+def arrow_frame(
+    spark: SparkSession, data: Mapping | Sequence, schema: str | StructType
+) -> DataFrame:
+    """A driver-built table as a DataFrame over one Arrow ``LocalRelation``.
+
+    `data` is a mapping of column name -> values (numpy arrays convert
+    without a Python loop) or a sequence of row tuples; `schema` (DDL
+    string or StructType) fixes every column type, so an empty table
+    needs no inference. The table ships as Arrow whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says: pickled Python
+    rows would plan as a ``LogicalRDD``, and every action reading one
+    starts a Python-worker job."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, Mapping):
+        table = pa.Table.from_arrays(
+            [pa.array(data[f.name], type=f.type) for f in arrow_schema], schema=arrow_schema
+        )
+    elif data:
+        table = LocalDataToArrowConversion.convert(list(data), schema, use_large_var_types=False)
+    else:
+        table = arrow_schema.empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 @F.arrow_udf(LongType())
@@ -233,7 +263,7 @@ def register_sql_functions(spark) -> None:
     # Render each Catalyst expr to SQL text by analyzing a zero-row
     # projection (PySpark 4 Columns wrap ColumnNodes, so the expression
     # tree — and its .sql() — is only reachable through an analyzed plan).
-    dummy = spark.createDataFrame([], "cid bigint, tok string, lvl int")
+    dummy = arrow_frame(spark, [], "cid bigint, tok string, lvl int")
 
     def _body(expr) -> str:
         plan = dummy.select(expr.alias("_o"))._jdf.queryExecution().analyzed()
@@ -269,7 +299,8 @@ def register_sql_functions(spark) -> None:
     # changes literal escaping would otherwise corrupt them SILENTLY.
     # One tiny job: evaluate every SQL function against its Column-API twin
     # on probe rows that exercise the regex paths, and fail loudly.
-    probe = spark.createDataFrame(
+    probe = arrow_frame(
+        spark,
         [
             (3383782026652942336, "2ef59bd352b93848", 4),   # valid leaf id/token
             (-4611686018427387904, " 5\t", 2),              # face-4 (negative); ws-wrapped token

@@ -28,7 +28,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,39 +35,30 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
-from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
+from s2cell_spark.functions.udfs import arrow_frame, arrow_to_numpy, numpy_to_arrow
 from s2cell_spark.operators import covering as COV
 
 
 def coverings_df(
     spark: SparkSession, regions: dict[int, np.ndarray]
 ) -> DataFrame:
-    """Small DataFrame (region_id, cell_id, level) from region -> cells.
-
-    Built through pandas so the driver->JVM ship rides Arrow — coverings
-    can reach 10^5 cells and the Py4J row path is ~100x slower."""
-    parts = []
-    for rid, cells in regions.items():
-        parts.append(
-            pd.DataFrame(
-                {
-                    "region_id": np.full(cells.shape, rid, dtype=np.int32),
-                    "cell_id": cells.view(np.int64),
-                    "level": K.cell_id_to_level(cells),
-                }
-            )
-        )
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        {
-            # explicit dtypes: an empty frame would infer float64 columns
-            # and give the Spark side DOUBLE cell_ids, breaking the
-            # downstream bitwise exprs
-            "region_id": pd.Series([], dtype="int32"),
-            "cell_id": pd.Series([], dtype="int64"),
-            "level": pd.Series([], dtype="int32"),
-        }
+    """Small DataFrame (region_id, cell_id, level), all bigint, from
+    region -> cells; an empty dict gives an empty frame. Ships as one
+    Arrow ``LocalRelation`` (:func:`~s2cell_spark.functions.udfs.arrow_frame`)."""
+    cells = np.concatenate(
+        [np.empty(0, np.uint64)] + [c.view(np.uint64) for c in regions.values()]
     )
-    return spark.createDataFrame(pdf)
+    return arrow_frame(
+        spark,
+        {
+            "region_id": np.repeat(
+                np.array(list(regions), dtype=np.int64), [len(c) for c in regions.values()]
+            ),
+            "cell_id": cells.view(np.int64),
+            "level": K.cell_id_to_level(cells),
+        },
+        "region_id bigint, cell_id bigint, level bigint",
+    )
 
 
 def normalized_coverings_df(

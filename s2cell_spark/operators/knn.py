@@ -38,13 +38,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
+from s2cell_spark.functions.udfs import arrow_frame
 
 
 def haversine_deg(lat1, lon1, lat2, lon2):
@@ -271,7 +271,8 @@ def knn(
     """
     from s2cell_spark.operators.containment import containment_join_range
 
-    q_df = spark.createDataFrame(
+    q_df = arrow_frame(
+        spark,
         [(int(q), float(a), float(o)) for q, a, o in queries],
         "query_id long, q_lat double, q_lon double",
     )
@@ -288,15 +289,14 @@ def knn(
         ring_rows = _ring_cells(queries, level, n_rings)
         # uint64 cells -> LongType via bit reinterpretation (faces 4-5 are
         # negative); already (q, c)-sorted, so the frame is deterministic
-        rings_pdf = pd.DataFrame(
+        rings_df = arrow_frame(
+            spark,
             {
                 "query_id": ring_rows["q"],
                 "ring_cell": ring_rows["c"].view(np.int64),
                 "lvl": np.full(len(ring_rows), level, dtype=np.int32),
-            }
-        )
-        rings_df = spark.createDataFrame(
-            rings_pdf, "query_id long, ring_cell long, lvl int"
+            },
+            "query_id long, ring_cell long, lvl int",
         )
         key = S2F.cell_id_to_parent_cell_id(F.col(cell_col), level)
         cand = narrow.join(
@@ -362,8 +362,10 @@ def knn(
         for qid, lat_lo, lat_hi, lon_lo, lon_hi in verify_rows
     }
     covered = containment_join_range(narrow, regions, cell_col=cell_col)
-    boxes = spark.createDataFrame(
-        verify_rows, "region_id long, lat_lo double, lat_hi double, lon_lo double, lon_hi double"
+    boxes = arrow_frame(
+        spark,
+        verify_rows,
+        "region_id long, lat_lo double, lat_hi double, lon_lo double, lon_hi double",
     ).join(q_df.withColumnRenamed("query_id", "region_id"), on="region_id")
     final = (
         covered.join(F.broadcast(boxes), on="region_id", how="inner")

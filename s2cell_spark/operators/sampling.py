@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from s2cell_spark.functions.udfs import arrow_frame
+
 BUCKETS = 10_000
 
 
@@ -173,7 +175,7 @@ def stratified_split(
             StructField("_n", LongType(), False),
         ]
     )
-    offs = df.sparkSession.createDataFrame(lit_rows, schema=offs_schema)
+    offs = arrow_frame(df.sparkSession, lit_rows, offs_schema)
     # eqNullSafe so a NULL stratum matches its own quota row (a plain
     # `on=[strata_col, ...]` join silently drops every null-stratum row —
     # a split operator must label ALL rows).

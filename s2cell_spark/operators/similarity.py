@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
+from s2cell_spark.functions.udfs import arrow_frame, arrow_to_numpy, numpy_to_arrow
 
 
 def _to_matrix(vecs: pa.ListArray) -> np.ndarray:
@@ -254,12 +254,11 @@ def _score_probed(
     # (SelectedBucketsCount), so unprobed buckets are never even read
     probed_cells = sorted({c for _, c in probe_rows})
     cand = assigned.filter(F.col("ivf_cell").isin(probed_cells))
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_rows, "query_id long, ivf_cell long")
-    )
+    probe_df = F.broadcast(arrow_frame(spark, probe_rows, "query_id long, ivf_cell long"))
     cand = cand.join(probe_df, on="ivf_cell")
     q_vec_df = F.broadcast(
-        spark.createDataFrame(
+        arrow_frame(
+            spark,
             [(int(qid), [float(x) for x in vec]) for qid, vec in queries],
             "query_id long, q_vec array<double>",
         )

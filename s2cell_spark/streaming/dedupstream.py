@@ -52,6 +52,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators.components import connected_components
 from s2cell_spark.operators.dedup import minhash_banded, shingled_docs
 
@@ -63,7 +64,7 @@ _STARS_SCHEMA = "u long, v long"
 def _read_state(spark, root: str, sub: str, schema: str, exclude_batch: int):
     path = os.path.join(root, sub)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, [], schema)
     df = spark.read.parquet(path)
     # partition discovery surfaces the batch=N dir as a column; a crashed
     # half-write of THIS batch id must be invisible to the old-state read
@@ -103,7 +104,7 @@ def dup_clusters_refresh(
     stars = (
         spark.read.parquet(stars_path)
         if os.path.isdir(stars_path)
-        else spark.createDataFrame([], _STARS_SCHEMA)
+        else arrow_frame(spark, [], _STARS_SCHEMA)
     )
 
     # candidates TOUCHING a new doc: new x (old ∪ new) bucket join;

@@ -94,6 +94,8 @@ def test_native_encode_second_call_reuses_its_column_stack(spark, monkeypatch):
     """The encode's Column stack is built once per (lat, lon, level, out):
     a repeat call only applies the built withColumns steps, a few dozen
     Py4J round trips instead of the thousands a rebuild costs."""
+    import threading
+
     from py4j.java_gateway import GatewayClient
 
     df = spark.range(10).select(
@@ -102,10 +104,13 @@ def test_native_encode_second_call_reuses_its_column_stack(spark, monkeypatch):
     with_cell_id(df, level=30)
     calls = 0
     send = GatewayClient.send_command
+    caller = threading.get_ident()
 
     def counting(self, *args, **kwargs):
+        # Py4J's finalizer thread frees collected proxies through the same
+        # method; count only this thread's calls
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == caller
         return send(self, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counting)
