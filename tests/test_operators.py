@@ -209,6 +209,42 @@ def test_covering_superset_random_rects():
         assert ok.all()
 
 
+def test_coverers_return_pinned_cells():
+    """The exact cells of all three coverers on the query fixtures, pinned
+    as the sha256 of each covering's sorted uint64 bytes. The superset
+    and tightness tests allow many outputs; this one allows exactly the
+    current one, so a refactor of the BFS cannot move a single cell."""
+    import hashlib
+
+    import __spark_entry__ as E
+    from s2cell_spark.operators.radius import suggest_cap_level
+
+    def digest(covs) -> str:
+        h = hashlib.sha256()
+        for cov in covs:
+            h.update(np.sort(cov).astype("<u8").tobytes())
+        return h.hexdigest()
+
+    rects = [
+        COV.latlng_rect_covering(a, b, c, d, max_level=lvl, min_emit_level=m)
+        for lvl, m in ((10, 6), (7, None))
+        for _, a, b, c, d in E.PIP_BOXES
+    ]
+    polys = [
+        COV.polygon_covering([np.asarray(r, dtype=float) for r in rings], max_level=10)
+        for rings in [*E.PIP_POLYGONS.values(), *E._bulk_polygons().values()]
+    ]
+    lvl = suggest_cap_level(E.RADIUS_CIRCLES)
+    caps = [
+        COV.cap_covering(la, lo, r, max_level=L, min_emit_level=m)
+        for L, m in ((lvl, max(0, lvl - 4)), (10, None))
+        for la, lo, r in E.RADIUS_CIRCLES.values()
+    ]
+    assert digest(rects) == "b7fe3200998a0edf6c4be810630f29c28dcd2f02fb48fd20427c014739cf0e62"
+    assert digest(polys) == "6ba60048f6bbfc92b3428262eec6f6788f856b6fa469e236f78d4073c7200035"
+    assert digest(caps) == "72c657a61061faf5c2181fed427c1e2b6fcfacc4534ee31c5ff31c9e11d6a909"
+
+
 def test_minhash_recall_and_precision(spark):
     """LSH recall vs exact shingle-Jaccard pairs at the query threshold:
     every reported pair must be exact-verified (precision 1.0 by

@@ -603,23 +603,29 @@ def test_driver_built_covering_is_a_local_relation(spark):
 
 
 def test_driver_built_tables_go_through_one_helper():
-    """Every createDataFrame call in the library is the one inside
-    functions/udfs.arrow_frame, so each driver-built table is an Arrow
-    LocalRelation with an explicit schema, never pickled Python rows."""
+    """Every createDataFrame call in the library, the query driver and the
+    scripts is the one inside functions/udfs.arrow_frame, so each
+    driver-built table is an Arrow LocalRelation with an explicit schema,
+    never pickled Python rows."""
     import ast
     from pathlib import Path
 
     def creates(node) -> bool:
         return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame"
 
-    root = Path(__file__).resolve().parent.parent / "s2cell_spark"
+    repo = Path(__file__).resolve().parent.parent
+    paths = [
+        *(repo / "s2cell_spark").rglob("*.py"),
+        repo / "__spark_entry__.py",
+        *(repo / "scripts").rglob("*.py"),
+    ]
     calls, helper = set(), set()
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
+    for path in sorted(paths):
+        rel = path.relative_to(repo).as_posix()
         for node in ast.walk(ast.parse(path.read_text())):
             if creates(node):
                 calls.add(f"{rel}:{node.lineno}")
-            if rel == "functions/udfs.py" and getattr(node, "name", None) == "arrow_frame":
+            if rel == "s2cell_spark/functions/udfs.py" and getattr(node, "name", None) == "arrow_frame":
                 helper |= {f"{rel}:{n.lineno}" for n in ast.walk(node) if creates(n)}
     assert helper and calls - helper == set(), sorted(calls - helper)
 
