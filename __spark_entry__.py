@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators.containment import exact_rect_cond, rect_regions
 from s2cell_spark.sources.pages import LAT_SQL, LON_SQL, load_pages, pages_cte_duckdb, with_cell_id
 
@@ -241,8 +242,6 @@ def _q_pip(strategy: str):
         regions = _box_regions()
         if strategy == "equi":
             joined = CJ.containment_join_equi(pages, spark, regions, level=10)
-        elif strategy == "salted":
-            joined = CJ.containment_join_salted(pages, spark, regions, level=10, num_salts=8)
         else:
             joined = CJ.containment_join_range(pages, regions)
         return _exact_box_filter(joined).select(
@@ -270,12 +269,11 @@ def _union_variants(parts: "dict[str, DataFrame]") -> DataFrame:
 
 
 def _q_pip_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All three containment-join strategies — broadcast equi, mixed-level
-    sorted-range stab, and hot-cell salted — over the same boxes; one
-    row-identical arm per ``variant`` tag (was pip_boxes_equi/_range/
-    _salted through round 3)."""
+    """Both containment-join strategies — broadcast single-level equi and
+    mixed-level sorted-range stab — over the same boxes; one row-identical
+    arm per ``variant`` tag."""
     return _union_variants(
-        {s: _q_pip(s)(spark, sf_dir) for s in ("equi", "range", "salted")}
+        {s: _q_pip(s)(spark, sf_dir) for s in ("equi", "range")}
     )
 
 
@@ -327,9 +325,7 @@ def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rid, [[(la, lo) for la, lo in ring] for ring in rings])
         for rid, rings in _bulk_polygons().items()
     ]
-    polys = spark.createDataFrame(
-        rows, schema=f"region_id long, rings {RINGS_TYPE}"
-    ).repartition(8)
+    polys = arrow_frame(spark, rows, f"region_id long, rings {RINGS_TYPE}").repartition(8)
     pages = _pages_with_cells(spark, sf_dir)
     out = bulk_pip_join(pages, polys, level=10, max_level=10)
     return out.select(
@@ -409,35 +405,20 @@ def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_within_radius(strategy: str):
+def _q_within_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-radius join (operators.radius.within_radius_join): every page
-    inside each query circle, via a cap-covering candidate join (broadcast
-    single-level equi, or mixed-level sorted-range stab) + exact
-    fixed-point haversine — value-exact vs a DuckDB oracle that filters
-    the full circles x pages cross product with the identical haversine
-    text on the same 1e-7-deg grid."""
+    inside each query circle, via a broadcast single-level cap-covering
+    candidate join + exact fixed-point haversine — value-exact vs a DuckDB
+    oracle that filters the full circles x pages cross product with the
+    identical haversine text on the same 1e-7-deg grid."""
+    from s2cell_spark.operators.radius import within_radius_join
 
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from s2cell_spark.operators.radius import within_radius_join
-
-        pages = _pages_with_cells(spark, sf_dir)
-        out = within_radius_join(pages, spark, RADIUS_CIRCLES, strategy=strategy)
-        return out.select(
-            F.col("circle_id").cast("long").alias("circle_id"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("dist_fp").cast("long").alias("dist_fp"),
-        )
-
-    return q
-
-
-def _q_within_radius_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both within-radius candidate strategies — single-level broadcast
-    equi and mixed-level sorted-range — one row-identical arm per
-    ``variant`` tag (was within_radius / within_radius_range through
-    round 3)."""
-    return _union_variants(
-        {s: _q_within_radius(s)(spark, sf_dir) for s in ("equi", "range")}
+    pages = _pages_with_cells(spark, sf_dir)
+    out = within_radius_join(pages, spark, RADIUS_CIRCLES)
+    return out.select(
+        F.col("circle_id").cast("long").alias("circle_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("dist_fp").cast("long").alias("dist_fp"),
     )
 
 
@@ -456,6 +437,14 @@ def _cellunion_input() -> dict[int, "np.ndarray"]:
     return groups
 
 
+def _cell_groups_frame(spark: SparkSession, groups: "dict[int, np.ndarray]") -> DataFrame:
+    """(group_id, cell_id) bigint rows of group -> cells, one Arrow
+    LocalRelation (the covering-table builder, renamed)."""
+    from s2cell_spark.operators.containment import coverings_df
+
+    return coverings_df(spark, groups).select(F.col("region_id").alias("group_id"), "cell_id")
+
+
 def _q_cell_union_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2CellUnion.Normalize (operators.cellunion.normalize_cell_union):
     minimal disjoint mixed-level form of a redundant cell set — one
@@ -464,18 +453,10 @@ def _q_cell_union_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same greedy walk as a DuckDB recursive CTE over an
     identical VALUES input — two independent derivations of the unique
     minimal cover."""
-    import pandas as pd
-
     from s2cell_spark import functions as S2F
     from s2cell_spark.operators.cellunion import normalize_cell_union
 
-    parts = [
-        pd.DataFrame(
-            {"group_id": np.full(v.shape, k, dtype=np.int64), "cell_id": v.view(np.int64)}
-        )
-        for k, v in _cellunion_input().items()
-    ]
-    df = spark.createDataFrame(pd.concat(parts, ignore_index=True))
+    df = _cell_groups_frame(spark, _cellunion_input())
     out = normalize_cell_union(df, group_cols=["group_id"])
     return out.select(
         F.col("group_id").cast("long").alias("group_id"),
@@ -510,24 +491,15 @@ def _q_cell_union_setalg(op: str):
     sweep + recursive greedy walk in DuckDB SQL."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import pandas as pd
-
         from s2cell_spark import functions as S2F
         from s2cell_spark.operators.cellunion import (
             difference_cell_unions,
             intersect_cell_unions,
         )
 
-        parts_a, parts_b = [], []
-        for gid, (A, B) in _cellunion_ab_input().items():
-            parts_a.append(
-                pd.DataFrame({"group_id": np.full(A.shape, gid, np.int64), "cell_id": A.view(np.int64)})
-            )
-            parts_b.append(
-                pd.DataFrame({"group_id": np.full(B.shape, gid, np.int64), "cell_id": B.view(np.int64)})
-            )
-        dfa = spark.createDataFrame(pd.concat(parts_a, ignore_index=True))
-        dfb = spark.createDataFrame(pd.concat(parts_b, ignore_index=True))
+        ab = _cellunion_ab_input()
+        dfa = _cell_groups_frame(spark, {gid: A for gid, (A, _) in ab.items()})
+        dfb = _cell_groups_frame(spark, {gid: B for gid, (_, B) in ab.items()})
         fn = intersect_cell_unions if op == "intersect" else difference_cell_unions
         out = fn(dfa, dfb, group_cols=["group_id"])
         return out.select(
@@ -2013,7 +1985,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pip_polygons": _q_pip_polygons_all,
         "knn_pages": _q_knn,
         "knn_join_bulk": _q_knn_join,
-        "within_radius": _q_within_radius_all,
+        "within_radius": _q_within_radius,
         "cell_union_normalize": _q_cell_union_normalize,
         "cell_union_setalg": _q_cell_union_setalg_all,
         "tile_heatmap_z6": _q_tile_heatmap,
@@ -3165,7 +3137,7 @@ def oracle_sql() -> dict[str, str]:
         "s2_bitops": _bitops_oracle(),
         "cell_decode": _cell_decode_oracle(),
         "events_window_1h": _events_window_oracle(),
-        "pip_boxes": _variant_oracle({"equi": pip, "range": pip, "salted": pip}),
+        "pip_boxes": _variant_oracle({"equi": pip, "range": pip}),
         "pip_polygons": _variant_oracle(
             {
                 "fixture": _pip_polygons_oracle(),
@@ -3174,9 +3146,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "knn_pages": _knn_oracle(),
         "knn_join_bulk": _knn_join_oracle(),
-        "within_radius": _variant_oracle(
-            {"equi": _within_radius_oracle(), "range": _within_radius_oracle()}
-        ),
+        "within_radius": _within_radius_oracle(),
         "cell_union_normalize": _cell_union_oracle(),
         "cell_union_setalg": _variant_oracle(
             {

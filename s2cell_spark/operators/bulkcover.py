@@ -124,11 +124,10 @@ def pip_parity_expr(rings: Column, lat: Column, lon: Column) -> Column:
     rings array column: TRUE iff the count of upward/downward edge
     crossings of the ray x < lon is odd.
 
-    Arithmetic term order is identical to
-    containment.point_in_polygon_udf (and covering._points_in_polygon,
-    and the DuckDB oracle): ``lon < (x2-x1) * (lat-y1) / (y2-y1) + x1``
-    with horizontal edges skipped — so all four implementations agree
-    bit-for-bit. Whole-array higher-order functions (zip_with + filter +
+    Arithmetic term order is identical to covering._points_in_polygon
+    (the exact stage of containment.point_in_polygon_udf) and the DuckDB
+    oracle: ``lon < (x2-x1) * (lat-y1) / (y2-y1) + x1`` with horizontal
+    edges skipped — so all three implementations agree bit-for-bit. Whole-array higher-order functions (zip_with + filter +
     size), not per-element element_at, per the CollapseProject/CSE
     engine invariant.
     """

@@ -2,7 +2,7 @@
 
 Hierarchy containment is a pure uint64 range test (SURVEY.md §1.1): a cell
 ``c`` contains leaf ``d`` iff ``range_min(c) <= d <= range_max(c)``,
-equivalently ``parent(d, level(c)) == c``. Three join strategies:
+equivalently ``parent(d, level(c)) == c``. Two join strategies:
 
 1. :func:`containment_join_equi` — normalize the covering to ONE level and
    broadcast-hash-equi-join on ``parent(page_cell, L)``. Single scan of the
@@ -12,13 +12,11 @@ equivalently ``parent(d, level(c)) == c``. Three join strategies:
    intervals and binary-search each Arrow batch (`mapInArrow` +
    np.searchsorted). Avoids the O(n·m) BroadcastNestedLoopJoin Spark would
    pick for a non-equi range condition.
-3. :func:`containment_join_salted` — strategy 1 plus explicit hot-cell
-   salting: the big side adds ``salt = pmod(hash(url), S)``, the broadcast
-   side replicates across salts. Output rows are identical to the unsalted
-   plan (tested); use when one covering cell holds a disproportionate share
-   of pages (cities) and the downstream per-key work would straddle.
 
-At 100 TB the pages side never shuffles in any strategy — coverings are
+A hot covering cell (a city) needs no salting: the broadcast join never
+shuffles the pages side, so no task receives a cell's pages as a group.
+
+At 100 TB the pages side never shuffles in either strategy — coverings are
 broadcast — and the pages scan prunes to (cell_id / lat / lon / carried
 columns) only.
 """
@@ -149,39 +147,6 @@ def containment_join_equi(
     ).drop("cov_cell")
 
 
-def containment_join_salted(
-    pages: DataFrame,
-    spark: SparkSession,
-    regions: dict[int, np.ndarray],
-    level: int,
-    num_salts: int = 8,
-    cell_col: str = "cell_id",
-    salt_col: str = "url",
-) -> DataFrame:
-    """Equi strategy with hot-cell salting.
-
-    The composite key (parent cell, salt) splits any single hot covering
-    cell across `num_salts` hash buckets; the (small) covering side is
-    replicated per salt via ``explode(sequence(...))``. Row-identical to
-    the unsalted join.
-    """
-    cov = normalized_coverings_df(spark, regions, level).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
-    )
-    key = S2F.cell_id_to_parent_cell_id(F.col(cell_col), level)
-    salted = pages.withColumn(
-        "_salt", F.pmod(F.hash(F.col(salt_col)), F.lit(num_salts))
-    )
-    return (
-        salted.join(
-            F.broadcast(cov.select("region_id", "cov_cell", "salt")),
-            on=(key == F.col("cov_cell")) & (F.col("_salt") == F.col("salt")),
-            how="inner",
-        )
-        .drop("cov_cell", "salt", "_salt")
-    )
-
-
 def containment_join_range(
     pages: DataFrame,
     regions: dict[int, np.ndarray],
@@ -305,19 +270,7 @@ def point_in_polygon_udf(rings: list[np.ndarray]):
     def pip(lat: pa.Array, lon: pa.Array) -> pa.Array:
         y, ok_y = arrow_to_numpy(lat, np.float64)
         x, ok_x = arrow_to_numpy(lon, np.float64)
-        inside = np.zeros(y.shape, dtype=bool)
-        for ring in closed:
-            ry, rx = ring[:, 0], ring[:, 1]
-            for a in range(len(ring)):
-                b = (a + 1) % len(ring)
-                y1, x1, y2, x2 = ry[a], rx[a], ry[b], rx[b]
-                if y1 == y2:
-                    continue
-                cond = ((y1 > y) != (y2 > y)) & (
-                    x < (x2 - x1) * (y - y1) / (y2 - y1) + x1
-                )
-                inside ^= cond
         # a null coordinate is never inside
-        return numpy_to_arrow(inside & ok_y & ok_x)
+        return numpy_to_arrow(COV._points_in_polygon(closed, y, x) & ok_y & ok_x)
 
     return pip

@@ -1,23 +1,26 @@
-"""S2 cell coverings of lat/lon rectangles (driver-side, numpy).
+"""S2 cell coverings of rectangles, polygons and caps (driver-side, numpy).
 
 The reference library has no region coverer; this is an ENGINE component
 (SURVEY.md §2.2) built on the §2.1 kernels. It produces, for a query
-rectangle, a set of cells (mixed levels) whose union is a SUPERSET of the
-rectangle — the candidate-pruning stage of the containment joins. The
+region, a set of cells (mixed levels) whose union is a SUPERSET of the
+region — the candidate-pruning stage of the containment joins. The
 subsequent exact test removes false positives, so only the superset
 property matters for correctness; tightness only affects pruning quality.
 
-Algorithm: BFS from the 6 face cells. Each candidate cell gets a
-CONSERVATIVE lat/lon bounding box (boundary samples in ST space, padded by
-a bound on the inter-sample bulge; pole-containing and antimeridian-
-spanning cells widen to full longitude). Then
-  bbox disjoint from rect  -> prune (safe: bbox ⊇ cell),
-  bbox inside rect         -> emit at this level (cell ⊆ bbox ⊆ rect),
+Algorithm: one BFS from the 6 face cells (:func:`_cover`). Each candidate
+cell gets a CONSERVATIVE lat/lon bounding box (boundary samples in ST
+space, padded by a bound on the inter-sample bulge; pole-containing and
+antimeridian-spanning cells widen to full longitude). A per-region
+classifier labels each bbox, and the BFS acts on the label:
+  bbox misses the region   -> prune (safe: bbox ⊇ cell),
+  bbox inside the region   -> emit at this level (cell ⊆ bbox ⊆ region),
   at max_level             -> emit,
-  otherwise                -> recurse into the 4 children.
-Any point of the rect lies in exactly one level-`max_level` cell, whose
-ancestor chain always intersects the rect, so some ancestor is emitted:
-superset guaranteed.
+  otherwise (boundary)     -> recurse into the 4 children.
+Any point of the region lies in exactly one level-`max_level` cell, whose
+ancestors' bboxes all contain that point, so none is pruned and some
+ancestor is emitted: superset guaranteed. The coverers differ only in
+their classifier: :func:`latlng_rect_covering`, :func:`polygon_covering`
+and :func:`cap_covering`.
 
 Runs on the driver: coverings are tiny (hundreds of cells) next to the
 pages table; they broadcast into the join.
@@ -124,6 +127,38 @@ def _children(ids: np.ndarray) -> np.ndarray:
     ).ravel().view(np.uint64)
 
 
+_FACES = (np.arange(6, dtype=np.uint64) << np.uint64(61)) | (np.uint64(1) << np.uint64(60))
+
+
+def _cover(classify, max_level: int, min_emit_level: int | None) -> np.ndarray:
+    """The one BFS every coverer runs, from the 6 face cells down.
+
+    ``classify`` maps the frontier's :func:`cell_latlng_bbox` columns to
+    ``(keep, inside)`` masks: ``keep`` is False only where the whole bbox
+    (hence the cell) misses the region, and ``inside`` (a subset of
+    ``keep``) where the whole bbox lies in it. An inside cell is emitted
+    once it is at least ``min_emit_level`` deep; every kept cell is
+    emitted at ``max_level``; any other kept cell recurses into its 4
+    children. ``min_emit_level`` bounds the single-level equi-join
+    normalization's expansion to 4^(max_level-min_emit_level) per cell;
+    it defaults to ``max_level - 4``.
+    """
+    if min_emit_level is None:
+        min_emit_level = max(0, max_level - 4)
+    frontier = _FACES
+    out: list[np.ndarray] = []
+    for level in range(0, max_level + 1):
+        if frontier.size == 0:
+            break
+        keep, inside = classify(*cell_latlng_bbox(frontier))
+        emit = keep & ((inside & (level >= min_emit_level)) | (level == max_level))
+        if emit.any():
+            out.append(frontier[emit])
+        expand = keep & ~emit
+        frontier = _children(frontier[expand]) if expand.any() else np.empty(0, dtype=np.uint64)
+    return np.concatenate(out) if out else np.empty(0, dtype=np.uint64)
+
+
 def latlng_rect_covering(
     lat_lo: float,
     lat_hi: float,
@@ -132,22 +167,10 @@ def latlng_rect_covering(
     max_level: int = 10,
     min_emit_level: int | None = None,
 ) -> np.ndarray:
-    """Cells (uint64, mixed levels) whose union covers the rectangle.
+    """Cells (uint64, mixed levels) whose union covers the rectangle
+    (``max_level`` and ``min_emit_level`` as in :func:`_cover`)."""
 
-    ``min_emit_level`` forces fully-inside cells to keep subdividing until
-    at least that level — used by the single-level equi-join normalization
-    to bound the descendant expansion factor to 4^(max_level-min_emit_level).
-    """
-    if min_emit_level is None:
-        min_emit_level = max(0, max_level - 4)
-    frontier = (np.arange(6, dtype=np.uint64) << np.uint64(61)) | (
-        np.uint64(1) << np.uint64(60)
-    )
-    out: list[np.ndarray] = []
-    for level in range(0, max_level + 1):
-        if frontier.size == 0:
-            break
-        c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full = cell_latlng_bbox(frontier)
+    def classify(c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full):
         lat_disjoint = (c_lat_hi < lat_lo) | (c_lat_lo > lat_hi)
         lon_disjoint = (~c_lon_full) & ((c_lon_hi < lon_lo) | (c_lon_lo > lon_hi))
         keep = ~(lat_disjoint | lon_disjoint)
@@ -159,28 +182,9 @@ def latlng_rect_covering(
             & (c_lon_lo >= lon_lo)
             & (c_lon_hi <= lon_hi)
         )
-        emit = keep & ((inside & (level >= min_emit_level)) | (level == max_level))
-        if emit.any():
-            out.append(frontier[emit])
-        expand = keep & ~emit
-        frontier = _children(frontier[expand]) if expand.any() else np.empty(0, dtype=np.uint64)
-    return np.concatenate(out) if out else np.empty(0, dtype=np.uint64)
+        return keep, inside
 
-
-def polygon_bbox_covering(
-    rings: list, max_level: int = 10, min_emit_level: int | None = None
-) -> np.ndarray:
-    """Covering of a polygon's lat/lon bounding box (rings: list of (k, 2)
-    (lat, lon) vertex arrays). A bbox covering is a superset of the polygon
-    covering, which is all candidate pruning needs — the exact ray-cast
-    stage removes the slack. :func:`polygon_covering` is the tighter
-    polygon-aware version (same superset guarantee, fewer cells)."""
-    vs = np.concatenate([np.asarray(r, dtype=np.float64) for r in rings])
-    return latlng_rect_covering(
-        float(vs[:, 0].min()), float(vs[:, 0].max()),
-        float(vs[:, 1].min()), float(vs[:, 1].max()),
-        max_level=max_level, min_emit_level=min_emit_level,
-    )
+    return _cover(classify, max_level, min_emit_level)
 
 
 def _edges_intersect_boxes(
@@ -196,7 +200,6 @@ def _edges_intersect_boxes(
     strictly on one side of the line => no crossing)."""
     hit = np.zeros(lat_lo.shape, dtype=bool)
     for ring in rings:
-        k = len(ring)
         y1 = ring[:, 0][None, :]
         x1 = ring[:, 1][None, :]
         y2 = np.roll(ring[:, 0], -1)[None, :]
@@ -222,13 +225,13 @@ def _edges_intersect_boxes(
             all_pos &= f > 0
             all_neg &= f < 0
         hit |= (bb & ~(all_pos | all_neg)).any(axis=1)
-        del k
     return hit
 
 
 def _points_in_polygon(rings: list[np.ndarray], lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
-    """Even-odd ray cast across all rings (holes flip parity) — the same
-    term order as containment.point_in_polygon_udf."""
+    """Even-odd ray cast across all rings (holes flip parity). The exact
+    stage of containment.point_in_polygon_udf is this function;
+    bulkcover.pip_parity_expr and the DuckDB oracle keep its term order."""
     inside = np.zeros(lat.shape, dtype=bool)
     for ring in rings:
         ry, rx = ring[:, 0], ring[:, 1]
@@ -248,9 +251,10 @@ def polygon_covering(
     rings: list, max_level: int = 10, min_emit_level: int | None = None
 ) -> np.ndarray:
     """POLYGON-AWARE covering (mixed levels): superset of the even-odd
-    region of `rings` (holes supported), tighter than the bbox covering.
+    region of `rings` (holes supported), tighter than a covering of its
+    bbox.
 
-    BFS classification per candidate cell, all via the conservative
+    Its classifier labels each candidate cell via the conservative
     lat/lng bbox (bbox ⊇ cell, so every branch is safe):
 
     * bbox disjoint from the polygon's overall bbox -> prune;
@@ -261,33 +265,22 @@ def polygon_covering(
     * an edge crosses (or the cell is pole/antimeridian `lon_full`) ->
       boundary: recurse, emit at max_level.
 
-    Superset proof as for the rect coverer: a leaf cell containing any
-    polygon point has ancestors whose bboxes all contain that point, so
-    no ancestor is ever pruned (both prune branches require the whole
-    bbox to miss the region); some ancestor is emitted. Planar lat/lon
+    Both prune branches require the whole bbox to miss the region, so the
+    superset proof of the module docstring holds. Planar lat/lon
     edge semantics; antimeridian-crossing polygons must be pre-split
     (documented engine semantic, same as the exact PIP stage)."""
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
-    if min_emit_level is None:
-        min_emit_level = max(0, max_level - 4)
     vs = np.concatenate(rings)
     p_lat_lo, p_lat_hi = float(vs[:, 0].min()), float(vs[:, 0].max())
     p_lon_lo, p_lon_hi = float(vs[:, 1].min()), float(vs[:, 1].max())
 
-    frontier = (np.arange(6, dtype=np.uint64) << np.uint64(61)) | (
-        np.uint64(1) << np.uint64(60)
-    )
-    out: list[np.ndarray] = []
-    for level in range(0, max_level + 1):
-        if frontier.size == 0:
-            break
-        c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full = cell_latlng_bbox(frontier)
+    def classify(c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full):
         lat_disjoint = (c_lat_hi < p_lat_lo) | (c_lat_lo > p_lat_hi)
         lon_disjoint = (~c_lon_full) & ((c_lon_hi < p_lon_lo) | (c_lon_lo > p_lon_hi))
         keep = ~(lat_disjoint | lon_disjoint)
 
-        boundary = np.zeros(frontier.shape, dtype=bool)
-        inside = np.zeros(frontier.shape, dtype=bool)
+        boundary = np.zeros(keep.shape, dtype=bool)
+        inside = np.zeros(keep.shape, dtype=bool)
         idx = np.nonzero(keep)[0]
         if idx.size:
             k_lon_full = c_lon_full[idx]
@@ -306,14 +299,9 @@ def polygon_covering(
                 cy = (c_lat_lo[quiet] + c_lat_hi[quiet]) / 2.0
                 cx = (c_lon_lo[quiet] + c_lon_hi[quiet]) / 2.0
                 inside[quiet] = _points_in_polygon(rings, cy, cx)
+        return keep & (boundary | inside), inside
 
-        keep = keep & (boundary | inside)
-        emit = keep & ((inside & (level >= min_emit_level)) | (level == max_level))
-        if emit.any():
-            out.append(frontier[emit])
-        expand = keep & ~emit
-        frontier = _children(frontier[expand]) if expand.any() else np.empty(0, dtype=np.uint64)
-    return np.concatenate(out) if out else np.empty(0, dtype=np.uint64)
+    return _cover(classify, max_level, min_emit_level)
 
 
 def _cap_bbox_dist_bounds(
@@ -381,9 +369,8 @@ def cap_covering(
     ``radius_deg`` degrees of arc around (q_lat, q_lon) — the candidate
     stage of the within-radius join (operators/radius.py).
 
-    Same BFS skeleton as :func:`latlng_rect_covering`, classifying each
-    candidate cell by the conservative distance bounds of its lat/lng bbox
-    (bbox ⊇ cell, so both branches are safe):
+    Its classifier labels each candidate cell by the conservative distance
+    bounds of its lat/lng bbox (bbox ⊇ cell, so both branches are safe):
 
     * bbox's LOWER distance bound > radius  -> whole cell outside -> prune;
     * bbox's UPPER distance bound <= radius -> whole cell inside  -> emit;
@@ -391,30 +378,19 @@ def cap_covering(
 
     The prune test carries a small slack so the exact haversine stage owns
     the boundary (a cell is only dropped when even its bbox clears the
-    radius by > _PRUNE_PAD); superset proof as for the rect coverer. Handles
-    poles and the antimeridian through the same ``lon_full`` widening."""
-    if min_emit_level is None:
-        min_emit_level = max(0, max_level - 4)
-    frontier = (np.arange(6, dtype=np.uint64) << np.uint64(61)) | (
-        np.uint64(1) << np.uint64(60)
-    )
+    radius by more than ``pad``); superset proof as in the module
+    docstring. Handles poles and the antimeridian through the same
+    ``lon_full`` widening."""
     pad = 1e-6  # degrees; >> any float slack in the bbox/bound math
-    out: list[np.ndarray] = []
-    for level in range(0, max_level + 1):
-        if frontier.size == 0:
-            break
-        c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full = cell_latlng_bbox(frontier)
+
+    def classify(c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full):
         d_min, d_max = _cap_bbox_dist_bounds(
             q_lat, q_lon, c_lat_lo, c_lat_hi, c_lon_lo, c_lon_hi, c_lon_full
         )
         keep = d_min <= radius_deg + pad
-        inside = keep & (d_max <= radius_deg)
-        emit = keep & ((inside & (level >= min_emit_level)) | (level == max_level))
-        if emit.any():
-            out.append(frontier[emit])
-        expand = keep & ~emit
-        frontier = _children(frontier[expand]) if expand.any() else np.empty(0, dtype=np.uint64)
-    return np.concatenate(out) if out else np.empty(0, dtype=np.uint64)
+        return keep, keep & (d_max <= radius_deg)
+
+    return _cover(classify, max_level, min_emit_level)
 
 
 def covering_to_level(ids: np.ndarray, level: int) -> np.ndarray:

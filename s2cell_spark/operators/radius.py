@@ -10,7 +10,10 @@ center. Two stages, same shape as the containment joins:
    circle (tiny, mixed levels), normalized to one level and BROADCAST —
    the pages side never shuffles, the join key is the native
    ``parent(cell_id, L)`` expression, and the whole phase is one
-   BroadcastHashJoin inside codegen (plan-pinned in tests/test_plans.py);
+   BroadcastHashJoin inside codegen (plan-pinned in tests/test_plans.py).
+   All circles share that one level, so there is one candidate path: the
+   mixed-level range stab (``containment_join_range``) returns the same
+   rows and is not used here;
 2. exact verify: native haversine, compared on the repo-wide 1e-7-deg
    fixed-point grid (CLAUDE.md invariant) so membership at the circle
    boundary is decided identically by the engine and the DuckDB oracle
@@ -31,10 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s2cell_spark.operators import covering as COV
-from s2cell_spark.operators.containment import (
-    containment_join_equi,
-    containment_join_range,
-)
+from s2cell_spark.operators.containment import containment_join_equi
 from s2cell_spark.operators.knn import haversine_deg, dist_rank_key
 
 # Circles: dict circle_id -> (lat, lon, radius_deg)
@@ -70,36 +70,16 @@ def within_radius_join(
     circles: Circles,
     level: int | None = None,
     cell_col: str = "cell_id",
-    strategy: str = "equi",
 ) -> DataFrame:
     """Pages within each circle: pages columns + ``circle_id`` +
     ``dist_fp`` (1e-7-deg fixed-point distance to that circle's center).
 
-    A page inside k overlapping circles emits k rows. The exact stage is a
-    single CASE chain over the (few) circles — all native exprs, no second
-    join and no Python in the plan (equi strategy).
-
-    ``strategy='equi'`` (default) normalizes every cap covering to ONE
-    shared level and broadcast-equi-joins — the all-codegen path, but the
-    single level is a compromise when radii span orders of magnitude
-    (:func:`suggest_cap_level` takes the coarse end to bound the
-    broadcast). ``strategy='range'`` keeps each circle's covering
-    MIXED-LEVEL at its own granularity and goes through the sorted-range
-    searchsorted join (`containment_join_range`) — tighter pruning per
-    circle at the cost of the Arrow stab stage; row-identical output
-    (tested)."""
-    if strategy == "range":
-        regions = {
-            cid: COV.cap_covering(
-                la, lo, r,
-                max_level=suggest_cap_level({cid: (la, lo, r)}),
-            )
-            for cid, (la, lo, r) in circles.items()
-        }
-        joined = containment_join_range(
-            pages, regions, cell_col=cell_col
-        ).withColumnRenamed("region_id", "circle_id")
-        return _exact_radius_filter(joined, circles)
+    A page inside k overlapping circles emits k rows. Every cap covering
+    is normalized to ONE shared ``level`` (default
+    :func:`suggest_cap_level`, which takes the coarse end when radii span
+    orders of magnitude, to bound the broadcast) and broadcast-equi-joined.
+    The exact stage is a single CASE chain over the (few) circles — all
+    native exprs, no second join and no Python in the plan."""
     if level is None:
         level = suggest_cap_level(circles)
     regions = {

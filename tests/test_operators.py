@@ -1,4 +1,4 @@
-"""Operator-level tests: salting identity, polygon PIP vs numpy oracle,
+"""Operator-level tests: hot-cell equi join, polygon PIP vs numpy oracle,
 covering superset property, MinHash recall, checkpoint resume (t4),
 streaming-vs-batch equivalence, multimodal determinism."""
 
@@ -28,19 +28,9 @@ def _regions():
     }
 
 
-def test_salted_join_row_identical(spark, pages):
-    """Hot-cell salting must not change the join output (SURVEY §7)."""
-    regions = _regions()
-    plain = CJ.containment_join_equi(pages, spark, regions, level=10)
-    salted = CJ.containment_join_salted(pages, spark, regions, level=10, num_salts=8)
-    a = {(r["region_id"], r["doc_id"]) for r in plain.select("region_id", "doc_id").collect()}
-    b = {(r["region_id"], r["doc_id"]) for r in salted.select("region_id", "doc_id").collect()}
-    assert a == b and len(a) > 0
-
-
-def test_salted_join_pathological_single_cell(spark):
-    """All rows in ONE covering cell (the worst skew case): salted output
-    still identical to unsalted."""
+def test_equi_join_hot_single_cell_keeps_every_row(spark):
+    """All rows in ONE covering cell (the worst skew case): the equi join
+    keeps every one of them."""
     pdf = pd.DataFrame(
         {
             "doc_id": np.arange(500),
@@ -54,9 +44,7 @@ def test_salted_join_pathological_single_cell(spark):
 
     df = df.withColumn("cell_id", S2F.lat_lon_to_cell_id(F.col("lat"), F.col("lon"), 30))
     regions = {7: COV.latlng_rect_covering(40.0, 41.0, -75.0, -73.0, max_level=8)}
-    plain = CJ.containment_join_equi(df, spark, regions, level=8)
-    salted = CJ.containment_join_salted(df, spark, regions, level=8, num_salts=16)
-    assert plain.count() == 500 and salted.count() == 500
+    assert CJ.containment_join_equi(df, spark, regions, level=8).count() == 500
 
 
 def test_range_join_matches_equi(spark, pages):
@@ -151,7 +139,7 @@ def test_polygon_covering_superset_and_tighter():
     import __spark_entry__ as E
     from s2cell_spark.operators.covering import (
         _points_in_polygon,
-        polygon_bbox_covering,
+        latlng_rect_covering,
         polygon_covering,
     )
 
@@ -185,8 +173,10 @@ def test_polygon_covering_superset_and_tighter():
         return int((4 ** (10 - lvl)).sum())
 
     concave = [np.asarray(r, dtype=float) for r in E.PIP_POLYGONS[0]]
+    vs = np.concatenate(concave)
+    bbox = (vs[:, 0].min(), vs[:, 0].max(), vs[:, 1].min(), vs[:, 1].max())
     assert exp10(polygon_covering(concave, max_level=10)) < 0.6 * exp10(
-        polygon_bbox_covering(concave, max_level=10)
+        latlng_rect_covering(*bbox, max_level=10)
     )
 
 
@@ -1579,24 +1569,6 @@ def test_difference_cell_unions_matches_interval_oracle(spark):
         iv = leaf_intervals(norm)
         iv = iv[np.argsort(iv[:, 0], kind="stable")]
         assert (iv[1:, 0] >= iv[:-1, 1]).all()
-
-
-def test_within_radius_range_strategy_row_identical(spark):
-    """Mixed-level range strategy == equi strategy output, on circles
-    with radii spanning 30x (where the shared equi level is coarsest)."""
-    from s2cell_spark.operators.radius import within_radius_join
-
-    circles = {0: (40.75, -74.0, 0.5), 1: (-33.87, 18.42, 15.0), 2: (48.85, 2.35, 2.0)}
-    pages = with_cell_id(load_pages(spark, SF_SMOKE))
-    a = {
-        (r["circle_id"], r["doc_id"], r["dist_fp"])
-        for r in within_radius_join(pages, spark, circles).collect()
-    }
-    b = {
-        (r["circle_id"], r["doc_id"], r["dist_fp"])
-        for r in within_radius_join(pages, spark, circles, strategy="range").collect()
-    }
-    assert a == b and len(a) > 0
 
 
 def test_streaming_interval_alerts_match_batch(spark, tmp_path):

@@ -38,12 +38,6 @@ def test_containment_equi_broadcasts_pages_never_shuffle(spark, entry):
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_salted_join_still_broadcast(spark, entry):
-    plan = _plan(entry._q_pip("salted")(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_exact_filter_sits_below_encode_udf(spark, entry):
     """The rect predicate must run BEFORE the (expensive) encode UDF output
     is joined — i.e. a Filter node carrying the rect bounds appears BELOW
@@ -295,7 +289,7 @@ def test_asof_join_is_union_window_not_nested_loop(spark, entry):
 def test_within_radius_broadcasts_cap_covering_pages_never_shuffle(spark, entry):
     """The radius join is the containment-join cost model: covering dim
     broadcast, exact haversine native, pages side never exchanged."""
-    plan = _plan(entry._q_within_radius("equi")(spark, SF))
+    plan = _plan(entry._q_within_radius(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan

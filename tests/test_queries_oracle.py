@@ -23,7 +23,7 @@ QUERIES = E.queries()
 MIN_ROWS = {
     "s2_bitops": 400,
     "cell_decode": 400,
-    "pip_boxes": 150,  # 3 row-identical variant arms x ~50
+    "pip_boxes": 150,  # 2 row-identical variant arms (equi, range) x ~87
     "pip_polygons": 250,  # fixture (~52) + bulk 120-polygon (~560) arms
     "knn_pages": 30,
     "knn_join_bulk": 20,
@@ -50,7 +50,7 @@ MIN_ROWS = {
     "cosine_near_dups": 40,
     "sql_api": 400,
     "token_count": 400,
-    "within_radius": 120,  # equi + range arms
+    "within_radius": 120,  # one equi query, ~131 rows
     "cell_union_normalize": 130,
     "cell_union_setalg": 430,  # intersect (~150) + difference (~280) arms
     "events_bloom_join": 110,
