@@ -11,9 +11,7 @@ center. Two stages, same shape as the containment joins:
    the pages side never shuffles, the join key is the native
    ``parent(cell_id, L)`` expression, and the whole phase is one
    BroadcastHashJoin inside codegen (plan-pinned in tests/test_plans.py).
-   All circles share that one level, so there is one candidate path: the
-   mixed-level range stab (``containment_join_range``) returns the same
-   rows and is not used here;
+   All circles share that one level, so this is the only candidate path;
 2. exact verify: native haversine, compared on the repo-wide 1e-7-deg
    fixed-point grid (CLAUDE.md invariant) so membership at the circle
    boundary is decided identically by the engine and the DuckDB oracle
