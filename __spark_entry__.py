@@ -234,22 +234,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-def _q_pip(strategy: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from s2cell_spark.operators import containment as CJ
+def _q_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pages inside the PIP boxes: broadcast single-level containment join
+    + exact rectangle test."""
+    from s2cell_spark.operators.containment import containment_join_equi
 
-        pages = _pages_with_cells(spark, sf_dir)
-        regions = _box_regions()
-        if strategy == "equi":
-            joined = CJ.containment_join_equi(pages, spark, regions, level=10)
-        else:
-            joined = CJ.containment_join_range(pages, regions)
-        return _exact_box_filter(joined).select(
-            F.col("region_id").cast("long").alias("region_id"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-        )
-
-    return run
+    pages = _pages_with_cells(spark, sf_dir)
+    joined = containment_join_equi(pages, spark, _box_regions(), level=10)
+    return _exact_box_filter(joined).select(
+        F.col("region_id").cast("long").alias("region_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+    )
 
 
 def _union_variants(parts: "dict[str, DataFrame]") -> DataFrame:
@@ -266,15 +261,6 @@ def _union_variants(parts: "dict[str, DataFrame]") -> DataFrame:
         t = df.select(F.lit(name).alias("variant"), *df.columns)
         out = t if out is None else out.unionByName(t)
     return out
-
-
-def _q_pip_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both containment-join strategies — broadcast single-level equi and
-    mixed-level sorted-range stab — over the same boxes; one row-identical
-    arm per ``variant`` tag."""
-    return _union_variants(
-        {s: _q_pip(s)(spark, sf_dir) for s in ("equi", "range")}
-    )
 
 
 def _q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,7 +1967,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s2_bitops": _q_bitops,
         "cell_decode": _q_cell_decode,
         "events_window_1h": _q_events_window,
-        "pip_boxes": _q_pip_all,
+        "pip_boxes": _q_pip,
         "pip_polygons": _q_pip_polygons_all,
         "knn_pages": _q_knn,
         "knn_join_bulk": _q_knn_join,
@@ -3132,12 +3118,11 @@ FROM documents
 
 
 def oracle_sql() -> dict[str, str]:
-    pip = _pip_oracle()
     return {
         "s2_bitops": _bitops_oracle(),
         "cell_decode": _cell_decode_oracle(),
         "events_window_1h": _events_window_oracle(),
-        "pip_boxes": _variant_oracle({"equi": pip, "range": pip}),
+        "pip_boxes": _pip_oracle(),
         "pip_polygons": _variant_oracle(
             {
                 "fixture": _pip_polygons_oracle(),

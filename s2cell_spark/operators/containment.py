@@ -2,34 +2,26 @@
 
 Hierarchy containment is a pure uint64 range test (SURVEY.md §1.1): a cell
 ``c`` contains leaf ``d`` iff ``range_min(c) <= d <= range_max(c)``,
-equivalently ``parent(d, level(c)) == c``. Two join strategies:
-
-1. :func:`containment_join_equi` — normalize the covering to ONE level and
-   broadcast-hash-equi-join on ``parent(page_cell, L)``. Single scan of the
-   pages side, no shuffle of it (broadcast), Catalyst-native. Default.
-2. :func:`containment_join_range` — mixed-level coverings without
-   expansion: broadcast the sorted ``[range_min, range_max]`` sortable
-   intervals and binary-search each Arrow batch (`mapInArrow` +
-   np.searchsorted). Avoids the O(n·m) BroadcastNestedLoopJoin Spark would
-   pick for a non-equi range condition.
+equivalently ``parent(d, level(c)) == c``. One join strategy,
+:func:`containment_join_equi`: normalize the covering to ONE level and
+broadcast-hash-equi-join on ``parent(page_cell, L)``. Single scan of the
+pages side, no shuffle of it (broadcast), Catalyst-native, no Python
+stage. A null page cell equals no covering key, so it joins nothing
+(inner) or stays untagged (left).
 
 A hot covering cell (a city) needs no salting: the broadcast join never
 shuffles the pages side, so no task receives a cell's pages as a group.
 
-At 100 TB the pages side never shuffles in either strategy — coverings are
-broadcast — and the pages scan prunes to (cell_id / lat / lon / carried
-columns) only.
+At 100 TB the pages side never shuffles — coverings are broadcast — and
+the pages scan prunes to (cell_id / lat / lon / carried columns) only.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
@@ -62,8 +54,9 @@ def coverings_df(
 def normalized_coverings_df(
     spark: SparkSession, regions: dict[int, np.ndarray], level: int
 ) -> DataFrame:
-    """(region_id, cov_cell) at a single level — the broadcast side of the
-    equi strategy. Build once per query; reusable across executions.
+    """(region_id, cov_cell) at a single level — the broadcast side of
+    :func:`containment_join_equi`. Build once per query; reusable across
+    executions.
 
     Only the (small) mixed-level covering ships driver->JVM; the
     single-level expansion is :func:`normalize_covering_df` (fully
@@ -145,86 +138,6 @@ def containment_join_equi(
         on=key == F.col("cov_cell"),
         how=how,
     ).drop("cov_cell")
-
-
-def containment_join_range(
-    pages: DataFrame,
-    regions: dict[int, np.ndarray],
-    cell_col: str = "cell_id",
-) -> DataFrame:
-    """Mixed-level containment via broadcast sorted ranges + searchsorted.
-
-    Builds the flattened (region_id, sortable_min, sortable_max) interval
-    table once on the driver (coverings are tiny), ships it in the UDF
-    closure, and stabs each Arrow batch with two binary searches. Because a
-    covering's cells are disjoint, intervals never nest across one region;
-    intervals from DIFFERENT regions may overlap, so the stab walks the
-    (few) candidate intervals via searchsorted bounds per batch.
-
-    Output: pages columns + region_id (pages matching k regions emit k rows).
-    """
-    rids, los, his = [], [], []
-    for rid, cells in regions.items():
-        lo = K.cell_id_range_min(cells) ^ np.uint64(1 << 63)
-        hi = K.cell_id_range_max(cells) ^ np.uint64(1 << 63)
-        rids.append(np.full(cells.shape, rid, dtype=np.int64))
-        los.append(lo.view(np.int64))
-        his.append(hi.view(np.int64))
-    rid_arr = np.concatenate(rids)
-    lo_arr = np.concatenate(los)
-    hi_arr = np.concatenate(his)
-    order = np.argsort(lo_arr, kind="stable")
-    rid_arr, lo_arr, hi_arr = rid_arr[order], lo_arr[order], hi_arr[order]
-    # prefix max of hi: lets the scan-back stop as soon as nothing further
-    # left can still cover the probe (intervals are sorted by lo)
-    max_hi_prefix = np.maximum.accumulate(hi_arr)
-
-    schema = StructType(
-        list(pages.schema.fields) + [StructField("region_id", LongType(), False)]
-    )
-
-    # Null cells can't be contained anywhere. They arrive in each Arrow
-    # batch as the validity bitmap and are masked out of the stab in
-    # numpy, NOT dropped by a plan-level filter: a Filter on `cell_col`
-    # would be pushed through whatever projection stack produced it, and
-    # pushdown SUBSTITUTES aliases into the condition — through the
-    # native encode stack (functions/native_encode) that expansion is
-    # multiplicative and planning OOMs (the CLAUDE.md native-cell
-    # filter-pushdown trap). The surviving IDs are read as int64 straight
-    # off the Arrow buffer, so a null never costs a neighbour its bits.
-
-    def stab(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cells, valid = arrow_to_numpy(batch.column(cell_col), np.int64)
-            sortable = (cells.view(np.uint64) ^ np.uint64(1 << 63)).view(np.int64)
-            # a null lane starts at position 0: nothing left of it to stab
-            pos = np.where(
-                valid, np.searchsorted(lo_arr, sortable, side="right"), 0
-            )
-            out_rows = []
-            out_rids = []
-            w = 1
-            while True:
-                idx = pos - w
-                idxc = np.clip(idx, 0, None)
-                # a lane stays live while some interval at or left of idx
-                # could still reach the probe (per-region disjointness keeps
-                # the true overlap depth ~ number of regions)
-                live = (idx >= 0) & (max_hi_prefix[idxc] >= sortable)
-                if not live.any():
-                    break
-                hit = live & (sortable <= hi_arr[idxc]) & (sortable >= lo_arr[idxc])
-                if hit.any():
-                    out_rows.append(np.nonzero(hit)[0])
-                    out_rids.append(rid_arr[idxc[hit]])
-                w += 1
-            if not out_rows:
-                continue
-            yield batch.take(np.concatenate(out_rows)).append_column(
-                "region_id", numpy_to_arrow(np.concatenate(out_rids))
-            )
-
-    return pages.mapInArrow(stab, schema=schema)
 
 
 def rect_regions(boxes) -> dict[int, np.ndarray]:

@@ -53,20 +53,6 @@ def shingles_from_words(ws, n: int = 3):
     return out
 
 
-def shingles_col(text=None, n: int = 3):
-    """Array of n-word shingles (space-joined), the near-dup unit.
-
-    Word-level Jaccard saturates on small vocabularies (any two long docs
-    share most WORDS); n-gram shingles keep the signal discriminative.
-    DuckDB mirror: ``list_transform(range(1, len(ws)-1), i ->
-    ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])``.
-
-    NB inline use re-splits per element (see shingles_from_words) — fine
-    for one-off column math, wrong inside hot per-doc pipelines; the
-    operators below stage the words array in a projection first."""
-    return shingles_from_words(words_col(text), n)
-
-
 def ensure_split(df: DataFrame) -> DataFrame:
     """Repartition to full parallelism when the source is under-split (a
     single-row-group parquet file otherwise serializes all per-row work

@@ -9,12 +9,14 @@ constants:
    hash join per round — until every query holds >= k candidates. The
    driver loop only ever collects per-query COUNTS (tiny aggregates).
 2. **Radius verification**: take each query's kth-smallest candidate
-   distance d_k, cover the great-circle cap of radius d_k with a lat/lon
-   bbox (meridian-convergence-aware), COVER the bbox with S2 cells, and
-   re-query via a containment join + exact bbox filter + haversine
-   re-rank. Any true neighbor lies within d_k of the query, hence inside
-   the cap, hence the bbox, hence the covering — so the final top-k is
-   exact even if phase 1's rings were too coarse.
+   distance d_k and re-query every page within d_k (plus one 1e-7-deg
+   rank bucket of pad) of the query with
+   :func:`~s2cell_spark.operators.radius.within_radius_join` — the cap
+   covering, the one-level broadcast equi join and the fixed-point
+   haversine filter that the ``within_radius`` oracle already checks —
+   then rank on the distance that join computes. Any true neighbor lies
+   within d_k of the query, hence inside the cap, hence the covering — so
+   the final top-k is exact even if phase 1's rings were too coarse.
 
 Scan hygiene at 100 TB (the properties a 1000-executor run needs):
 
@@ -24,9 +26,10 @@ Scan hygiene at 100 TB (the properties a 1000-executor run needs):
 * The initial ring count is DENSITY-SEEDED (expected candidates per ring
   set from the global page count), so the typical query needs one round,
   not O(log r) doubling rounds from r=1.
-* Phase 2 is a cell-covering containment join (equi/interval — never the
-  BroadcastNestedLoopJoin Spark plans for a raw non-equi bbox predicate,
-  which would be O(pages x queries)); asserted in tests/test_plans.py.
+* Phase 2 is a cell-covering broadcast equi join — never the
+  BroadcastNestedLoopJoin Spark plans for a raw non-equi distance
+  predicate, which would be O(pages x queries) — and runs no Python
+  stage; both asserted in tests/test_plans.py.
 
 Distances use the haversine great-circle formula on a unit sphere
 (returned in degrees of arc) — matching the DuckDB oracle expression
@@ -123,16 +126,6 @@ def _seed_rings(n_pages: int, level: int, k: int) -> int:
         return 16
     r = math.ceil((math.sqrt(2.0 * k / density) - 1.0) / 2.0)
     return max(1, min(16, int(r)))
-
-
-def _bbox_covering_level(lat_span: float, lon_span: float, max_level: int = 12) -> int:
-    """Covering granularity matched to the bbox size: ~8-64 cells per
-    side (level where the cell edge is ~1/8 the span), so the covering
-    stays small for the broadcast regardless of how tiny or global the
-    verified radius turned out. Any level is CORRECT (covering is a
-    superset); this only tunes pruning vs covering size."""
-    span = max(lat_span, lon_span, 1e-9)
-    return max(0, min(max_level, int(math.log2(max(90.0 / span, 1.0))) + 3))
 
 
 # Lower bound on the min width of ANY level-L S2 cell: deriv * 2^-L
@@ -254,7 +247,11 @@ def knn(
 
     Returns (query_id, doc_id, dist_deg, rank) with rank 1..k ordered by
     (distance, doc_id). `level` tunes ring granularity only — correctness
-    never depends on it thanks to the phase-2 radius verification.
+    never depends on it thanks to the phase-2 radius verification, which
+    is one :func:`~s2cell_spark.operators.radius.within_radius_join` over
+    all queries. Like that join, the batch shares one covering level, so
+    queries whose verified radii span orders of magnitude are covered at
+    the coarse end.
 
     The narrow (id, lat, lon, cell) projection is persisted for the
     duration of the search (it backs the lazily-returned result too);
@@ -269,7 +266,7 @@ def knn(
     and rank within buckets — a different operator with different
     exactness tradeoffs, deliberately not bolted onto this one.
     """
-    from s2cell_spark.operators.containment import containment_join_range
+    from s2cell_spark.operators.radius import within_radius_join
 
     q_df = arrow_frame(
         spark,
@@ -315,8 +312,12 @@ def knn(
 
     # ---- phase 2: verified-radius re-query --------------------------------
     dist = haversine_deg(F.col("q_lat"), F.col("q_lon"), F.col("lat"), F.col("lon"))
-    cand = cand.join(F.broadcast(q_df), on="query_id").withColumn("dist_deg", dist)
-    w = Window.partitionBy("query_id").orderBy(dist_rank_key(F.col("dist_deg")), F.col(id_col))
+    cand = (
+        cand.join(F.broadcast(q_df), on="query_id")
+        .withColumn("dist_deg", dist)
+        .withColumn("dist_fp", dist_rank_key(F.col("dist_deg")))
+    )
+    w = Window.partitionBy("query_id").orderBy("dist_fp", id_col)
     dk = (
         cand.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == k)
@@ -325,61 +326,17 @@ def knn(
     )
     d_k = {r["query_id"]: r["d_k"] for r in dk}
 
-    # cap -> conservative lat/lon bbox; meridians converge by 1/cos(lat)
-    verify_rows = []
-    for qid, qlat, qlon in queries:
-        r = d_k.get(qid)
-        if r is None:
-            # fewer than k pages exist globally; keep everything
-            verify_rows.append((qid, -90.0, 90.0, -180.0, 180.0))
-            continue
-        # pad must exceed one 1e-7-deg rank-quantization bucket: a row that
-        # ties d_k's bucket (true dist up to d_k + 1e-7) can still rank <= k
-        r_pad = r * 1.0000001 + 2e-7
-        lat_lo, lat_hi = qlat - r_pad, qlat + r_pad
-        max_abs = min(89.9999, max(abs(lat_lo), abs(lat_hi)))
-        if lat_lo <= -89.0 or lat_hi >= 89.0:
-            lon_lo, lon_hi = -180.0, 180.0
-        else:
-            dl = r_pad / math.cos(math.radians(max_abs))
-            lon_lo, lon_hi = qlon - dl, qlon + dl
-        if lon_lo < -180.0 or lon_hi > 180.0:
-            lon_lo, lon_hi = -180.0, 180.0
-        verify_rows.append((qid, max(-90.0, lat_lo), min(90.0, lat_hi), lon_lo, lon_hi))
-
-    # bbox -> mixed-level cell covering per query; ONE interval containment
-    # join stabs all queries' coverings in a single pass over the cached
-    # narrow projection (broadcast intervals + searchsorted — an equi-class
-    # plan, never the O(pages x queries) BroadcastNestedLoopJoin a raw
-    # non-equi bbox join would become).
-    from s2cell_spark.operators.covering import latlng_rect_covering
-
-    regions = {
-        qid: latlng_rect_covering(
-            lat_lo, lat_hi, lon_lo, lon_hi,
-            max_level=_bbox_covering_level(lat_hi - lat_lo, lon_hi - lon_lo),
-        )
-        for qid, lat_lo, lat_hi, lon_lo, lon_hi in verify_rows
+    # pad must exceed one 1e-7-deg rank-quantization bucket: a row that
+    # ties d_k's bucket (true dist up to d_k + 1e-7) can still rank <= k.
+    # No d_k means fewer than k pages exist globally: keep the whole sphere.
+    circles = {
+        qid: (qlat, qlon, 180.0 if qid not in d_k else d_k[qid] * 1.0000001 + 2e-7)
+        for qid, qlat, qlon in queries
     }
-    covered = containment_join_range(narrow, regions, cell_col=cell_col)
-    boxes = arrow_frame(
-        spark,
-        verify_rows,
-        "region_id long, lat_lo double, lat_hi double, lon_lo double, lon_hi double",
-    ).join(q_df.withColumnRenamed("query_id", "region_id"), on="region_id")
-    final = (
-        covered.join(F.broadcast(boxes), on="region_id", how="inner")
-        .filter(
-            (F.col("lat") >= F.col("lat_lo"))
-            & (F.col("lat") <= F.col("lat_hi"))
-            & (F.col("lon") >= F.col("lon_lo"))
-            & (F.col("lon") <= F.col("lon_hi"))
-        )
-        .withColumnRenamed("region_id", "query_id")
-        .withColumn("dist_deg", dist)
-    )
+    final = within_radius_join(narrow, spark, circles, cell_col=cell_col)
     return (
-        final.withColumn("rank", F.row_number().over(w))
+        final.withColumnRenamed("circle_id", "query_id")
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", id_col, "dist_deg", "rank")
     )

@@ -95,9 +95,9 @@ def deterministic_features_batch(payloads: list[bytes], dim: int = 16) -> np.nda
     """Vectorized deterministic fake featurizer: sha256(payload) ->
     (n, dim) float64 in [0, 1). The only per-row Python is the sha256
     call itself (hashlib, C); digest-byte tiling, the uint64 view, and
-    the float scaling run as whole-batch numpy. Byte-identical to the
-    scalar definition: digest repeated to dim*8 bytes, little-endian
-    uint64 lanes, top-53-bit mantissa scaling."""
+    the float scaling run as whole-batch numpy. Each row: digest
+    repeated to dim*8 bytes, little-endian uint64 lanes, top-53-bit
+    mantissa scaling."""
     n = len(payloads)
     dig = np.frombuffer(
         b"".join(hashlib.sha256(p).digest() for p in payloads), dtype=np.uint8
@@ -106,12 +106,6 @@ def deterministic_features_batch(payloads: list[bytes], dim: int = 16) -> np.nda
     raw = np.ascontiguousarray(np.tile(dig, (1, reps))[:, : dim * 8])
     ints = raw.view(np.uint64).reshape(n, dim)
     return (ints >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-
-
-def deterministic_feature(payload: bytes, dim: int = 16) -> np.ndarray:
-    """Scalar convenience wrapper over :func:`deterministic_features_batch`
-    (kept for tests/one-off use; the batch form is the hot path)."""
-    return deterministic_features_batch([payload], dim)[0]
 
 
 def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:

@@ -12,10 +12,14 @@ center. Two stages, same shape as the containment joins:
    ``parent(cell_id, L)`` expression, and the whole phase is one
    BroadcastHashJoin inside codegen (plan-pinned in tests/test_plans.py).
    All circles share that one level, so this is the only candidate path;
-2. exact verify: native haversine, compared on the repo-wide 1e-7-deg
-   fixed-point grid (CLAUDE.md invariant) so membership at the circle
-   boundary is decided identically by the engine and the DuckDB oracle
-   despite asin ulp differences.
+2. exact verify: one broadcast join of the (tiny) circles table
+   ``(circle_id, c_lat, c_lon, r_fp)`` on ``circle_id``, then native
+   haversine compared on the repo-wide 1e-7-deg fixed-point grid
+   (CLAUDE.md invariant) so membership at the circle boundary is decided
+   identically by the engine and the DuckDB oracle despite asin ulp
+   differences. A join, not a per-circle expression, so a batch of 10^3
+   circles (kNN's verified radii, operators/knn.py) stays one small
+   broadcast.
 
 At 100 TB this is the same cost model as ``containment_join_equi``: one
 narrow scan of pages, zero pages-side shuffle, per-row work is a codegen
@@ -26,11 +30,11 @@ survivors.
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators import covering as COV
 from s2cell_spark.operators.containment import containment_join_equi
 from s2cell_spark.operators.knn import haversine_deg, dist_rank_key
@@ -43,7 +47,8 @@ def radius_fp(radius_deg: float) -> int:
     """The circle radius on the 1e-7-deg fixed-point grid — computed ONCE
     in Python and embedded as the same integer literal on both the engine
     and oracle sides, so the boundary comparison never does cross-engine
-    float arithmetic (same pattern as knn's ``_knnj_safe_fp``)."""
+    float arithmetic (same pattern as ``_knnj_safe_fp`` in the query driver,
+    ``__spark_entry__.py``)."""
     return int(math.floor(radius_deg * 1.0e7 + 0.5))
 
 
@@ -70,14 +75,15 @@ def within_radius_join(
     cell_col: str = "cell_id",
 ) -> DataFrame:
     """Pages within each circle: pages columns + ``circle_id`` +
-    ``dist_fp`` (1e-7-deg fixed-point distance to that circle's center).
+    ``dist_deg`` (haversine degrees of arc to that circle's center) +
+    ``dist_fp`` (the same distance on the 1e-7-deg fixed-point grid).
 
     A page inside k overlapping circles emits k rows. Every cap covering
     is normalized to ONE shared ``level`` (default
     :func:`suggest_cap_level`, which takes the coarse end when radii span
     orders of magnitude, to bound the broadcast) and broadcast-equi-joined.
-    The exact stage is a single CASE chain over the (few) circles — all
-    native exprs, no second join and no Python in the plan."""
+    The exact stage broadcast-joins the circles table on ``circle_id`` —
+    all native exprs, no Python in the plan."""
     if level is None:
         level = suggest_cap_level(circles)
     regions = {
@@ -87,27 +93,16 @@ def within_radius_join(
     joined = containment_join_equi(
         pages, spark, regions, level=level, cell_col=cell_col
     ).withColumnRenamed("region_id", "circle_id")
-    return _exact_radius_filter(joined, circles)
-
-
-def _exact_radius_filter(joined: DataFrame, circles: Circles) -> DataFrame:
-    cid_col = F.col("circle_id")
-    q_lat = reduce(
-        lambda acc, kv: acc.when(cid_col == kv[0], F.lit(float(kv[1][0]))),
-        circles.items(),
-        F.when(F.lit(False), F.lit(0.0)),
+    centers = arrow_frame(
+        spark,
+        [(cid, float(la), float(lo), radius_fp(r)) for cid, (la, lo, r) in circles.items()],
+        "circle_id long, c_lat double, c_lon double, r_fp long",
     )
-    q_lon = reduce(
-        lambda acc, kv: acc.when(cid_col == kv[0], F.lit(float(kv[1][1]))),
-        circles.items(),
-        F.when(F.lit(False), F.lit(0.0)),
-    )
-    r_fp = reduce(
-        lambda acc, kv: acc.when(cid_col == kv[0], F.lit(radius_fp(kv[1][2]))),
-        circles.items(),
-        F.when(F.lit(False), F.lit(0)),
-    )
-    dist = haversine_deg(q_lat, q_lon, F.col("lat"), F.col("lon"))
-    return joined.withColumn("dist_fp", dist_rank_key(dist)).filter(
-        F.col("dist_fp") <= r_fp.cast("long")
+    dist = haversine_deg(F.col("c_lat"), F.col("c_lon"), F.col("lat"), F.col("lon"))
+    return (
+        joined.join(F.broadcast(centers), on="circle_id")
+        .withColumn("dist_deg", dist)
+        .withColumn("dist_fp", dist_rank_key(F.col("dist_deg")))
+        .filter(F.col("dist_fp") <= F.col("r_fp"))
+        .drop("c_lat", "c_lon", "r_fp")
     )

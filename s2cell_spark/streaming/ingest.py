@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from s2cell_spark import functions as S2F
+from s2cell_spark.operators.containment import containment_join_equi
 
 
 def streaming_cell_counts(
@@ -60,13 +61,12 @@ def streaming_containment_counts(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Windowed per-REGION page counts over a stream: encode each page's
-    cell in-stream (r5: the NATIVE Catalyst encode — pure exprs work in
-    any streaming mode, no Python workers per micro-batch), then
-    a STREAM-STATIC broadcast equi-join against the normalized covering
-    dim (`coverings` = the batch
-    ``containment.normalized_coverings_df(spark, regions, level)`` —
-    static, tiny, broadcast into every micro-batch), then watermarked
-    tumbling-window counts per (window, region).
+    cell in-stream, then the batch
+    :func:`~s2cell_spark.operators.containment.containment_join_equi` as a
+    STREAM-STATIC broadcast equi-join against the normalized covering dim
+    (`coverings` = ``containment.normalized_coverings_df(spark, regions,
+    level)`` — static, tiny, broadcast into every micro-batch), then
+    watermarked tumbling-window counts per (window, region).
 
     The static side never needs state: Spark re-plans the broadcast per
     micro-batch, so covering updates between restarts are picked up; the
@@ -79,10 +79,7 @@ def streaming_containment_counts(
     with_cell = pages_stream.withColumn(
         "cell_id", S2F.lat_lon_to_cell_id(F.col("lat"), F.col("lon"), 30)
     )
-    key = S2F.cell_id_to_parent_cell_id(F.col("cell_id"), level)
-    joined = with_cell.join(
-        F.broadcast(coverings), on=key == F.col("cov_cell"), how="inner"
-    )
+    joined = containment_join_equi(with_cell, coverings.sparkSession, coverings, level)
     return (
         joined.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("win"), F.col("region_id"))
@@ -166,19 +163,3 @@ def streaming_radius_alerts(pages_stream: DataFrame, spark, circles) -> DataFram
     )
     joined = within_radius_join(with_cell, spark, circles)
     return joined.select("circle_id", "url", "dist_fp")
-
-
-def streaming_interval_alerts(points_stream: DataFrame, intervals, ts_col: str,
-                              start_col: str, end_col: str, bucket_seconds: int) -> DataFrame:
-    """Stream-static point-in-interval join: streamed events matched into
-    a STATIC interval table (maintenance windows, promo periods) with the
-    identical bucketized-equi-join semantics as the batch
-    ``operators.intervaljoin.interval_join`` — the static side's bucket
-    explode re-plans per micro-batch, the streamed side adds one
-    stateless bucket column, and the exact bounds run as a native
-    post-filter. Stateless (append output); streaming==batch tested."""
-    from s2cell_spark.operators.intervaljoin import interval_join
-
-    return interval_join(
-        points_stream, intervals, ts_col, start_col, end_col, bucket_seconds
-    )

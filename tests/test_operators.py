@@ -21,6 +21,15 @@ def pages(spark):
     return with_cell_id(load_pages(spark, SF_CORRECT)).cache()
 
 
+def _haversine_deg_np(lat1, lon1, lat2, lon2):
+    """numpy twin of ``knn.haversine_deg``, term for term: degrees in,
+    degrees of arc out."""
+    sp = np.sin(np.radians(lat2 - lat1) / 2.0)
+    sl = np.sin(np.radians(lon2 - lon1) / 2.0)
+    a = sp * sp + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2)) * sl * sl
+    return np.degrees(2.0 * np.arcsin(np.sqrt(a)))
+
+
 def _regions():
     return {
         0: COV.latlng_rect_covering(39.7, 41.7, -75.0, -73.0, max_level=10, min_emit_level=6),
@@ -30,7 +39,10 @@ def _regions():
 
 def test_equi_join_hot_single_cell_keeps_every_row(spark):
     """All rows in ONE covering cell (the worst skew case): the equi join
-    keeps every one of them."""
+    keeps every one of them. A null cell sharing a batch with a leaf ID
+    above 2^53 costs the leaf none of its bits: the inner join keeps the
+    leaf's match and drops the null row; a LEFT join keeps the null row
+    untagged."""
     pdf = pd.DataFrame(
         {
             "doc_id": np.arange(500),
@@ -46,31 +58,17 @@ def test_equi_join_hot_single_cell_keeps_every_row(spark):
     regions = {7: COV.latlng_rect_covering(40.0, 41.0, -75.0, -73.0, max_level=8)}
     assert CJ.containment_join_equi(df, spark, regions, level=8).count() == 500
 
-
-def test_range_join_matches_equi(spark, pages):
-    """Mixed-level range join == single-level equi join output."""
-    regions = _regions()
-    equi = CJ.containment_join_equi(pages, spark, regions, level=10)
-    rng = CJ.containment_join_range(pages, regions)
-    a = {(r["region_id"], r["doc_id"]) for r in equi.select("region_id", "doc_id").collect()}
-    b = {(r["region_id"], r["doc_id"]) for r in rng.select("region_id", "doc_id").collect()}
-    assert a == b
-
-
-def test_range_join_null_cell_keeps_big_leaf_exact(spark):
-    """A null cell_id sharing an Arrow batch with a leaf ID above 2^53
-    must not cost that leaf its low bits: the null row is dropped and the
-    leaf still stabs the covering that holds exactly it."""
     leaf = 4611686018427400249  # odd leaf id, > 2^53
     df = spark.createDataFrame(
         [(1, leaf), (2, None)], "doc_id long, cell_id long"
     ).coalesce(1)
     regions = {9: np.array([leaf], dtype=np.int64).view(np.uint64)}
-    got = [
-        (r["doc_id"], r["region_id"])
-        for r in CJ.containment_join_range(df, regions).collect()
+    inner = CJ.containment_join_equi(df, spark, regions, level=30)
+    assert [(r["doc_id"], r["region_id"]) for r in inner.collect()] == [(1, 9)]
+    left = CJ.containment_join_equi(df, spark, regions, level=30, how="left")
+    assert sorted((r["doc_id"], r["region_id"]) for r in left.collect()) == [
+        (1, 9), (2, None)
     ]
-    assert got == [(1, 9)]
 
 
 def test_polygon_pip_vs_numpy_oracle(spark, pages):
@@ -736,12 +734,7 @@ def test_neighborhood_safe_radius_empirical():
         ok_dom = (lat2 >= -90) & (lat2 <= 90)
         lat, lon, lat2, lon2 = lat[ok_dom], lon[ok_dom], lat2[ok_dom], lon2[ok_dom]
         # keep only pairs whose true haversine distance is within the bound
-        sp = np.sin(np.radians(lat2 - lat) / 2)
-        sl = np.sin(np.radians(lon2 - lon) / 2)
-        d = np.degrees(
-            2 * np.arcsin(np.sqrt(sp * sp + np.cos(np.radians(lat)) * np.cos(np.radians(lat2)) * sl * sl))
-        )
-        m = d <= r_deg
+        m = _haversine_deg_np(lat, lon, lat2, lon2) <= r_deg
         lat, lon, lat2, lon2 = lat[m], lon[m], lat2[m], lon2[m]
         c1 = K.lat_lon_to_cell_id(lat, lon, level)
         c2 = K.lat_lon_to_cell_id(lat2, lon2, level)
@@ -819,33 +812,56 @@ def test_knn_join_truncated_flag(spark):
     assert got == exact
 
 
+def test_knn_matches_numpy_bruteforce_topk(spark, pages):
+    """Exact kNN vs a numpy brute force over every page: top-k on the
+    (1e-7-deg distance key, doc_id) order, for random queries plus pole,
+    antimeridian and cube-corner queries, one batch per k."""
+    from s2cell_spark.operators.knn import knn
+
+    rng = np.random.default_rng(8)
+    corner_lat = float(np.degrees(np.arctan(1.0 / np.sqrt(2.0))))  # 35.264..
+    pts = [(float(a), float(o)) for a, o in zip(
+        np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 40))), rng.uniform(-180.0, 180.0, 40)
+    )]
+    pts += [(89.99, 0.0), (-89.99, 120.0), (10.0, 179.999), (-20.0, -179.999)]
+    pts += [(sa * corner_lat, so) for sa in (1, -1) for so in (45.0, 135.0, -45.0, -135.0)]
+    queries = [(i, a, o) for i, (a, o) in enumerate(pts)]
+
+    pdf = pages.select("doc_id", "lat", "lon").toPandas()
+    ids, la, lo = (pdf[c].to_numpy() for c in ("doc_id", "lat", "lon"))
+    for k in (1, 20):
+        got = {
+            (r["query_id"], r["rank"]): (r["doc_id"], r["dist_deg"])
+            for r in knn(pages, spark, queries, k=k).collect()
+        }
+        want = {}
+        for qid, qlat, qlon in queries:
+            dist = _haversine_deg_np(qlat, qlon, la, lo)
+            key = np.floor(dist * 1e7 + 0.5).astype(np.int64)
+            for rank, i in enumerate(np.lexsort((ids, key))[:k], start=1):
+                want[(qid, rank)] = (int(ids[i]), float(dist[i]))
+        assert got.keys() == want.keys(), f"k={k}"
+        for key_, (doc, d) in want.items():
+            assert got[key_][0] == doc, (k, key_, got[key_], doc, d)
+            assert abs(got[key_][1] - d) <= 1e-9, (k, key_, got[key_], d)
+
+
 def test_knn_verify_covering_budget_across_radii():
     """kNN phase-2 coverings must stay broadcast-small for EVERY verified
-    radius (VERDICT r2 #8): _bbox_covering_level matches granularity to
-    the bbox span, so sweep radii from ~1 cm to the whole globe — at
-    assorted latitudes including near-pole boxes that wrap all longitudes
-    — and assert a hard per-query covering-cell budget."""
-    from s2cell_spark.operators.knn import _bbox_covering_level
+    radius (VERDICT r2 #8). Phase 2 is the within-radius join, so what it
+    broadcasts is the cap covering at :func:`suggest_cap_level`,
+    normalized to that one level: sweep radii from ~1 cm to the whole
+    globe — at assorted latitudes including near-pole caps that wrap all
+    longitudes — and assert a hard per-query covering-cell budget."""
+    from s2cell_spark.operators.radius import suggest_cap_level
 
     budget = 600  # cells per query; broadcast cost ~ 16 B/cell
     for qlat in (0.0, 40.0, -67.0, 88.0, -89.5):
         for r in (1e-7, 1e-5, 1e-3, 0.05, 0.8, 5.0, 30.0, 90.0, 180.0):
-            lat_lo = max(-90.0, qlat - r)
-            lat_hi = min(90.0, qlat + r)
-            if lat_lo <= -89.0 or lat_hi >= 89.0 or r >= 90.0:
-                lon_lo, lon_hi = -180.0, 180.0
-            else:
-                import math as m
-
-                dl = min(180.0, r / m.cos(m.radians(min(89.0, max(abs(lat_lo), abs(lat_hi))))))
-                lon_lo, lon_hi = -dl, dl
-            lvl = _bbox_covering_level(lat_hi - lat_lo, lon_hi - lon_lo)
-            cov = COV.latlng_rect_covering(
-                lat_lo, lat_hi, lon_lo, lon_hi, max_level=lvl
-            )
-            assert 0 < cov.shape[0] <= budget, (
-                f"qlat={qlat} r={r}: {cov.shape[0]} cells at level {lvl}"
-            )
+            lvl = suggest_cap_level({0: (qlat, 0.0, r)})
+            cov = COV.cap_covering(qlat, 0.0, r, max_level=lvl, min_emit_level=max(0, lvl - 4))
+            n = COV.covering_to_level(cov, lvl).shape[0]
+            assert 0 < n <= budget, f"qlat={qlat} r={r}: {n} cells at level {lvl}"
 
 
 def test_iceberg_true_branch_drives_writeTo_plan(spark, tmp_path, monkeypatch):
@@ -1143,12 +1159,7 @@ def test_within_radius_join_matches_bruteforce(spark):
     pdf = pages.select("doc_id", "lat", "lon").toPandas()
     want = set()
     for cid, (qlat, qlon, r) in circles.items():
-        la, lo = np.radians(pdf["lat"].to_numpy()), np.radians(pdf["lon"].to_numpy())
-        sp = np.sin((la - np.radians(qlat)) / 2.0)
-        sl = np.sin((lo - np.radians(qlon)) / 2.0)
-        dist = np.degrees(
-            2.0 * np.arcsin(np.sqrt(sp * sp + np.cos(np.radians(qlat)) * np.cos(la) * sl * sl))
-        )
+        dist = _haversine_deg_np(qlat, qlon, pdf["lat"].to_numpy(), pdf["lon"].to_numpy())
         fp = np.floor(dist * 1e7 + 0.5).astype(np.int64)
         m = fp <= radius_fp(r)
         want |= {
@@ -1572,10 +1583,10 @@ def test_difference_cell_unions_matches_interval_oracle(spark):
 
 
 def test_streaming_interval_alerts_match_batch(spark, tmp_path):
-    """Stream-static interval join == batch interval_join on the same
-    events and windows."""
+    """interval_join on a stream (stream-static: the static windows'
+    bucket explode re-plans per micro-batch) == batch interval_join on
+    the same events and windows."""
     from s2cell_spark.operators.intervaljoin import interval_join
-    from s2cell_spark.streaming.ingest import streaming_interval_alerts
 
     src = str(tmp_path / "stream_src_iv")
     ev = spark.read.parquet(f"{SF_CORRECT}/events.parquet")
@@ -1586,7 +1597,7 @@ def test_streaming_interval_alerts_match_batch(spark, tmp_path):
         "timestampadd(HOUR, cast(id*30 AS INT), TIMESTAMP_NTZ'2024-01-01 00:00:00') AS s",
         "timestampadd(HOUR, cast(id*30 + 7 AS INT), TIMESTAMP_NTZ'2024-01-01 00:00:00') AS e",
     )
-    out = streaming_interval_alerts(stream, w, "ts", "s", "e", 6 * 3600).select(
+    out = interval_join(stream, w, "ts", "s", "e", 6 * 3600).select(
         "window_id", "event_id"
     )
     q = (

@@ -30,7 +30,7 @@ def entry():
 
 
 def test_containment_equi_broadcasts_pages_never_shuffle(spark, entry):
-    plan = _plan(entry._q_pip("equi")(spark, SF))
+    plan = _plan(entry._q_pip(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # the only exchange allowed is the broadcast of the covering dim
@@ -47,7 +47,7 @@ def test_exact_filter_sits_below_encode_udf(spark, entry):
     filters would satisfy a bare position check vacuously."""
     import re
 
-    plan = _plan(entry._q_pip("equi")(spark, SF))
+    plan = _plan(entry._q_pip(spark, SF))
     arrow_pos = plan.index("ArrowEvalPython")
     below = plan[arrow_pos:]
     assert re.search(r"Filter [^\n]*39\.7", below), (
@@ -111,11 +111,21 @@ def test_events_by_cell_degrades_to_shuffle_join_when_dim_large(spark, entry):
 
 def test_knn_phase2_has_no_nested_loop_join(spark, entry):
     """kNN's verified-radius re-query must plan as covering containment
-    (interval stab / equi joins) — a raw non-equi bbox join would become
-    a BroadcastNestedLoopJoin, O(pages x queries) at scale."""
+    (the within-radius join's broadcast equi joins) — a raw non-equi
+    distance join would become a BroadcastNestedLoopJoin,
+    O(pages x queries) at scale."""
     plan = _plan(entry.queries()["knn_pages"](spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_knn_runs_no_python_stage_beyond_the_encode(spark, entry):
+    """kNN's phase 2 is the within-radius join — covering, equi join and
+    haversine filter all native — so the only Python node in the plan is
+    the pages S2-encode kernel; no MapInArrow stab is left."""
+    plan = _plan(entry.queries()["knn_pages"](spark, SF))
+    assert "MapInArrow" not in plan
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_tile_topk_window_has_partial_group_limit(spark, entry):
