@@ -39,10 +39,7 @@ def _regions():
 
 def test_equi_join_hot_single_cell_keeps_every_row(spark):
     """All rows in ONE covering cell (the worst skew case): the equi join
-    keeps every one of them. A null cell sharing a batch with a leaf ID
-    above 2^53 costs the leaf none of its bits: the inner join keeps the
-    leaf's match and drops the null row; a LEFT join keeps the null row
-    untagged."""
+    keeps every one of them."""
     pdf = pd.DataFrame(
         {
             "doc_id": np.arange(500),
@@ -58,6 +55,13 @@ def test_equi_join_hot_single_cell_keeps_every_row(spark):
     regions = {7: COV.latlng_rect_covering(40.0, 41.0, -75.0, -73.0, max_level=8)}
     assert CJ.containment_join_equi(df, spark, regions, level=8).count() == 500
 
+
+def test_range_join_null_cell_keeps_big_leaf_exact(spark):
+    """A null cell_id sharing an Arrow batch with a leaf ID above 2^53
+    must not cost that leaf its low bits. The range join this once pinned
+    is gone; the same input now goes through the equi join that replaced
+    it: the inner join keeps the leaf's match and drops the null row; a
+    LEFT join keeps the null row untagged."""
     leaf = 4611686018427400249  # odd leaf id, > 2^53
     df = spark.createDataFrame(
         [(1, leaf), (2, None)], "doc_id long, cell_id long"
