@@ -29,8 +29,6 @@ import math
 import numpy as np
 
 U64 = np.uint64
-I64 = np.int64
-F64 = np.float64
 
 MAX_LEVEL = 30
 MAX_SIZE = 1 << MAX_LEVEL          # 2^30 leaf cells per face axis
@@ -38,7 +36,6 @@ POS_BITS = 2 * MAX_LEVEL + 1       # 61 Hilbert-position bits
 MAX_SI_TI = 1 << (MAX_LEVEL + 1)   # Si/Ti resolution (2^31)
 _SWAP = 1                          # Hilbert orientation: swap I/J
 _INVERT = 2                        # Hilbert orientation: invert bits
-_LOOKUP_BITS = 4                   # table covers 4 levels per round
 
 # Trailing-one-bit positions allowed for levels 0..30 (every even bit).
 _VALID_LSB_MASK = U64(0x1555555555555555)

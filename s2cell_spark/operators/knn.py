@@ -1,35 +1,32 @@
-"""k-nearest-pages search via expanding S2 cell rings (ENGINE, SURVEY §2.2).
+"""k-nearest-pages search: the within-radius join searched outward
+(ENGINE, SURVEY §2.2).
 
-Two phases, both provably correct without relying on cell-size metric
-constants:
-
-1. **Ring expansion** (candidate gathering): each query starts at its
-   level-L cell; ring r adds the edge+corner neighbors of ring r-1 (kernel
-   #17). Pages equi-join rings on ``parent(page_cell, L)`` — a broadcast
-   hash join per round — until every query holds >= k candidates. The
-   driver loop only ever collects per-query COUNTS (tiny aggregates).
-2. **Radius verification**: take each query's kth-smallest candidate
-   distance d_k and re-query every page within d_k (plus one 1e-7-deg
-   rank bucket of pad) of the query with
-   :func:`~s2cell_spark.operators.radius.within_radius_join` — the cap
-   covering, the one-level broadcast equi join and the fixed-point
-   haversine filter that the ``within_radius`` oracle already checks —
-   then rank on the distance that join computes. Any true neighbor lies
-   within d_k of the query, hence inside the cap, hence the covering — so
-   the final top-k is exact even if phase 1's rings were too coarse.
+:func:`knn` is one loop over
+:func:`~s2cell_spark.operators.radius.within_radius_join`. Each query
+starts at the cap a uniform sphere of ``n`` pages fills with 2k of them;
+one action per round collects the top k by (1e-7-deg distance key, id)
+inside every pending query's cap, and a query whose cap held fewer than k
+pages repeats at 4x the radius (capped at 180 deg, the whole sphere). The
+first round whose cap holds k pages is exact: the join returns exactly the
+pages with ``dist_fp <= r_fp`` (the cap covering prunes a cell only when it
+clears the radius by 1e-6 deg, far beyond the grid's rounding), and any
+page outside the cap ranks after every page inside it.
 
 Scan hygiene at 100 TB (the properties a 1000-executor run needs):
 
 * ONE narrow projection of pages — (id, lat, lon, cell) — is cached and
-  feeds every ring iteration AND the phase-2 re-query; the wide table is
-  scanned once no matter how many rounds the loop takes.
-* The initial ring count is DENSITY-SEEDED (expected candidates per ring
-  set from the global page count), so the typical query needs one round,
-  not O(log r) doubling rounds from r=1.
-* Phase 2 is a cell-covering broadcast equi join — never the
+  feeds every round; the wide table is scanned once however many rounds
+  the loop takes, and the cache is released before :func:`knn` returns.
+* The first radius is sized from the global page count, so the typical
+  query needs one round.
+* Every round is a cell-covering broadcast equi join — never the
   BroadcastNestedLoopJoin Spark plans for a raw non-equi distance
-  predicate, which would be O(pages x queries) — and runs no Python
-  stage; both asserted in tests/test_plans.py.
+  predicate, which would be O(pages x queries) — and adds no Python
+  stage to the pages' encode; both asserted on every action in
+  tests/test_plans.py.
+
+:func:`knn_join` is the bulk dual: the query side's 3x3 level-L cell
+neighborhood, derived in the engine, equi-joined to the pages.
 
 Distances use the haversine great-circle formula on a unit sphere
 (returned in degrees of arc) — matching the DuckDB oracle expression
@@ -40,13 +37,12 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from s2cell_spark import functions as S2F
-from s2cell_spark import kernels as K
 from s2cell_spark.functions.udfs import arrow_frame
 
 
@@ -73,59 +69,6 @@ def dist_rank_key(dist_col):
     floor are bit-identical across both engines, half-even rounding is
     not. Oracle mirror: ``CAST(floor(d * 1e7 + 0.5) AS BIGINT)``."""
     return F.floor(dist_col * F.lit(1.0e7) + F.lit(0.5)).cast("long")
-
-
-_PAIR_DT = np.dtype([("q", "<i8"), ("c", "<u8")])
-
-
-def _pack_pairs(q: np.ndarray, c: np.ndarray) -> np.ndarray:
-    a = np.empty(len(q), dtype=_PAIR_DT)
-    a["q"], a["c"] = q, c
-    return a
-
-
-def _ring_cells(
-    queries: list[tuple[int, float, float]], level: int, n_rings: int
-) -> np.ndarray:
-    """(query_id, ring_cell_id) pairs for rings 0..n_rings, driver-side.
-
-    BATCHED over queries (VERDICT r2 #3): every ring round makes ONE
-    neighbor-grid kernel call over the concatenation of all queries'
-    frontiers, and the per-query de-dup/seen bookkeeping runs as sorted
-    structured-array set algebra (np.unique / np.isin on (q, cell) pairs)
-    instead of a per-query Python loop — driver cost is O(rounds) kernel
-    calls regardless of query count. Returns a sorted structured array
-    with fields ``q`` (int64 query_id) and ``c`` (uint64 cell id)."""
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    lat = np.array([q[1] for q in queries])
-    lon = np.array([q[2] for q in queries])
-    center = K.lat_lon_to_cell_id(lat, lon, level)
-    seen = np.unique(_pack_pairs(qids, center))
-    frontier = seen
-    for _ in range(n_rings):
-        grid, valid, _ = K.cell_id_to_neighbor_cell_ids_grid(frontier["c"])
-        fq = np.broadcast_to(frontier["q"][:, None], grid.shape)
-        cand = np.unique(_pack_pairs(fq[valid], grid[valid]))
-        fresh = cand[~np.isin(cand, seen)]
-        if fresh.size == 0:
-            break
-        seen = np.unique(np.concatenate([seen, fresh]))
-        frontier = fresh
-    return seen
-
-
-def _seed_rings(n_pages: int, level: int, k: int) -> int:
-    """Density-seeded initial ring count: with ~n/(6*4^L) pages per
-    level-L cell, rings r cover ~(2r+1)^2 cells; pick the smallest r
-    whose expected candidate count clears 2k (safety factor for spatial
-    clustering), clamped to [1, 16]. Correctness never depends on this —
-    phase 2 verifies the radius — it only sets where the doubling loop
-    starts."""
-    density = n_pages / (6.0 * 4.0**level)
-    if density <= 0:
-        return 16
-    r = math.ceil((math.sqrt(2.0 * k / density) - 1.0) / 2.0)
-    return max(1, min(16, int(r)))
 
 
 # Lower bound on the min width of ANY level-L S2 cell: deriv * 2^-L
@@ -239,104 +182,75 @@ def knn(
     spark: SparkSession,
     queries: list[tuple[int, float, float]],
     k: int,
-    level: int = 4,
+    level: int = 11,
     cell_col: str = "cell_id",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact k nearest pages per query point.
 
-    Returns (query_id, doc_id, dist_deg, rank) with rank 1..k ordered by
-    (distance, doc_id). `level` tunes ring granularity only — correctness
-    never depends on it thanks to the phase-2 radius verification, which
-    is one :func:`~s2cell_spark.operators.radius.within_radius_join` over
-    all queries. Like that join, the batch shares one covering level, so
-    queries whose verified radii span orders of magnitude are covered at
-    the coarse end.
+    Returns (query_id, id_col, dist_deg, rank) with rank 1..k ordered by
+    (distance on the 1e-7-deg grid, id); a query sees every page, ranked,
+    when fewer than k exist. Each round is one
+    :func:`~s2cell_spark.operators.radius.within_radius_join` over the
+    pending queries, at radius ``degrees(acos(1 - 4k/n))`` first and 4x
+    that per further round; a query is done in the first round whose cap
+    holds k pages, which is exact. `level` is the finest covering level a
+    round may use (``suggest_cap_level(pending, max_level=level)``);
+    correctness never depends on it. Like that join, a round shares one
+    covering level, so a batch whose radii span orders of magnitude is
+    covered at the coarse end.
 
-    The narrow (id, lat, lon, cell) projection is persisted for the
-    duration of the search (it backs the lazily-returned result too);
-    callers running many kNN batches can ``spark.catalog.clearCache()``
-    when done.
+    The result is collected on the driver and returned as a local table,
+    and the narrow (id, lat, lon, cell) projection the rounds share is
+    unpersisted before returning: there is no cache to clear.
 
-    Scale boundary: `queries` is a driver-side list (ring cells are
-    computed per query on the driver) — sized for interactive use,
-    O(10^3) query points against 10^12 pages. A bulk kNN-JOIN (millions
-    of query points) wants the dual formulation instead: broadcast
-    nothing, bucket BOTH sides by level-L cell + neighbor replication,
-    and rank within buckets — a different operator with different
-    exactness tradeoffs, deliberately not bolted onto this one.
+    Scale boundary: `queries` is a driver-side list and the result rows
+    pass through the driver — sized for interactive use, O(10^3) query
+    points against 10^12 pages. Millions of query points want
+    :func:`knn_join`, which broadcasts nothing and ranks within
+    neighborhoods.
     """
-    from s2cell_spark.operators.radius import within_radius_join
+    from s2cell_spark.operators.radius import suggest_cap_level, within_radius_join
 
-    q_df = arrow_frame(
-        spark,
-        [(int(q), float(a), float(o)) for q, a, o in queries],
-        "query_id long, q_lat double, q_lon double",
-    )
-
-    # ---- one narrow scan of pages, shared by every phase ------------------
     narrow = pages.select(id_col, "lat", "lon", cell_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    n_pages = narrow.count()  # materializes the cache; seeds the density
-
-    # ---- phase 1: expand rings until every query has >= k candidates ----
-    n_rings = _seed_rings(n_pages, level, k)
-    while True:
-        ring_rows = _ring_cells(queries, level, n_rings)
-        # uint64 cells -> LongType via bit reinterpretation (faces 4-5 are
-        # negative); already (q, c)-sorted, so the frame is deterministic
-        rings_df = arrow_frame(
-            spark,
-            {
-                "query_id": ring_rows["q"],
-                "ring_cell": ring_rows["c"].view(np.int64),
-                "lvl": np.full(len(ring_rows), level, dtype=np.int32),
-            },
-            "query_id long, ring_cell long, lvl int",
-        )
-        key = S2F.cell_id_to_parent_cell_id(F.col(cell_col), level)
-        cand = narrow.join(
-            F.broadcast(rings_df), on=key == F.col("ring_cell"), how="inner"
-        )
-        counts = {
-            r["query_id"]: r["n"]
-            for r in cand.groupBy("query_id").agg(F.count("*").alias("n")).collect()
-        }
-        if all(counts.get(q[0], 0) >= k for q in queries):
-            break
-        if n_rings > 24:  # ring set has swallowed the globe; fall through
-            cand = narrow.crossJoin(F.broadcast(q_df.select("query_id")))
-            break
-        n_rings *= 2
-
-    # ---- phase 2: verified-radius re-query --------------------------------
-    dist = haversine_deg(F.col("q_lat"), F.col("q_lon"), F.col("lat"), F.col("lon"))
-    cand = (
-        cand.join(F.broadcast(q_df), on="query_id")
-        .withColumn("dist_deg", dist)
-        .withColumn("dist_fp", dist_rank_key(F.col("dist_deg")))
-    )
-    w = Window.partitionBy("query_id").orderBy("dist_fp", id_col)
-    dk = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == k)
-        .select("query_id", F.col("dist_deg").alias("d_k"))
-        .collect()
-    )
-    d_k = {r["query_id"]: r["d_k"] for r in dk}
-
-    # pad must exceed one 1e-7-deg rank-quantization bucket: a row that
-    # ties d_k's bucket (true dist up to d_k + 1e-7) can still rank <= k.
-    # No d_k means fewer than k pages exist globally: keep the whole sphere.
-    circles = {
-        qid: (qlat, qlon, 180.0 if qid not in d_k else d_k[qid] * 1.0000001 + 2e-7)
-        for qid, qlat, qlon in queries
-    }
-    final = within_radius_join(narrow, spark, circles, cell_col=cell_col)
-    return (
-        final.withColumnRenamed("circle_id", "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "dist_deg", "rank")
-    )
+    n_pages = narrow.count()  # materializes the cache; sizes the first cap
+    # the cap a uniform sphere of n pages fills with 2k of them
+    r0 = math.degrees(math.acos(max(-1.0, 1.0 - 4.0 * k / max(n_pages, 1))))
+    radius = {qid: r0 for qid, _, _ in queries}
+    w = Window.partitionBy("circle_id").orderBy("dist_fp", id_col)
+    rows, pending = [], list(queries)
+    try:
+        while pending:
+            circles = {qid: (qlat, qlon, radius[qid]) for qid, qlat, qlon in pending}
+            found: dict[int, list] = {}
+            for r in (
+                within_radius_join(
+                    narrow, spark, circles,
+                    level=suggest_cap_level(circles, max_level=level), cell_col=cell_col,
+                )
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
+                .select("circle_id", id_col, "dist_deg", "rank")
+                .collect()
+            ):
+                found.setdefault(r[0], []).append(tuple(r))
+            still = []
+            for q in pending:
+                got = found.get(q[0], [])
+                if len(got) >= k or radius[q[0]] >= 180.0:  # 180 deg: the whole sphere
+                    rows += got
+                else:
+                    radius[q[0]] = min(180.0, 4.0 * radius[q[0]])
+                    still.append(q)
+            pending = still
+    finally:
+        narrow.unpersist()
+    schema = StructType([
+        StructField("query_id", LongType()),
+        narrow.schema[id_col],
+        StructField("dist_deg", DoubleType()),
+        StructField("rank", IntegerType()),
+    ])
+    return arrow_frame(spark, sorted(rows, key=lambda r: (r[0], r[3])), schema)

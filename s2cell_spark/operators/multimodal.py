@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -33,16 +32,6 @@ from pyspark.sql.types import (
 )
 
 from s2cell_spark.functions.udfs import numpy_to_arrow
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType()),   # image|audio|video
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-        StructField("codec", StringType()),
-    ]
-)
 
 
 def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -18,7 +18,7 @@ center. Two stages, same shape as the containment joins:
    (CLAUDE.md invariant) so membership at the circle boundary is decided
    identically by the engine and the DuckDB oracle despite asin ulp
    differences. A join, not a per-circle expression, so a batch of 10^3
-   circles (kNN's verified radii, operators/knn.py) stays one small
+   circles (kNN's search rounds, operators/knn.py) stays one small
    broadcast.
 
 At 100 TB this is the same cost model as ``containment_join_equi``: one
@@ -58,6 +58,8 @@ def suggest_cap_level(circles: Circles, max_level: int = 11) -> int:
     normalized covering stays ~O((2r/edge)²) ≈ a few thousand cells.
     Any level is correct — the covering is a superset and the exact stage
     owns membership — this only balances broadcast size vs selectivity."""
+    if not circles:  # an empty batch covers nothing at any level
+        return max_level
     r_min = min(r for (_, _, r) in circles.values())
     r_max = max(r for (_, _, r) in circles.values())
     # edge(level) ~ 90 / 2^level degrees; want edge <= 2*r_min/8

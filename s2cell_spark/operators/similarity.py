@@ -22,8 +22,6 @@ never a cross join.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
@@ -31,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from s2cell_spark.functions.udfs import arrow_frame, arrow_to_numpy, numpy_to_arrow
+from s2cell_spark.plans.bucketing import drop_table_and_orphan
 
 
 def _to_matrix(vecs: pa.ListArray) -> np.ndarray:
@@ -322,17 +321,7 @@ def ivf_index_write(
     difference between scanning the full embeddings table per query batch
     and touching nprobe/n_cells of it with zero Python. Returns the
     vector dimension (needed to rebuild the centroids at query time)."""
-    spark = embeddings.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a managed-table dir orphaned by a previous session (registered in
-    # that session's in-memory catalog only) blocks re-creation; clear it
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")).path
-    orphan = Path(wh) / table.split(".")[-1].lower()
-    if orphan.exists():
-        shutil.rmtree(orphan, ignore_errors=True)
+    drop_table_and_orphan(embeddings.sparkSession, table)
     first = embeddings.select(vec_col).first()
     dim = len(first[0])
     cents = ivf_centroids(dim, n_cells, seed)

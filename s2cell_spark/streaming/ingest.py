@@ -3,9 +3,8 @@
 Incremental per-cell tile counts over a stream of pages: watermark on
 ``warc_ts`` bounds late data, tumbling windows aggregate per (window,
 level-k cell token). S2 expressions work unchanged in streaming (the
-encode is the r5 native Catalyst arm; pandas-UDF kernels also run
-per-micro-batch where needed) —
-Arrow batches are Arrow batches — and the groupBy key is the native parent
+encode is the r5 native Catalyst arm; the Arrow-UDF kernels also run
+per micro-batch where needed) — and the groupBy key is the native parent
 expr, so state is keyed on (window, cell) with partial aggregation.
 
 At scale: source = Iceberg/Kafka ``readStream``; here tests drive it with

@@ -109,23 +109,53 @@ def test_events_by_cell_degrades_to_shuffle_join_when_dim_large(spark, entry):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
 
 
-def test_knn_phase2_has_no_nested_loop_join(spark, entry):
-    """kNN's verified-radius re-query must plan as covering containment
-    (the within-radius join's broadcast equi joins) — a raw non-equi
-    distance join would become a BroadcastNestedLoopJoin,
-    O(pages x queries) at scale."""
-    plan = _plan(entry.queries()["knn_pages"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+def _knn_action_plans(spark, entry, sf, monkeypatch) -> list[str]:
+    """The plan of every ``collect``/``count`` the ``knn_pages`` call runs.
+    kNN collects its rounds and returns a local table, so the returned
+    frame's own plan says nothing about the search."""
+    plans = []
+    cls = type(spark.range(1))
+    for name in ("collect", "count"):
+        orig = getattr(cls, name)
+
+        def spy(df, *a, _orig=orig, **kw):
+            plans.append(_plan(df))
+            return _orig(df, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+    entry.queries()["knn_pages"](spark, sf)
+    monkeypatch.undo()
+    return plans
 
 
-def test_knn_runs_no_python_stage_beyond_the_encode(spark, entry):
-    """kNN's phase 2 is the within-radius join — covering, equi join and
-    haversine filter all native — so the only Python node in the plan is
-    the pages S2-encode kernel; no MapInArrow stab is left."""
-    plan = _plan(entry.queries()["knn_pages"](spark, SF))
-    assert "MapInArrow" not in plan
-    assert plan.count("ArrowEvalPython") == 1
+def test_knn_phase2_has_no_nested_loop_join(spark, entry, monkeypatch):
+    """Every kNN round must plan as covering containment (the within-radius
+    join's broadcast equi joins) — a raw non-equi distance join would
+    become a BroadcastNestedLoopJoin, O(pages x queries) at scale."""
+    plans = _knn_action_plans(spark, entry, SF, monkeypatch)
+    assert plans
+    for plan in plans:
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+
+
+def test_knn_runs_no_python_stage_beyond_the_encode(spark, entry, monkeypatch):
+    """Every kNN round is the within-radius join — covering, equi join and
+    haversine filter all native — so the only Python node in any plan kNN
+    runs is the pages S2-encode kernel; no MapInArrow stab is left."""
+    plans = _knn_action_plans(spark, entry, SF, monkeypatch)
+    assert plans
+    for plan in plans:
+        assert "MapInArrow" not in plan
+        assert plan.count("ArrowEvalPython") == 1
+
+
+def test_knn_pages_takes_the_cache_count_and_one_round(spark, entry, monkeypatch):
+    """At sf0.01 the first cap, sized from the page count to hold ~2k pages,
+    already holds k for every ``knn_pages`` query: two actions, the count
+    that materializes the narrow cache and one search round."""
+    plans = _knn_action_plans(spark, entry, "/root/testdata/sf0.01", monkeypatch)
+    assert len(plans) == 2, len(plans)
 
 
 def test_tile_topk_window_has_partial_group_limit(spark, entry):
