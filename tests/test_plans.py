@@ -546,14 +546,16 @@ def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, m
     assert (row["p"], row["m"]) == (500, 87)
 
 
-def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry):
-    """The bulk-PIP pipeline's scale contract: the polygon coverings are
-    an EXECUTOR stage (MapInArrow over the polygons frame, below a
-    broadcast — never a per-polygon driver loop), the exact ray-cast is
-    a native higher-order-function filter (no second Python node — the
-    only ArrowEvalPython is the pages S2-encode kernel), and the pages
-    side joins by broadcast with no sort-merge anywhere."""
-    plan = _plan(entry._q_pip_regions_bulk(spark, SF))
+@pytest.mark.parametrize("query", ["_q_pip_polygons", "_q_pip_regions_bulk"])
+def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry, query):
+    """The bulk-PIP pipeline's scale contract, for both polygon PIP
+    queries: the polygon coverings are an EXECUTOR stage (MapInArrow over
+    the polygons frame, below a broadcast — never a per-polygon driver
+    loop), the exact ray-cast is a native higher-order-function filter
+    (no second Python node — the only ArrowEvalPython is the pages
+    S2-encode kernel), and the pages side joins by broadcast with no
+    sort-merge anywhere."""
+    plan = _plan(getattr(entry, query)(spark, SF))
     assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1  # the pages S2-encode kernel
