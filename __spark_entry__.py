@@ -76,7 +76,7 @@ RADIUS_CIRCLES = {
 
 # region_id -> list of rings, each a list of (lat, lon) vertices; even-odd
 # across rings (ring 2 of region 1 is a HOLE). Vertices are small exact
-# decimals so the Spark UDF and the oracle SQL embed identical float64.
+# decimals so the native ray cast and the oracle SQL embed identical float64.
 PIP_POLYGONS = {
     0: [  # concave arrow over western Europe
         [(45.0, -5.0), (55.0, 0.0), (50.0, 5.0), (55.0, 10.0), (45.0, 15.0), (48.0, 5.0)],
@@ -264,33 +264,18 @@ def _union_variants(parts: "dict[str, DataFrame]") -> DataFrame:
 
 
 def _q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full PIP pipeline on real polygons: POLYGON-AWARE covering prune
-    (cells fully outside the even-odd region — including inside holes —
-    never become candidates; broadcast containment join) -> exact
-    even-odd ray-cast (vectorized numpy UDF) per region. Two regions: a
-    concave polygon (covering area ~2x tighter than its bbox) and a
-    polygon with a hole (hole excluded from the covering)."""
-    import numpy as np
+    """PIP on the two fixture polygons through ``bulk_pip_join``:
+    POLYGON-AWARE executor coverings (cells fully outside the even-odd
+    region — including inside holes — never become candidates; broadcast
+    containment join) -> native even-odd ray-cast. Two regions: a concave
+    polygon (covering area ~2x tighter than its bbox) and a polygon with a
+    hole (hole excluded from the covering)."""
+    from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
 
-    from s2cell_spark.operators.containment import containment_join_equi, point_in_polygon_udf
-    from s2cell_spark.operators.covering import polygon_covering
-
-    pages = _pages_with_cells(spark, sf_dir)
-    regions = {
-        rid: polygon_covering([np.asarray(r) for r in rings], max_level=10)
-        for rid, rings in PIP_POLYGONS.items()
-    }
-    joined = containment_join_equi(pages, spark, regions, level=10)
-    branches = []
-    for rid, rings in PIP_POLYGONS.items():
-        pip = point_in_polygon_udf([np.asarray(r) for r in rings])
-        branches.append(
-            joined.filter(F.col("region_id") == rid)
-            .filter(pip(F.col("lat"), F.col("lon")))
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
+    polys = arrow_frame(
+        spark, list(PIP_POLYGONS.items()), f"region_id long, rings {RINGS_TYPE}"
+    )
+    out = bulk_pip_join(_pages_with_cells(spark, sf_dir), polys, level=10, max_level=10)
     return out.select(
         F.col("region_id").cast("long").alias("region_id"),
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -303,8 +288,7 @@ def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — no per-polygon driver BFS), normalized natively, covering
     equi-join, then a NATIVE higher-order-function ray-cast over the
     region's vertex arrays carried by the join (no per-region UDF
-    closures — the per-region-closure pattern of _q_pip_polygons cannot
-    scale past a handful of regions). operators/bulkcover.py."""
+    closures). operators/bulkcover.py."""
     from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
 
     rows = [
@@ -322,9 +306,9 @@ def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pip_polygons_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon PIP entry, two arms under one registry slot (cap
-    invariant): `fixture` = the 2-region concave/hole pipeline with
-    driver coverings + numpy-UDF exact stage; `bulk` = the 120-polygon
-    distributed pipeline (executor coverings + native ray-cast)."""
+    invariant), both through ``bulk_pip_join`` (executor coverings +
+    native ray-cast): `fixture` = the 2 concave/hole fixture polygons;
+    `bulk` = the 120 generated star polygons."""
     return _union_variants(
         {
             "fixture": _q_pip_polygons(spark, sf_dir),
@@ -2046,7 +2030,7 @@ FROM pages p JOIN boxes b
 
 def _pip_polygons_oracle() -> str:
     """Even-odd ray-cast unrolled per polygon edge, identical term order to
-    the numpy UDF (operators/containment.py:point_in_polygon_udf); the
+    the native exact stage (operators/bulkcover.py:pip_parity_expr); the
     covering prune is a superset so the oracle skips it."""
     arms = []
     for rid, rings in PIP_POLYGONS.items():
@@ -2057,7 +2041,7 @@ def _pip_polygons_oracle() -> str:
                 y1, x1 = ring[a]
                 y2, x2 = ring[(a + 1) % k]
                 if y1 == y2:
-                    continue  # UDF skips horizontal edges (div by zero)
+                    continue  # engine skips horizontal edges (div by zero)
                 terms.append(
                     f"(CASE WHEN (({_flit(y1)} > lat) <> ({_flit(y2)} > lat)) AND "
                     f"(lon < ({_flit(x2)} - {_flit(x1)}) * (lat - {_flit(y1)}) / ({_flit(y2)} - {_flit(y1)}) + {_flit(x1)}) "
@@ -2074,8 +2058,8 @@ def _pip_regions_bulk_oracle() -> str:
     """Crossing-PARITY form of the even-odd ray cast over the generated
     polygon table: join pages x crossing edges, keep (region, doc) pairs
     with an ODD crossing count. Identical arithmetic term order to
-    bulkcover.pip_parity_expr (and the fixture UDF). The covering prune
-    is a superset, so the oracle needs no covering."""
+    bulkcover.pip_parity_expr (and covering._points_in_polygon). The
+    covering prune is a superset, so the oracle needs no covering."""
     rows = []
     for rid, rings in _bulk_polygons().items():
         for ring in rings:

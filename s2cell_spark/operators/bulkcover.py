@@ -24,11 +24,13 @@ Pipeline (``bulk_pip_join``):
    expression over the region's vertex arrays (carried by the join; no
    per-region UDF closures, no Python in the pages path): crossing
    PARITY, identical arithmetic term order to
-   containment.point_in_polygon_udf and the DuckDB oracle.
+   covering._points_in_polygon and the DuckDB oracle.
 
-Planar lat/lon edge semantics throughout (antimeridian-crossing
-polygons must be pre-split — same documented engine semantic as the
-driver-side PIP stage).
+This is the engine's one polygon PIP pipeline, for two fixture polygons
+and for a 10^6-row polygon table alike. Planar lat/lon edge semantics
+throughout (edges are straight in lat/lon; antimeridian-crossing
+polygons must be pre-split by the caller). A null coordinate is never
+inside.
 """
 
 from __future__ import annotations
@@ -125,9 +127,9 @@ def pip_parity_expr(rings: Column, lat: Column, lon: Column) -> Column:
     crossings of the ray x < lon is odd.
 
     Arithmetic term order is identical to covering._points_in_polygon
-    (the exact stage of containment.point_in_polygon_udf) and the DuckDB
-    oracle: ``lon < (x2-x1) * (lat-y1) / (y2-y1) + x1`` with horizontal
-    edges skipped — so all three implementations agree bit-for-bit. Whole-array higher-order functions (zip_with + filter +
+    (the numpy ray cast the tests take as truth) and the DuckDB oracle:
+    ``lon < (x2-x1) * (lat-y1) / (y2-y1) + x1`` with horizontal edges
+    skipped — so all three implementations agree bit-for-bit. Whole-array higher-order functions (zip_with + filter +
     size), not per-element element_at, per the CollapseProject/CSE
     engine invariant.
     """

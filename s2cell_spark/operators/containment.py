@@ -1,4 +1,4 @@
-"""Cell-prefix containment joins and point-in-polygon (ENGINE, SURVEY §2.2).
+"""Cell-prefix containment joins (ENGINE, SURVEY §2.2).
 
 Hierarchy containment is a pure uint64 range test (SURVEY.md §1.1): a cell
 ``c`` contains leaf ``d`` iff ``range_min(c) <= d <= range_max(c)``,
@@ -7,7 +7,9 @@ equivalently ``parent(d, level(c)) == c``. One join strategy,
 broadcast-hash-equi-join on ``parent(page_cell, L)``. Single scan of the
 pages side, no shuffle of it (broadcast), Catalyst-native, no Python
 stage. A null page cell equals no covering key, so it joins nothing
-(inner) or stays untagged (left).
+(inner) or stays untagged (left). The exact stage for rectangles is
+:func:`exact_rect_cond`; polygons go through
+``operators.bulkcover.bulk_pip_join``.
 
 A hot covering cell (a city) needs no salting: the broadcast join never
 shuffles the pages side, so no task receives a cell's pages as a group.
@@ -19,13 +21,12 @@ the pages scan prunes to (cell_id / lat / lon / carried columns) only.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
-from s2cell_spark.functions.udfs import arrow_frame, arrow_to_numpy, numpy_to_arrow
+from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators import covering as COV
 
 
@@ -165,25 +166,3 @@ def exact_rect_cond(boxes) -> Column:
             & (F.col("lon") >= c) & (F.col("lon") <= d)
         )
     return cond
-
-
-def point_in_polygon_udf(rings: list[np.ndarray]):
-    """Vectorized even-odd ray-cast point-in-polygon (lat/lon plane).
-
-    `rings`: list of (k, 2) float arrays of (lat, lon) vertices; even-odd
-    across rings supports holes. Planar semantics (edges are straight in
-    lat/lon) — documented engine semantic; polygons crossing the
-    antimeridian must be pre-split by the caller. Returns a BooleanType
-    Arrow UDF usable as ``df.filter(pip(F.col('lat'), F.col('lon')))``
-    after covering-cell candidate pruning.
-    """
-    closed = [np.asarray(r, dtype=np.float64) for r in rings]
-
-    @F.arrow_udf("boolean")
-    def pip(lat: pa.Array, lon: pa.Array) -> pa.Array:
-        y, ok_y = arrow_to_numpy(lat, np.float64)
-        x, ok_x = arrow_to_numpy(lon, np.float64)
-        # a null coordinate is never inside
-        return numpy_to_arrow(COV._points_in_polygon(closed, y, x) & ok_y & ok_x)
-
-    return pip

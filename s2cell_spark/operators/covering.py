@@ -229,9 +229,10 @@ def _edges_intersect_boxes(
 
 
 def _points_in_polygon(rings: list[np.ndarray], lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
-    """Even-odd ray cast across all rings (holes flip parity). The exact
-    stage of containment.point_in_polygon_udf is this function;
-    bulkcover.pip_parity_expr and the DuckDB oracle keep its term order."""
+    """Even-odd ray cast across all rings (holes flip parity), in numpy:
+    the polygon classifier's test of a crossing-free cell's center, and
+    the tests' truth for bulkcover.pip_parity_expr, which, like the
+    DuckDB oracle, keeps its term order."""
     inside = np.zeros(lat.shape, dtype=bool)
     for ring in rings:
         ry, rx = ring[:, 0], ring[:, 1]

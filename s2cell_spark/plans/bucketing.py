@@ -53,14 +53,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket key. Plans with
-    ZERO Exchange when both sides' bucket layouts match."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
 def drop_table_and_orphan(spark: SparkSession, table: str) -> None:
     """DROP the managed table AND clear an orphaned warehouse dir left by
     a previous session (registered only in that session's in-memory

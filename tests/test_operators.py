@@ -75,31 +75,6 @@ def test_range_join_null_cell_keeps_big_leaf_exact(spark):
     ]
 
 
-def test_polygon_pip_vs_numpy_oracle(spark, pages):
-    """Triangle PIP through covering join + ray-cast UDF vs a brute-force
-    numpy ray-cast over ALL pages."""
-    tri = np.array([[40.0, -75.0], [42.5, -74.0], [40.0, -72.0]])
-    cov = COV.latlng_rect_covering(40.0, 42.5, -75.0, -72.0, max_level=10, min_emit_level=6)
-    cand = CJ.containment_join_equi(pages, spark, {0: cov}, level=10)
-    pip = CJ.point_in_polygon_udf([tri])
-    got = {
-        r["doc_id"]
-        for r in cand.filter(pip(F.col("lat"), F.col("lon"))).select("doc_id").collect()
-    }
-    pdf = pages.select("doc_id", "lat", "lon").toPandas()
-    y, x = pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
-    inside = np.zeros(len(pdf), dtype=bool)
-    ry, rx = tri[:, 0], tri[:, 1]
-    for a_i in range(3):
-        b_i = (a_i + 1) % 3
-        y1, x1, y2, x2 = ry[a_i], rx[a_i], ry[b_i], rx[b_i]
-        if y1 == y2:
-            continue
-        inside ^= ((y1 > y) != (y2 > y)) & (x < (x2 - x1) * (y - y1) / (y2 - y1) + x1)
-    want = set(pdf.loc[inside, "doc_id"].tolist())
-    assert got == want and len(want) > 0
-
-
 def test_covering_size_budget():
     """Pruning-quality regression gate: coverings must stay TIGHT, not
     just superset-correct. Two budgets per PIP box at the query's own
@@ -2228,11 +2203,13 @@ def test_weighted_sample_rates_layout_invariance_and_edges(spark):
         weighted_sample(df, "w_bp", rate_bp=10001)
 
 
-def test_bulk_pip_join_matches_driver_pipeline(spark):
+def test_bulk_pip_join_matches_numpy_ray_cast(spark, pages):
     """bulk_pip_join (executor coverings + native ray-cast) returns the
-    IDENTICAL (region, doc) set as the driver-side pipeline (per-region
-    covering dict + numpy-UDF exact stage) — including a multi-ring
-    region whose second ring is a HOLE (even-odd)."""
+    IDENTICAL (region, doc) set as a brute-force numpy ray cast
+    (covering._points_in_polygon) over EVERY page, with no covering — so a
+    covering that drops an inside page fails too. Regions: a concave
+    polygon, a multi-ring region whose second ring is a HOLE (even-odd), a
+    concave quadrilateral and a triangle."""
     from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
 
     regions = {
@@ -2241,24 +2218,17 @@ def test_bulk_pip_join_matches_driver_pipeline(spark):
         1: [[(-15.0, 5.0), (15.0, 5.0), (15.0, 35.0), (-15.0, 35.0)],
             [(-5.0, 15.0), (5.0, 15.0), (5.0, 25.0), (-5.0, 25.0)]],
         2: [[(39.5, -75.5), (42.0, -74.0), (39.5, -72.5), (40.7, -74.0)]],
+        3: [[(40.0, -75.0), (42.5, -74.0), (40.0, -72.0)]],
     }
-    pages = with_cell_id(load_pages(spark, SF_CORRECT))
-    # driver-side truth: per-region covering + numpy PIP UDF
-    want = set()
-    cov = {
-        rid: COV.polygon_covering([np.asarray(r) for r in rings], max_level=10)
+    pdf = pages.select("doc_id", "lat", "lon").toPandas()
+    lat, lon = pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
+    want = {
+        (rid, d)
         for rid, rings in regions.items()
+        for d in pdf.loc[
+            COV._points_in_polygon([np.asarray(r) for r in rings], lat, lon), "doc_id"
+        ]
     }
-    joined = CJ.containment_join_equi(pages, spark, cov, level=10)
-    for rid, rings in regions.items():
-        pip = CJ.point_in_polygon_udf([np.asarray(r) for r in rings])
-        want |= {
-            (rid, r["doc_id"])
-            for r in joined.filter(F.col("region_id") == rid)
-            .filter(pip(F.col("lat"), F.col("lon")))
-            .select("doc_id")
-            .collect()
-        }
     polys = spark.createDataFrame(
         [(rid, rings) for rid, rings in regions.items()],
         schema=f"region_id long, rings {RINGS_TYPE}",
@@ -2270,6 +2240,7 @@ def test_bulk_pip_join_matches_driver_pipeline(spark):
         .collect()
     }
     assert got == want and len(got) > 0
+    assert {rid for rid, _ in got} == set(regions)  # no region is vacuous
     # hole actually excluded: a page inside ring 2 of region 1 never appears
     inside_hole = {
         r["doc_id"]

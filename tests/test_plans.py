@@ -203,7 +203,7 @@ def test_bucketed_join_has_no_shuffle(spark):
     per-query shuffle would otherwise BE the query cost."""
     from pyspark.sql import functions as F
 
-    from s2cell_spark.plans.bucketing import bucketed_join, write_bucketed
+    from s2cell_spark.plans.bucketing import write_bucketed
 
     fact = spark.range(10_000).select(
         (F.col("id") % 500).alias("user_id"), (F.col("id") * 3).alias("v")
@@ -216,7 +216,7 @@ def test_bucketed_join_has_no_shuffle(spark):
     try:
         write_bucketed(fact, "t_fact_b", "user_id", 4)
         write_bucketed(dim, "t_dim_b", "user_id", 4)
-        joined = bucketed_join(spark, "t_fact_b", "t_dim_b", "user_id")
+        joined = spark.table("t_fact_b").join(spark.table("t_dim_b"), "user_id")
         plan = _plan(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, "bucketed join still shuffles"
