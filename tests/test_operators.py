@@ -511,8 +511,10 @@ def test_empty_covering_joins_nothing(spark, pages):
 
 def test_native_covering_expansion_matches_numpy(spark):
     """normalized_coverings_df's explode(sequence(...)) expansion must
-    equal the numpy covering_to_level expansion cell-for-cell — including
-    negative-long (face >= 4) coverings."""
+    equal the numpy covering_to_level expansion cell-for-cell, with no
+    duplicate row — including negative-long (face >= 4) coverings and a
+    covering deeper than the target level, whose cells are lifted to
+    their (shared) level-8 ancestors."""
     import numpy as np
 
     from s2cell_spark.operators import covering as COV
@@ -521,16 +523,18 @@ def test_native_covering_expansion_matches_numpy(spark):
     regions = {
         0: COV.latlng_rect_covering(10.0, 25.0, 30.0, 55.0, max_level=8),
         1: COV.latlng_rect_covering(-40.0, -20.0, 110.0, 155.0, max_level=8),  # faces 4/5
+        2: COV.latlng_rect_covering(40.3, 41.1, -74.6, -73.2, max_level=10),
     }
-    native = {
+    assert (K.cell_id_to_level(regions[2]) > 8).any()
+    native = sorted(
         (r["region_id"], r["cov_cell"])
         for r in normalized_coverings_df(spark, regions, 8).collect()
-    }
-    want = {
+    )
+    want = sorted(
         (rid, int(np.int64(np.uint64(c))))
         for rid, cells in regions.items()
         for c in COV.covering_to_level(cells, 8)
-    }
+    )
     assert native == want and len(want) > 100
 
 
@@ -2233,14 +2237,6 @@ def test_bulk_pip_join_matches_numpy_ray_cast(spark, pages):
         [(rid, rings) for rid, rings in regions.items()],
         schema=f"region_id long, rings {RINGS_TYPE}",
     ).repartition(3)
-    got = {
-        (r["region_id"], r["doc_id"])
-        for r in bulk_pip_join(pages, polys, level=10, max_level=10)
-        .select("region_id", "doc_id")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-    assert {rid for rid, _ in got} == set(regions)  # no region is vacuous
     # hole actually excluded: a page inside ring 2 of region 1 never appears
     inside_hole = {
         r["doc_id"]
@@ -2249,4 +2245,47 @@ def test_bulk_pip_join_matches_numpy_ray_cast(spark, pages):
             & (F.col("lon") > 15) & (F.col("lon") < 25)
         ).select("doc_id").collect()
     }
-    assert inside_hole and not {(1, d) for d in inside_hole} & got
+    assert inside_hole
+    # (8, 10): coverings deeper than the join level, lifted to level 8
+    for level, max_level in ((10, 10), (8, 10)):
+        got = {
+            (r["region_id"], r["doc_id"])
+            for r in bulk_pip_join(pages, polys, level=level, max_level=max_level)
+            .select("region_id", "doc_id")
+            .collect()
+        }
+        assert got == want and len(got) > 0
+        assert {rid for rid, _ in got} == set(regions)  # no region is vacuous
+        assert not {(1, d) for d in inside_hole} & got
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [(None, "twin"), (7, []), (8, None)],
+    ids=["null_region_id", "empty_rings", "null_rings"],
+)
+def test_bulk_pip_join_skips_null_ids_and_empty_polygons(spark, pages, extra):
+    """A polygon row with a null region_id, or with no vertex (empty or
+    null rings), contains no page and leaves the other rows unaffected:
+    the null id is not covered as region 0, and the empty polygon does
+    not fail the covering stage."""
+    import __spark_entry__ as E
+    from s2cell_spark.functions.udfs import arrow_frame
+    from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
+
+    rows = list(E.PIP_POLYGONS.items())
+    rid, rings = extra
+    extra_row = (rid, E.PIP_POLYGONS[0] if rings == "twin" else rings)
+
+    def pairs(polys):
+        polys = arrow_frame(spark, polys, f"region_id long, rings {RINGS_TYPE}")
+        return sorted(
+            (r["region_id"], r["doc_id"])
+            for r in bulk_pip_join(pages, polys, level=10, max_level=10)
+            .select("region_id", "doc_id")
+            .collect()
+        )
+
+    want = pairs(rows)
+    assert want and len(set(want)) == len(want)
+    assert pairs(rows + [extra_row]) == want

@@ -554,19 +554,18 @@ def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, en
     loop), the exact ray-cast is a native higher-order-function filter
     (no second Python node — the only ArrowEvalPython is the pages
     S2-encode kernel), and the pages side joins by broadcast with no
-    sort-merge anywhere."""
+    sort-merge anywhere. Each polygon is covered once (one MapInArrow
+    node) and normalized by one projection (no hash exchange at all)."""
     plan = _plan(getattr(entry, query)(spark, SF))
     assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1  # the pages S2-encode kernel
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "NestedLoop" not in plan
-    # every hash exchange belongs to the (tiny) covering side's dedup —
-    # the pages side must never hash-partition (its key columns would
-    # appear in the exchange line)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "doc_id" not in line and "url" not in line
+    # one covering pass per polygon, normalized without a dedup shuffle
+    lines = plan.splitlines()
+    assert sum("MapInArrow run(" in line for line in lines) == 1
+    assert not any("Exchange hashpartitioning" in line for line in lines)
 
 
 def test_bulk_pip_rings_broadcast_is_size_gated(spark, entry):
@@ -617,25 +616,27 @@ def test_driver_built_covering_is_a_local_relation(spark):
     """A covering built on the driver ships as an Arrow LocalRelation with
     the Arrow conf OFF (the default outside the test session). Pickled
     Python rows would plan as a LogicalRDD (ExistingRDD scan), and every
-    action reading it would start a Python-worker job."""
+    action reading it would start a Python-worker job. The normalized
+    table holds exactly the numpy single-level covering."""
     from s2cell_spark.operators import covering as COV
-    from s2cell_spark.operators.containment import coverings_df
+    from s2cell_spark.operators.containment import normalized_coverings_df
 
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        cells = COV.latlng_rect_covering(10.0, 12.0, 20.0, 23.0, max_level=8)
-        df = coverings_df(spark, {3: cells, 4: cells[:2]})
+        cells = COV.latlng_rect_covering(10.0, 12.0, 20.0, 23.0, max_level=10)
+        regions = {3: cells, 4: cells[:2]}
+        df = normalized_coverings_df(spark, regions, 8)
         qe = df._jdf.queryExecution()
         optimized = qe.optimizedPlan().toString()
         executed = qe.executedPlan().toString()
     finally:
         spark.conf.set(key, old)
-    assert optimized.startswith("LocalRelation"), optimized
+    assert "LocalRelation" in optimized, optimized
     assert "ExistingRDD" not in executed
-    assert df.schema.simpleString() == "struct<region_id:bigint,cell_id:bigint,level:bigint>"
-    assert df.count() == len(cells) + 2
+    assert df.schema.simpleString() == "struct<region_id:bigint,cov_cell:bigint>"
+    assert df.count() == sum(len(COV.covering_to_level(c, 8)) for c in regions.values())
 
 
 def test_driver_built_tables_go_through_one_helper():
