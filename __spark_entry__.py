@@ -284,10 +284,11 @@ def _q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bulk PIP against a polygons TABLE (120 generated star polygons):
-    coverings computed on the EXECUTORS (mapInArrow over the polygon
-    frame — no per-polygon driver BFS), normalized natively, covering
-    equi-join, then a NATIVE higher-order-function ray-cast over the
-    region's vertex arrays carried by the join (no per-region UDF
+    coverings computed on the EXECUTORS (one mapInArrow pass over the
+    polygon frame, one BFS per polygon — no per-polygon driver BFS),
+    normalized natively by one explode/sequence projection (no shuffle),
+    covering equi-join, then a NATIVE higher-order-function ray-cast over
+    the region's vertex arrays carried by the join (no per-region UDF
     closures). operators/bulkcover.py."""
     from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
 
@@ -409,10 +410,16 @@ def _cellunion_input() -> dict[int, "np.ndarray"]:
 
 def _cell_groups_frame(spark: SparkSession, groups: "dict[int, np.ndarray]") -> DataFrame:
     """(group_id, cell_id) bigint rows of group -> cells, one Arrow
-    LocalRelation (the covering-table builder, renamed)."""
-    from s2cell_spark.operators.containment import coverings_df
-
-    return coverings_df(spark, groups).select(F.col("region_id").alias("group_id"), "cell_id")
+    LocalRelation."""
+    cells = [c.view(np.int64) for c in groups.values()]
+    return arrow_frame(
+        spark,
+        {
+            "group_id": np.repeat(np.array(list(groups), np.int64), [len(c) for c in cells]),
+            "cell_id": np.concatenate([np.empty(0, np.int64)] + cells),
+        },
+        "group_id bigint, cell_id bigint",
+    )
 
 
 def _q_cell_union_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,9 +13,12 @@ partitions and the driver never sees a vertex.
 Pipeline (``bulk_pip_join``):
 
 1. polygons (region_id, rings) --mapInArrow--> mixed-level covering
-   rows (region_id, cell_id, level);
+   rows (region_id, cell_id): one polygon BFS per polygon, its cells
+   deeper than the join level lifted to their deduplicated ancestors in
+   numpy (covering.lift_to_level); a row with a null region_id or no
+   vertex is covered by nothing;
 2. native single-level normalization (containment.normalize_covering_df
-   — explode/sequence, no driver);
+   — one explode/sequence projection, no shuffle, no driver);
 3. covering equi-join against pages' ``parent(cell_id, L)`` — broadcast
    for dim-sized polygon tables (the default here); for huge polygon
    sets the same key degrades to one co-partitioning shuffle of the
@@ -41,14 +44,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
-from s2cell_spark import kernels as K
 from s2cell_spark.functions.udfs import arrow_to_numpy, numpy_to_arrow
 from s2cell_spark.operators import covering as COV
 
@@ -58,52 +55,47 @@ _COV_SCHEMA = StructType(
     [
         StructField("region_id", LongType(), False),
         StructField("cell_id", LongType(), False),
-        StructField("level", IntegerType(), False),
     ]
 )
 
 
-def cover_polygons(
-    polygons: DataFrame,
-    max_level: int = 10,
-    min_emit_level: "int | None" = None,
-    id_col: str = "region_id",
-    rings_col: str = "rings",
-) -> DataFrame:
-    """Mixed-level coverings of every polygon in `polygons`, computed on
-    the EXECUTORS: (region_id, cell_id, level) rows.
+def _cover_polygons(polygons: DataFrame, level: int, max_level: int) -> DataFrame:
+    """Mixed-level coverings of every polygon in `polygons` (region_id
+    long, rings :data:`RINGS_TYPE` — outer array = rings, even-odd holes
+    supported), computed on the EXECUTORS: (region_id, cell_id) rows with
+    no cell deeper than `level`, ready for
+    :func:`~s2cell_spark.operators.containment.normalize_covering_df`.
 
-    `polygons` needs `id_col` (long) and `rings_col`
-    (array<array<struct<lat,lon>>> — outer array = rings, even-odd holes
-    supported). Each Arrow batch runs the polygon-aware BFS coverer
-    (covering.polygon_covering — superset guarantee documented there)
-    per polygon; with the polygons table repartitioned, covering cost
-    parallelizes across the cluster instead of the driver.
+    Each Arrow batch runs the polygon-aware BFS coverer
+    (covering.polygon_covering — superset guarantee documented there) once
+    per polygon, then lifts its cells deeper than `level` to their
+    deduplicated ancestors (covering.lift_to_level); with the polygons
+    table repartitioned, covering cost parallelizes across the cluster
+    instead of the driver. A row with a null region_id, or with no vertex
+    (null or empty rings), contains no point and emits no cell.
     """
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             rids, cells = [], []
-            ids, _ = arrow_to_numpy(batch.column(id_col), np.int64)
-            for rid, rings in zip(ids, _polygon_rings(batch.column(rings_col))):
-                cov = COV.polygon_covering(
-                    rings, max_level=max_level, min_emit_level=min_emit_level
-                )
+            ids, valid = arrow_to_numpy(batch.column("region_id"), np.int64)
+            for rid, ok, rings in zip(ids, valid, _polygon_rings(batch.column("rings"))):
+                if not ok or not any(len(r) for r in rings):
+                    continue
+                cov = COV.lift_to_level(COV.polygon_covering(rings, max_level=max_level), level)
                 rids.append(np.full(cov.shape, rid, dtype=np.int64))
                 cells.append(cov)
             if not cells:
                 continue
-            cell_arr = np.concatenate(cells)
             yield pa.RecordBatch.from_arrays(
                 [
                     numpy_to_arrow(np.concatenate(rids)),
-                    numpy_to_arrow(cell_arr.view(np.int64)),
-                    numpy_to_arrow(K.cell_id_to_level(cell_arr), type=pa.int32()),
+                    numpy_to_arrow(np.concatenate(cells).view(np.int64)),
                 ],
                 names=_COV_SCHEMA.names,
             )
 
-    return polygons.select(id_col, rings_col).mapInArrow(run, schema=_COV_SCHEMA)
+    return polygons.select("region_id", "rings").mapInArrow(run, schema=_COV_SCHEMA)
 
 
 def _polygon_rings(rings: pa.ListArray) -> list[list[np.ndarray]]:
@@ -180,9 +172,7 @@ def bulk_pip_join(
     from s2cell_spark.operators.containment import normalize_covering_df
     from s2cell_spark.plans.joins import broadcast_if_small
 
-    cov = normalize_covering_df(
-        cover_polygons(polygons, max_level=max_level), level
-    )
+    cov = normalize_covering_df(_cover_polygons(polygons, level, max_level), level)
     if broadcast_covering:
         cov = F.broadcast(cov)
     key = cell_id_to_parent_cell_id(F.col(cell_col), level)

@@ -25,31 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s2cell_spark import functions as S2F
-from s2cell_spark import kernels as K
 from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators import covering as COV
-
-
-def coverings_df(
-    spark: SparkSession, regions: dict[int, np.ndarray]
-) -> DataFrame:
-    """Small DataFrame (region_id, cell_id, level), all bigint, from
-    region -> cells; an empty dict gives an empty frame. Ships as one
-    Arrow ``LocalRelation`` (:func:`~s2cell_spark.functions.udfs.arrow_frame`)."""
-    cells = np.concatenate(
-        [np.empty(0, np.uint64)] + [c.view(np.uint64) for c in regions.values()]
-    )
-    return arrow_frame(
-        spark,
-        {
-            "region_id": np.repeat(
-                np.array(list(regions), dtype=np.int64), [len(c) for c in regions.values()]
-            ),
-            "cell_id": cells.view(np.int64),
-            "level": K.cell_id_to_level(cells),
-        },
-        "region_id bigint, cell_id bigint, level bigint",
-    )
 
 
 def normalized_coverings_df(
@@ -57,49 +34,57 @@ def normalized_coverings_df(
 ) -> DataFrame:
     """(region_id, cov_cell) at a single level — the broadcast side of
     :func:`containment_join_equi`. Build once per query; reusable across
-    executions.
+    executions; an empty dict gives an empty frame.
 
-    Only the (small) mixed-level covering ships driver->JVM; the
-    single-level expansion is :func:`normalize_covering_df` (fully
-    native). For a covering computed DISTRIBUTED from a polygons TABLE
-    (no driver trip at all) see ``operators.bulkcover.cover_polygons``.
+    Cells deeper than `level` are lifted to their deduplicated level-`level`
+    ancestors on the driver (:func:`~s2cell_spark.operators.covering.lift_to_level`),
+    so only that (small) mixed-level covering ships driver->JVM, as one
+    Arrow ``LocalRelation``; the expansion of coarser cells is
+    :func:`normalize_covering_df` (fully native). For a covering computed
+    DISTRIBUTED from a polygons TABLE (no driver trip at all) see
+    ``operators.bulkcover.bulk_pip_join``.
     """
-    return normalize_covering_df(coverings_df(spark, regions), level)
+    lifted = [COV.lift_to_level(c, level).view(np.int64) for c in regions.values()]
+    cov = arrow_frame(
+        spark,
+        {
+            "region_id": np.repeat(np.array(list(regions), np.int64), [len(c) for c in lifted]),
+            "cell_id": np.concatenate([np.empty(0, np.int64)] + lifted),
+        },
+        "region_id bigint, cell_id bigint",
+    )
+    return normalize_covering_df(cov, level)
 
 
-def normalize_covering_df(cov_raw: DataFrame, level: int) -> DataFrame:
-    """Normalize a mixed-level covering frame (region_id, cell_id, level)
-    to (region_id, cov_cell) at ONE level, entirely natively.
+def normalize_covering_df(cov: DataFrame, level: int) -> DataFrame:
+    """Normalize a mixed-level covering frame (region_id, cell_id) to
+    (region_id, cov_cell) at ONE level, entirely natively, in one
+    projection.
 
-    The expansion to 4^(level - l) single-level descendants runs via
-    ``explode(sequence(first_child, last_child, step))`` — level-L cells
-    under an ancestor are consecutive IDs exactly ``2*lsb(L)`` apart
-    (SURVEY.md §1.1 range property). Nothing ships through the driver,
-    so the input may be any size (e.g. the executor-side covering of a
+    Each cell becomes the level-L cells ``explode(sequence(first, last,
+    2*lsb(L)))`` — level-L cells under an ancestor are consecutive IDs
+    exactly ``2*lsb(L)`` apart (SURVEY.md §1.1 range property); a cell
+    at or below level L has ``first == last``, its level-L ancestor.
+    Rows are not deduplicated: a disjoint covering with no cell deeper
+    than L (what ``covering.lift_to_level`` returns) yields each
+    (region_id, cov_cell) once. Nothing ships through the driver, so
+    the input may be any size (e.g. the executor-side covering of a
     10^6-polygon table). Signed-long order is safe: a covering cell's
     descendants share its face, so the sequence never crosses the
     face-3/4 sign boundary.
     """
     lsb = 1 << (2 * (30 - level))
-    step = 2 * lsb
     cell = F.col("cell_id")
-    shallow = cov_raw.filter(F.col("level") <= level).select(
+    return cov.select(
         "region_id",
         F.explode(
             F.sequence(
                 S2F.cell_id_range_min(cell).bitwiseAND(-lsb).bitwiseOR(lsb),
                 S2F.cell_id_range_max(cell).bitwiseAND(-lsb).bitwiseOR(lsb),
-                F.lit(step),
+                F.lit(2 * lsb),
             )
         ).alias("cov_cell"),
     )
-    deep = cov_raw.filter(F.col("level") > level).select(
-        "region_id",
-        S2F.cell_id_to_parent_cell_id(cell, level).alias("cov_cell"),
-    )
-    # mixed-level coverings are disjoint, so only the deep->parent arm can
-    # produce duplicates
-    return shallow.unionByName(deep.dropDuplicates(["region_id", "cov_cell"]))
 
 
 def containment_join_equi(

@@ -394,20 +394,30 @@ def cap_covering(
     return _cover(classify, max_level, min_emit_level)
 
 
+def lift_to_level(ids: np.ndarray, level: int) -> np.ndarray:
+    """Cells deeper than `level` replaced by their level-`level` ancestors,
+    deduplicated; cells at `level` or coarser pass through unchanged. On a
+    disjoint covering the result is duplicate-free and still disjoint."""
+    ids = ids.astype(np.uint64, copy=False)
+    deep = K.cell_id_to_level(ids) > level
+    if not deep.any():
+        return ids
+    return np.concatenate(
+        [ids[~deep], np.unique(K.cell_id_to_parent_cell_id(ids[deep], level))]
+    )
+
+
 def covering_to_level(ids: np.ndarray, level: int) -> np.ndarray:
     """Normalize a mixed-level covering to single-level `level` cells by
-    expanding descendants (cells already at `level` or deeper pass through
-    as their `level` ancestor). Deduplicated."""
+    expanding descendants (cells deeper than `level` are lifted to their
+    `level` ancestor by :func:`lift_to_level`). Deduplicated."""
+    ids = lift_to_level(ids, level)
     lvls = K.cell_id_to_level(ids).astype(np.int64)
-    out = []
-    shallow = ids[lvls < level]
-    deep = ids[lvls >= level]
-    if deep.size:
-        out.append(K.cell_id_to_parent_cell_id(deep, level))
+    out = [ids[lvls == level]]
     lsb_l = np.uint64(1) << np.uint64(2 * (30 - level))
     step = lsb_l << np.uint64(1)
-    for cid in shallow:
+    shallow = lvls < level
+    for cid, lvl in zip(ids[shallow], lvls[shallow]):
         first = (K.cell_id_range_min(np.array([cid], dtype=np.uint64))[0] & ~(lsb_l - np.uint64(1))) | lsb_l
-        count = 4 ** (level - int(K.cell_id_to_level(np.array([cid], dtype=np.uint64))[0]))
-        out.append(first + step * np.arange(count, dtype=np.uint64))
-    return np.unique(np.concatenate(out)) if out else np.empty(0, dtype=np.uint64)
+        out.append(first + step * np.arange(4 ** (level - int(lvl)), dtype=np.uint64))
+    return np.unique(np.concatenate(out))
