@@ -493,6 +493,17 @@ def test_streaming_first_seen_dedups_across_batches(spark, tmp_path):
     assert sorted(r["text_md5"] for r in got) == sorted(groups)
     # and the keeper belongs to that md5's group
     assert all(r["doc_id"] in groups[r["text_md5"]] for r in got)
+    # the keeper is the lowest doc_id of its md5 within the FIRST batch
+    # that carries it (exact_dup_groups' keeper rule), which a native
+    # dropDuplicates, keeping an arbitrary row, would not guarantee
+    keeper = {}
+    for name in ("batch_a", "batch_b"):
+        batch = spark.read.parquet(f"{src}/{name}.parquet").groupBy(
+            F.md5("text").alias("text_md5")
+        ).agg(F.min("doc_id").alias("doc_id"))
+        for r in batch.collect():
+            keeper.setdefault(r["text_md5"], r["doc_id"])
+    assert {r["text_md5"]: r["doc_id"] for r in got} == keeper
     assert len(got) < whole.count()  # the overlap really contained dups
 
 
@@ -804,6 +815,23 @@ def test_empty_batches_return_empty_frames(spark):
     near = knn(pages, spark, [], k=3)
     assert near.columns == ["query_id", "doc_id", "dist_deg", "rank"]
     assert near.collect() == []
+
+
+def test_knn_rejects_duplicate_query_ids(spark):
+    """A query id keys its search radius and its result rows, so a
+    repeated id would keep only its last point and repeat that point's
+    rows once per duplicate. knn raises ValueError naming every repeated
+    id, before it caches the narrow page projection."""
+    from pyspark.storagelevel import StorageLevel
+
+    from s2cell_spark.operators.knn import knn
+
+    pages = with_cell_id(load_pages(spark, SF_SMOKE))
+    queries = [(0, 40.7, -74.0), (0, 51.5, -0.1), (4, 0.0, 0.0), (9, 1.0, 1.0), (9, 2.0, 2.0)]
+    with pytest.raises(ValueError, match=r"duplicate query ids \[0, 9\]"):
+        knn(pages, spark, queries, k=3, level=6)
+    narrow = pages.select("doc_id", "lat", "lon", "cell_id")
+    assert narrow.storageLevel == StorageLevel.NONE
 
 
 def test_knn_verify_covering_budget_across_radii():

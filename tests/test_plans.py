@@ -598,7 +598,8 @@ def test_one_python_boundary_style_outside_streaming():
     Arrow (arrow_udf / mapInArrow). A pandas UDF or mapInPandas stage
     would bring back the pandas null/dtype conversion, under which a
     null in an int64 batch turns the whole batch float64 and corrupts
-    cell IDs above 2^53."""
+    cell IDs above 2^53. Inside streaming/, the one pandas stage left
+    is the stateful first-seen dedup in ingest.py."""
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent / "s2cell_spark"
@@ -610,6 +611,12 @@ def test_one_python_boundary_style_outside_streaming():
         if "pandas_udf" in line or "mapInPandas" in line
     ]
     assert hits == []
+    stateful = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if "applyInPandasWithState(" in path.read_text()
+    ]
+    assert stateful == ["streaming/ingest.py"]
 
 
 def test_driver_built_covering_is_a_local_relation(spark):
