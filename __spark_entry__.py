@@ -264,57 +264,41 @@ def _union_variants(parts: "dict[str, DataFrame]") -> DataFrame:
 
 
 def _q_pip_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIP on the two fixture polygons through ``bulk_pip_join``:
-    POLYGON-AWARE executor coverings (cells fully outside the even-odd
-    region — including inside holes — never become candidates; broadcast
-    containment join) -> native even-odd ray-cast. Two regions: a concave
-    polygon (covering area ~2x tighter than its bbox) and a polygon with a
-    hole (hole excluded from the covering)."""
+    """Polygon PIP entry, two arms under one registry slot (cap
+    invariant), both through :func:`_pip_polygons_arm`: `fixture` = the
+    2 concave/hole fixture polygons; `bulk` = the 120 generated star
+    polygons, spread over 8 partitions for the executor covering stage."""
+    return _union_variants(
+        {
+            "fixture": _pip_polygons_arm(spark, sf_dir, PIP_POLYGONS),
+            "bulk": _pip_polygons_arm(spark, sf_dir, _bulk_polygons(), partitions=8),
+        }
+    )
+
+
+def _pip_polygons_arm(
+    spark: SparkSession, sf_dir: str, polygons: dict, partitions: int | None = None
+) -> DataFrame:
+    """PIP of the pages against a ``{region_id: rings}`` polygons TABLE
+    through ``bulk_pip_join``: POLYGON-AWARE coverings computed on the
+    EXECUTORS (one mapInArrow pass, one BFS per polygon; cells fully
+    outside the even-odd region — including inside holes — never become
+    candidates), normalized natively by one explode/sequence projection
+    (no shuffle), covering equi-join, then a NATIVE higher-order-function
+    ray-cast over the region's vertex arrays carried by the join (no
+    per-region UDF closures). operators/bulkcover.py. `partitions`, when
+    set, repartitions the polygons frame before the covering stage."""
     from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
 
     polys = arrow_frame(
-        spark, list(PIP_POLYGONS.items()), f"region_id long, rings {RINGS_TYPE}"
+        spark, list(polygons.items()), f"region_id long, rings {RINGS_TYPE}"
     )
+    if partitions:
+        polys = polys.repartition(partitions)
     out = bulk_pip_join(_pages_with_cells(spark, sf_dir), polys, level=10, max_level=10)
     return out.select(
         F.col("region_id").cast("long").alias("region_id"),
         F.col("doc_id").cast("long").alias("doc_id"),
-    )
-
-
-def _q_pip_regions_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bulk PIP against a polygons TABLE (120 generated star polygons):
-    coverings computed on the EXECUTORS (one mapInArrow pass over the
-    polygon frame, one BFS per polygon — no per-polygon driver BFS),
-    normalized natively by one explode/sequence projection (no shuffle),
-    covering equi-join, then a NATIVE higher-order-function ray-cast over
-    the region's vertex arrays carried by the join (no per-region UDF
-    closures). operators/bulkcover.py."""
-    from s2cell_spark.operators.bulkcover import RINGS_TYPE, bulk_pip_join
-
-    rows = [
-        (rid, [[(la, lo) for la, lo in ring] for ring in rings])
-        for rid, rings in _bulk_polygons().items()
-    ]
-    polys = arrow_frame(spark, rows, f"region_id long, rings {RINGS_TYPE}").repartition(8)
-    pages = _pages_with_cells(spark, sf_dir)
-    out = bulk_pip_join(pages, polys, level=10, max_level=10)
-    return out.select(
-        F.col("region_id").cast("long").alias("region_id"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-    )
-
-
-def _q_pip_polygons_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon PIP entry, two arms under one registry slot (cap
-    invariant), both through ``bulk_pip_join`` (executor coverings +
-    native ray-cast): `fixture` = the 2 concave/hole fixture polygons;
-    `bulk` = the 120 generated star polygons."""
-    return _union_variants(
-        {
-            "fixture": _q_pip_polygons(spark, sf_dir),
-            "bulk": _q_pip_regions_bulk(spark, sf_dir),
-        }
     )
 
 
@@ -876,12 +860,11 @@ def _q_asof_clicks_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-sessionization, batch form: native ``F.session_window`` (zero
-    Python; gap-merge aggregation with partial merge before the
-    exchange). The streaming twin (streaming.sessionize.streaming_sessions,
-    applyInPandasWithState + event-time timeout) is equivalence-tested
-    against this. Oracle: DuckDB islands-and-gaps (lag -> break flag ->
-    running sum -> group)."""
+    """Gap-sessionization: native ``F.session_window`` (zero Python;
+    gap-merge aggregation with partial merge before the exchange). The
+    same ``user_sessions`` runs on a watermarked stream in append mode,
+    equivalence-tested against this batch form. Oracle: DuckDB
+    islands-and-gaps (lag -> break flag -> running sum -> group)."""
     from s2cell_spark.streaming.sessionize import user_sessions
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1959,7 +1942,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cell_decode": _q_cell_decode,
         "events_window_1h": _q_events_window,
         "pip_boxes": _q_pip,
-        "pip_polygons": _q_pip_polygons_all,
+        "pip_polygons": _q_pip_polygons,
         "knn_pages": _q_knn,
         "knn_join_bulk": _q_knn_join,
         "within_radius": _q_within_radius,
@@ -2035,40 +2018,15 @@ FROM pages p JOIN boxes b
 """
 
 
-def _pip_polygons_oracle() -> str:
-    """Even-odd ray-cast unrolled per polygon edge, identical term order to
-    the native exact stage (operators/bulkcover.py:pip_parity_expr); the
-    covering prune is a superset so the oracle skips it."""
-    arms = []
-    for rid, rings in PIP_POLYGONS.items():
-        terms = []
-        for ring in rings:
-            k = len(ring)
-            for a in range(k):
-                y1, x1 = ring[a]
-                y2, x2 = ring[(a + 1) % k]
-                if y1 == y2:
-                    continue  # engine skips horizontal edges (div by zero)
-                terms.append(
-                    f"(CASE WHEN (({_flit(y1)} > lat) <> ({_flit(y2)} > lat)) AND "
-                    f"(lon < ({_flit(x2)} - {_flit(x1)}) * (lat - {_flit(y1)}) / ({_flit(y2)} - {_flit(y1)}) + {_flit(x1)}) "
-                    f"THEN 1 ELSE 0 END)"
-                )
-        arms.append(
-            f"SELECT CAST({rid} AS BIGINT) AS region_id, CAST(doc_id AS BIGINT) AS doc_id "
-            f"FROM pages WHERE ({' + '.join(terms)}) % 2 = 1"
-        )
-    return f"{_PAGES_CTE}\n" + "\nUNION ALL\n".join(arms)
-
-
-def _pip_regions_bulk_oracle() -> str:
-    """Crossing-PARITY form of the even-odd ray cast over the generated
-    polygon table: join pages x crossing edges, keep (region, doc) pairs
-    with an ODD crossing count. Identical arithmetic term order to
+def _pip_polygons_oracle(polygons: dict) -> str:
+    """Crossing-PARITY form of the even-odd ray cast over a
+    ``{region_id: rings}`` polygons dict: join pages x crossing edges
+    (every ring's edges under its region), keep (region, doc) pairs with
+    an ODD crossing count. Identical arithmetic term order to
     bulkcover.pip_parity_expr (and covering._points_in_polygon). The
     covering prune is a superset, so the oracle needs no covering."""
     rows = []
-    for rid, rings in _bulk_polygons().items():
+    for rid, rings in polygons.items():
         for ring in rings:
             k = len(ring)
             for a in range(k):
@@ -3116,8 +3074,8 @@ def oracle_sql() -> dict[str, str]:
         "pip_boxes": _pip_oracle(),
         "pip_polygons": _variant_oracle(
             {
-                "fixture": _pip_polygons_oracle(),
-                "bulk": _pip_regions_bulk_oracle(),
+                "fixture": _pip_polygons_oracle(PIP_POLYGONS),
+                "bulk": _pip_polygons_oracle(_bulk_polygons()),
             }
         ),
         "knn_pages": _knn_oracle(),

@@ -36,6 +36,7 @@ symbol-for-symbol so rank ordering agrees bit-for-bit on float64.
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -200,6 +201,9 @@ def knn(
     covering level, so a batch whose radii span orders of magnitude is
     covered at the coarse end.
 
+    Query ids key the radii and the result rows, so they must be distinct:
+    a repeated id raises ValueError naming it, before any page is read.
+
     The result is collected on the driver and returned as a local table,
     and the narrow (id, lat, lon, cell) projection the rounds share is
     unpersisted before returning: there is no cache to clear.
@@ -212,6 +216,9 @@ def knn(
     """
     from s2cell_spark.operators.radius import suggest_cap_level, within_radius_join
 
+    dup = sorted(qid for qid, n in Counter(q[0] for q in queries).items() if n > 1)
+    if dup:
+        raise ValueError(f"knn: duplicate query ids {dup}")
     narrow = pages.select(id_col, "lat", "lon", cell_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )

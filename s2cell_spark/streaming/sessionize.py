@@ -5,62 +5,38 @@ turns, device activity bursts): consecutive events of a key belong to one
 session while the gap between them stays under ``gap``; a quiet period
 closes the session.
 
-* **Batch**: :func:`user_sessions` uses Spark's NATIVE
-  ``F.session_window`` — whole-stage-codegen'd gap-merge aggregation, no
-  Python. The DuckDB oracle re-derives sessions relationally (lag +
-  gap-flag + running sum = classic islands-and-gaps), so the native
-  operator is value-checked end-to-end.
-* **Streaming**: :func:`streaming_sessions` is the custom stateful form
-  via ``applyInPandasWithState`` with an EVENT-TIME timeout: per-key
-  state holds the open session (start, last_ts, count); events extend or
-  roll it; the watermark passing last_ts + gap fires the timeout and
-  emits the CLOSED session exactly once. This is the
-  state-with-deadline pattern ``session_window`` aggregation cannot
-  express when the per-session payload is custom (here: count + span;
-  in production: token budgets, dedup digests, per-session sketches).
+:func:`user_sessions` is Spark's NATIVE ``F.session_window`` aggregation —
+whole-stage-codegen'd gap-merge, no Python — and the one sessionizer for
+batch and stream. The DuckDB oracle re-derives sessions relationally (lag
++ gap-flag + running sum = classic islands-and-gaps), so the native
+operator is value-checked end-to-end; streaming==batch is tested.
 
-State at scale: one small record per key with an OPEN session; closed
-sessions leave the store immediately (timeout removal). Shuffles once on
-the key per micro-batch — the same partitioning any keyed aggregate pays.
+A stream caller watermarks the event time and writes in append mode::
+
+    user_sessions(events_stream.withWatermark("ts", "1 hour"), gap="30 minutes")
+
+State at scale: the JVM state store holds the open sessions of each key;
+a session leaves it when the watermark closes it. Shuffles once on the
+key per micro-batch — the same partitioning any keyed aggregate pays.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ]
-)
-# open-session state: (start_us, last_us, n) as int64 epoch-micros
-_SESSION_STATE = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
 
 
 def user_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """(user_id, session_start, session_end, n_events) per gap-session —
-    batch, fully native (``F.session_window``). ``session_end`` is the
-    LAST EVENT's timestamp (not Spark's end+gap convention), so the batch
-    and streaming forms agree row-for-row."""
+    """(user_id, session_start, session_end, n_events) per gap-session,
+    fully native (``F.session_window``). ``session_end`` is the LAST
+    EVENT's timestamp (not Spark's end+gap convention).
+
+    Runs unchanged on a stream watermarked on ``ts``, in append mode:
+    each session is emitted once, when the watermark passes its last
+    event + ``gap``. A within-watermark event that arrives more than
+    ``gap`` before an open session starts its own session, exactly as in
+    batch; one within ``gap`` of its start extends it backwards. A
+    per-session payload is one more aggregate in the same ``groupBy``."""
     return (
         events.groupBy(
             F.col("user_id"), F.session_window(F.col("ts"), gap).alias("w")
@@ -72,84 +48,4 @@ def user_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "session_end",
             F.col("n_events").cast("long").alias("n_events"),
         )
-    )
-
-
-def streaming_sessions(
-    events_stream: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming gap-sessionization with exactly-once CLOSED-session
-    emission. Equivalent to :func:`user_sessions` over the union of all
-    micro-batches, for every session the watermark has closed (tested
-    streaming==batch)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = int(gap_seconds) * 1_000_000
-
-    def sessionize(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-            return
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if rows.empty:
-            return
-        ts_us = rows["ts"].astype("datetime64[us]").astype("int64").sort_values()
-        # Gap-merge the sorted union of this batch's events AND the open
-        # session treated as an interval item (start, last, n). This keeps
-        # batch equivalence for within-watermark out-of-order events in
-        # BOTH directions: an event within gap of the open session's start
-        # legitimately extends it backwards; an event more than gap BEFORE
-        # the start forms its own (immediately closed) session, exactly as
-        # native session_window would — no silent backward merge across a
-        # quiet period (the watermark > gap case).
-        items = [(int(t), int(t), 1) for t in ts_us]
-        if state.exists:
-            s0, l0, n0 = state.get
-            items.append((s0, l0, n0))
-            items.sort(key=lambda it: it[0])
-        out = []
-        start_us, last_us, n = items[0]
-        for s, e, cnt in items[1:]:
-            # a session's window is [start, last+gap): an item starting AT
-            # last+gap begins a new session, matching session_window
-            if s - last_us >= gap_us:
-                out.append((start_us, last_us, n))
-                start_us, last_us, n = s, e, cnt
-            else:
-                last_us = max(last_us, e)
-                n += cnt
-        state.update((start_us, last_us, n))
-        # the still-open tail session times out once the event-time
-        # watermark passes last_ts + gap
-        state.setTimeoutTimestamp(last_us // 1000 + gap_us // 1000)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in out],
-                    "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in out],
-                    "n_events": [n_ for _, _, n_ in out],
-                }
-            )
-
-    keyed = events_stream.select("user_id", "ts").withWatermark("ts", watermark)
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        sessionize,
-        outputStructType=SESSION_OUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

@@ -976,13 +976,14 @@ def test_asof_join_semantics_and_tolerance(spark):
 
 
 def test_streaming_sessions_match_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer == native batch session_window
-    for every session the watermark has closed: feed events in two
+    """Native session_window on a watermarked stream == the same
+    user_sessions in batch, for every session the watermark has closed
+    (each emitted once, in append mode): feed events in two
     micro-batches (second batch re-opens one user's session and pushes
     the watermark far enough to close everything earlier)."""
     from datetime import datetime, timedelta
 
-    from s2cell_spark.streaming.sessionize import streaming_sessions, user_sessions
+    from s2cell_spark.streaming.sessionize import user_sessions
 
     t0 = datetime(2024, 3, 1, 0, 0, 0)
     m = lambda k: t0 + timedelta(minutes=k)  # noqa: E731
@@ -1011,7 +1012,7 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
         stream = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", "1"
         ).parquet(str(src / "*"))
-        out = streaming_sessions(stream, gap_seconds=1800, watermark="0 seconds")
+        out = user_sessions(stream.withWatermark("ts", "0 seconds"), gap="30 minutes")
         q = (
             out.writeStream.format("parquet")
             .option("path", sink)
@@ -1687,10 +1688,12 @@ def test_streaming_sessions_out_of_order_beyond_gap_splits(spark, tmp_path):
     arriving more than `gap` BEFORE the open session's start must form
     its own session (as batch session_window would), NOT merge backwards
     across the quiet period; an event within gap of the start still
-    legitimately extends the session backwards (round-3 ADVICE)."""
+    legitimately extends the session backwards (round-3 ADVICE). The
+    streaming side is the same native user_sessions on a watermarked
+    stream."""
     from datetime import datetime, timedelta
 
-    from s2cell_spark.streaming.sessionize import streaming_sessions, user_sessions
+    from s2cell_spark.streaming.sessionize import user_sessions
 
     t0 = datetime(2024, 3, 1, 0, 0, 0)
     m = lambda k: t0 + timedelta(minutes=k)  # noqa: E731
@@ -1720,7 +1723,7 @@ def test_streaming_sessions_out_of_order_beyond_gap_splits(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(src / "*"))
         )
-        out = streaming_sessions(stream, gap_seconds=1800, watermark="12 hours")
+        out = user_sessions(stream.withWatermark("ts", "12 hours"), gap="30 minutes")
         q = (
             out.writeStream.format("parquet")
             .option("path", sink)

@@ -546,17 +546,18 @@ def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, m
     assert (row["p"], row["m"]) == (500, 87)
 
 
-@pytest.mark.parametrize("query", ["_q_pip_polygons", "_q_pip_regions_bulk"])
-def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry, query):
-    """The bulk-PIP pipeline's scale contract, for both polygon PIP
-    queries: the polygon coverings are an EXECUTOR stage (MapInArrow over
+@pytest.mark.parametrize("arm", ["fixture", "bulk"])
+def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry, arm):
+    """The bulk-PIP pipeline's scale contract, for both arms of the
+    pip_polygons query: the polygon coverings are an EXECUTOR stage (MapInArrow over
     the polygons frame, below a broadcast — never a per-polygon driver
     loop), the exact ray-cast is a native higher-order-function filter
     (no second Python node — the only ArrowEvalPython is the pages
     S2-encode kernel), and the pages side joins by broadcast with no
     sort-merge anywhere. Each polygon is covered once (one MapInArrow
     node) and normalized by one projection (no hash exchange at all)."""
-    plan = _plan(getattr(entry, query)(spark, SF))
+    args = {"fixture": (entry.PIP_POLYGONS,), "bulk": (entry._bulk_polygons(), 8)}[arm]
+    plan = _plan(entry._pip_polygons_arm(spark, SF, *args))
     assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1  # the pages S2-encode kernel
