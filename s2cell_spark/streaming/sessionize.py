@@ -7,8 +7,8 @@ closes the session.
 
 :func:`user_sessions` is Spark's NATIVE ``F.session_window`` aggregation —
 whole-stage-codegen'd gap-merge, no Python — and the one sessionizer for
-batch and stream. The DuckDB oracle re-derives sessions relationally (lag
-+ gap-flag + running sum = classic islands-and-gaps), so the native
+batch and stream. The DuckDB oracle re-derives sessions relationally
+(lag, gap flag, running sum: classic islands-and-gaps), so the native
 operator is value-checked end-to-end; streaming==batch is tested.
 
 A stream caller watermarks the event time and writes in append mode::
