@@ -301,3 +301,38 @@ def test_canonical_token_strips_all_whitespace(spark):
         return "X" if s in ("", "x") else s
 
     assert got == [ref(t) for t in toks]
+
+
+def test_one_spark_implementation_per_function(spark, monkeypatch):
+    """Each S2 function has one Spark form. The Arrow UDFs the package
+    exports are exactly the ones ``register_sql_functions`` binds as
+    Python UDFs (the float-math kernels); every bit/token operation is a
+    native Catalyst expr only, and the decode has no native twin."""
+    from pyspark.sql.udf import UDFRegistration
+
+    from s2cell_spark.functions import native_encode
+
+    registered = []
+    register = UDFRegistration.register
+
+    def recording(self, name, f, *args, **kwargs):
+        registered.append(name)
+        return register(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", recording)
+    S2F.register_sql_functions(spark)
+    monkeypatch.undo()
+
+    exported = {
+        getattr(S2F, n).__name__ for n in S2F.__all__ if hasattr(getattr(S2F, n), "evalType")
+    }
+    five = {
+        "s2_lat_lon_to_cell_id",
+        "s2_cell_id_to_lat_lon",
+        "s2_neighbor_cell_ids",
+        "s2_cell_id_to_face_ij",
+        "s2_face_ij_to_cell_id",
+    }
+    assert sorted(registered) == sorted(five)
+    assert exported == five, sorted(exported - five)
+    assert not hasattr(native_encode, "with_lat_lon")
