@@ -45,13 +45,17 @@ stack into one function where each step is a reused local variable —
 exactly the CSE a hand-written loop would get. Plan shape is pinned by
 tests/test_plans.py (single codegen stage, no Python eval).
 
-The steps are built once per key — ``(lat_col, lon_col, level, out)``
-for the encode, ``(cell_col, lat_out, lon_out)`` for the decode — and
-kept as JVM Seqs of unresolved Columns, which resolve against whatever
-DataFrame they are applied to. A repeat call is one Py4J call per step
-(~26 for a level-30 encode) instead of rebuilding ~250 Column
-expressions (~3,600 round trips). A per-row ``level`` Column is not a
-key; that form builds its steps on every call.
+The steps are built once per ``(lat_col, lon_col, level, out)`` key
+and kept as JVM Seqs of unresolved Columns, which resolve against
+whatever DataFrame they are applied to. A repeat call is one Py4J call
+per step (~26 for a level-30 encode) instead of rebuilding ~250 Column
+expressions (~3,600 round trips). `level` is an int: every caller
+encodes at one fixed level, and a per-row level is the Arrow UDF's
+job (``functions.lat_lon_to_cell_id``).
+
+There is no native decode: cell ID -> lat/lon runs through the Arrow
+UDF ``s2_cell_id_to_lat_lon``, the one form that also registers as a
+SQL function.
 """
 
 from __future__ import annotations
@@ -117,32 +121,28 @@ def with_cell_id(
     df: DataFrame,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    level: "int | Column" = MAX_LEVEL,
+    level: int = MAX_LEVEL,
     out: str = "cell_id",
 ) -> DataFrame:
-    """Append ``out`` = S2 cell ID of (`lat_col`, `lon_col`) at `level`,
-    computed entirely JVM-side. `level` is an int (runs only the
-    ``required_rounds(level)`` lookup rounds, s2cell/s2cell.py:463-471)
-    or a Column (runs all 8 rounds — truncation overwrites the excess,
-    bit-identical, so one batch may mix levels).
+    """Append ``out`` = S2 cell ID of (`lat_col`, `lon_col`) at the int
+    `level`, computed entirely JVM-side; only the
+    ``required_rounds(level)`` lookup rounds run (s2cell/s2cell.py:463-471).
 
     Intermediates are temp columns (``_s2n_*``), dropped before return;
     they exist so codegen computes each pipeline stage once (module
     docstring). Input columns are otherwise untouched.
     """
-    if isinstance(level, int):
-        if not 0 <= level <= MAX_LEVEL:
-            raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
-        return _apply(df, _encode_steps(lat_col, lon_col, level, out))
-    return _apply(df, _encode_steps.__wrapped__(lat_col, lon_col, level, out))
+    if not isinstance(level, int):
+        raise TypeError(f"level must be an int, got {type(level).__name__}")
+    if not 0 <= level <= MAX_LEVEL:
+        raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
+    return _apply(df, _encode_steps(lat_col, lon_col, level, out))
 
 
 @functools.lru_cache(maxsize=None)
-def _encode_steps(lat_col: str, lon_col: str, level: "int | Column", out: str) -> tuple:
-    """The encode's ``withColumns`` steps, built once per int-level key
-    (the per-row Column level calls the unwrapped builder)."""
-    per_row_level = not isinstance(level, int)
-    rounds = 8 if per_row_level else required_rounds(level)
+def _encode_steps(lat_col: str, lon_col: str, level: int, out: str) -> tuple:
+    """The encode's ``withColumns`` steps, built once per key."""
+    rounds = required_rounds(level)
     steps: list[dict[str, Column]] = []
 
     lat_r = F.col(lat_col) * F.lit(_DEG2RAD)
@@ -241,139 +241,7 @@ def _encode_steps(lat_col: str, lon_col: str, level: "int | Column", out: str) -
         F.col(face) - F.when(F.col(face) >= 4, F.lit(8)).otherwise(F.lit(0))
     ) * F.lit(1 << 61)
     trunc0 = face_bits.bitwiseOR(F.col(pos))
-    if per_row_level:
-        bits = (F.lit(2) * (F.lit(30) - level)).cast("int")
-        lsb = F.call_function("shiftleft", F.lit(1).cast("long"), bits)
-    else:
-        lsb = F.lit(1 << (2 * (MAX_LEVEL - level)))
+    lsb = F.lit(1 << (2 * (MAX_LEVEL - level)))
     steps.append({out: trunc0.bitwiseAND(-lsb).bitwiseOR(lsb)})
     return _compile(steps)
 
-
-# ---------------------------------------------------------------------------
-# native decode: cell ID -> cell-center lat/lon (s2cell/s2cell.py:708-771)
-# ---------------------------------------------------------------------------
-
-_RAD2DEG = 180.0 / math.pi  # numpy rad2deg multiplies by this constant
-
-
-def with_lat_lon(
-    df: DataFrame,
-    cell_col: str = "cell_id",
-    lat_out: str = "lat",
-    lon_out: str = "lon",
-) -> DataFrame:
-    """Append the CELL-CENTER (`lat_out`, `lon_out`) degrees of
-    `cell_col`, computed entirely JVM-side — the decode inverse of
-    :func:`with_cell_id` (kernels.cell_id_to_lat_lon parity; input
-    assumed valid, like the kernel).
-
-    8 inverse lookup rounds (LOOKUP_IJ as one true array Literal) ->
-    Si/Ti with the leaf/Hilbert-parity center correction -> quadratic
-    ST->UV -> cube XYZ -> atan2. Float-op order mirrors the kernels,
-    with explicit constant multiplies for radians<->degrees (module
-    docstring); JVM atan2 may differ from libm in the final ulp, inside
-    the corpus gate's 1e-12 tolerance (the reference's own decode gate)
-    and far inside the repo's 1e-7-deg fixed-point comparison grid.
-    """
-    return _apply(df, _decode_steps(cell_col, lat_out, lon_out))
-
-
-@functools.lru_cache(maxsize=None)
-def _decode_steps(cell_col: str, lat_out: str, lon_out: str) -> tuple:
-    """The decode's ``withColumns`` steps, built once per key."""
-    steps: list[dict[str, Column]] = []
-    cid = F.col(cell_col)
-    face_c, i_c, j_c, o_c = (
-        _tmp(n) for n in ("dface", "di", "dj", "do")
-    )
-    lut = _lut(kernels.LOOKUP_IJ)
-    steps.append(
-        {
-            face_c: F.shiftrightunsigned(cid, 61).bitwiseAND(F.lit(7)).cast("long"),
-            i_c: F.lit(0).cast("long"),
-            j_c: F.lit(0).cast("long"),
-        }
-    )
-    steps.append({o_c: F.col(face_c).bitwiseAND(F.lit(1))})
-    for k in range(7, -1, -1):
-        mask = 15 if k == 7 else 255
-        key = F.col(o_c) + F.shiftright(cid, k * 8 + 1).bitwiseAND(
-            F.lit(mask)
-        ) * F.lit(4)
-        vcol = _tmp(f"dv{k}")
-        steps.append({vcol: F.get(lut, key.cast("int")).cast("long")})
-        steps.append(
-            {
-                i_c: F.col(i_c)
-                + F.shiftright(F.col(vcol), 6) * F.lit(1 << (4 * k)).cast("long"),
-                j_c: F.col(j_c)
-                + F.shiftright(F.col(vcol), 2).bitwiseAND(F.lit(15))
-                * F.lit(1 << (4 * k)).cast("long"),
-                o_c: F.col(vcol).bitwiseAND(F.lit(3)),
-            }
-        )
-    # center correction: leaf -> +1; non-leaf -> +2 iff (i ^ (cid>>2)) odd
-    # (both axes use the I parity — reference parity, s2cell/s2cell.py:739)
-    is_leaf = cid.bitwiseAND(F.lit(1).cast("long")) == 1
-    corr = (
-        F.col(i_c).bitwiseXOR(F.shiftright(cid, 2)).bitwiseAND(F.lit(1).cast("long"))
-        == 1
-    )
-    delta = F.when(is_leaf, F.lit(1)).when(corr, F.lit(2)).otherwise(F.lit(0))
-    si_c, ti_c, u_c, v_c = (_tmp(n) for n in ("si", "ti", "du", "dv"))
-    steps.append(
-        {
-            si_c: F.lit(2).cast("long") * F.col(i_c) + delta.cast("long"),
-            ti_c: F.lit(2).cast("long") * F.col(j_c) + delta.cast("long"),
-        }
-    )
-
-    inv = 1.0 / kernels.MAX_SI_TI
-
-    def _uv(sit: Column) -> Column:
-        st = F.lit(inv) * sit.cast("double")
-        third = F.lit(1.0 / 3.0)
-        return F.when(
-            st >= 0.5, third * (F.lit(4.0) * st * st - F.lit(1.0))
-        ).otherwise(
-            third * (F.lit(1.0) - F.lit(4.0) * (F.lit(1.0) - st) * (F.lit(1.0) - st))
-        )
-
-    steps.append({u_c: _uv(F.col(si_c)), v_c: _uv(F.col(ti_c))})
-    fc, u, v = F.col(face_c), F.col(u_c), F.col(v_c)
-    one = F.lit(1.0)
-    x = (
-        F.when(fc == 0, one).when(fc == 1, -u).when(fc == 2, -u)
-        .when(fc == 3, -one).otherwise(v)
-    )
-    y = (
-        F.when(fc == 0, u).when(fc == 1, one).when(fc == 2, -v)
-        .when(fc == 3, -v).when(fc == 4, -one).otherwise(u)
-    )
-    z = (
-        F.when(fc == 0, v).when(fc == 1, v).when(fc == 2, one)
-        .when(fc == 3, -u).when(fc == 4, -u).otherwise(-one)
-    )
-    xyz = {_tmp("dx"): x, _tmp("dy"): y, _tmp("dz"): z}
-    steps.append(xyz)
-    xx, yy, zz = (F.col(c) for c in xyz)
-    # Spark's Atan2 expression adds 0.0 to BOTH operands, erasing signed
-    # zeros — but the antimeridian is decided by them: faces 2/3 have
-    # y = -v, so v == 0 means y is CONCEPTUALLY -0.0 with x <= -0.0 and
-    # the reference's atan2(-0.0, x<=-0.0) = -pi (lon exactly -180; the
-    # corpus encodes the face-2 pole and every face-3 center-line cell
-    # this way). All other zero-y cases (faces 0/5: y = +u) already
-    # normalize to the reference's +0.0 result. Exact by construction:
-    # the branch emits the literal the reference computes.
-    lon_raw = F.atan2(yy, xx) * F.lit(_RAD2DEG)
-    lon = F.when(
-        F.col(face_c).isin(2, 3) & (F.col(v_c) == 0.0), F.lit(-180.0)
-    ).otherwise(lon_raw)
-    steps.append(
-        {
-            lat_out: F.atan2(zz, F.sqrt(xx * xx + yy * yy)) * F.lit(_RAD2DEG),
-            lon_out: lon,
-        }
-    )
-    return _compile(steps)

@@ -1,10 +1,13 @@
 """Arrow UDFs wrapping the numpy kernels.
 
-Only the operations that genuinely need float math (cube-face projection,
-quadratic ST<->UV, Hilbert lookups) cross the JVM->Python Arrow boundary;
-all bit/token operations have native Catalyst forms in
-:mod:`s2cell_spark.functions.exprs` and should be preferred in filters so
-they push down (a predicate behind a Python UDF does not).
+Only the operations that genuinely need float math cross the JVM->Python
+Arrow boundary: the encode (an opaque plan node, and the only form with
+a per-row level), the decode to the cell center, neighbors and face/IJ
+in both directions. These five are also the
+Python UDFs :func:`register_sql_functions` binds. Every bit/token
+operation (level, validity, token, parent, ranges) exists only as a
+native Catalyst expr in :mod:`s2cell_spark.functions.exprs`, which
+codegens and pushes down (a predicate behind a Python UDF does not).
 
 Null convention (SURVEY.md §1.2): invalid input rows yield null output —
 the reference raises InvalidCellID/InvalidToken scalar-side
@@ -33,11 +36,9 @@ from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -121,30 +122,6 @@ def s2_cell_id_to_lat_lon(cid: pa.Array) -> pa.Array:
     )
 
 
-@F.arrow_udf(LongType())
-def s2_token_to_cell_id(tok: pa.Array) -> pa.Array:
-    """Token -> cell ID (s2cell/s2cell.py:583-618); null for malformed
-    tokens. (Prefer exprs.token_to_cell_id in filters — it pushes down.)"""
-    toks, notnull = arrow_to_numpy(tok, "U17", fill="")
-    ids, well_formed = K.token_to_cell_id(toks)
-    return numpy_to_arrow(ids.view(np.int64), notnull & well_formed)
-
-
-@F.arrow_udf(StringType())
-def s2_cell_id_to_token(cid: pa.Array) -> pa.Array:
-    """cell ID -> token (s2cell/s2cell.py:552-580). Native expr exists too;
-    this kernel form is for parity testing and kernel-side pipelines."""
-    vals, notnull, _ = _cell_ids(cid)
-    return numpy_to_arrow(K.cell_id_to_token(vals), notnull, pa.string())
-
-
-@F.arrow_udf(IntegerType())
-def s2_cell_id_to_level(cid: pa.Array) -> pa.Array:
-    """cell ID -> level (s2cell/s2cell.py:916-950); null when invalid."""
-    vals, _, ok = _cell_ids(cid)
-    return numpy_to_arrow(K.cell_id_to_level(vals), ok, pa.int32())
-
-
 @F.arrow_udf(ArrayType(LongType()))
 def s2_neighbor_cell_ids(cid: pa.Array, edge: pa.Array, corner: pa.Array) -> pa.Array:
     """Edge/corner neighbors at the cell's own level, in the reference's
@@ -216,13 +193,6 @@ def s2_face_ij_to_cell_id(face: pa.Array, i: pa.Array, j: pa.Array, level: pa.Ar
     return numpy_to_arrow(ids.view(np.int64), ok)
 
 
-@F.arrow_udf(BooleanType())
-def s2_cell_id_is_valid(cid: pa.Array) -> pa.Array:
-    """Kernel-parity validity (prefer the native expr in query plans)."""
-    vals, notnull, _ = _cell_ids(cid)
-    return numpy_to_arrow(K.cell_id_is_valid(vals), notnull)
-
-
 # -- convenience wrappers ----------------------------------------------------
 
 def lat_lon_to_cell_id(lat: Column, lon: Column, level: Column | int = 30) -> Column:
@@ -240,7 +210,7 @@ def neighbor_cell_ids(cid: Column, edge: bool = True, corner: bool = False) -> C
 def register_sql_functions(spark) -> None:
     """Register the full surface for ``spark.sql`` use.
 
-    Two tiers:
+    Two tiers, one implementation per name:
 
     * the float-math kernels (encode/decode/neighbors/face-IJ) register
       as the Arrow UDFs — they genuinely need numpy;
@@ -249,8 +219,7 @@ def register_sql_functions(spark) -> None:
       whose body is RENDERED FROM the native Catalyst exprs in
       :mod:`s2cell_spark.functions.exprs` — one source of truth, and
       pure-SQL users get whole-stage-codegen + predicate pushdown
-      instead of a per-row Python hop. Where both tiers could serve
-      (level/token/validity), the native SQL function wins.
+      instead of a per-row Python hop.
     """
     from s2cell_spark.functions import exprs as X
 

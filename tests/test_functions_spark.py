@@ -124,20 +124,16 @@ def test_null_and_invalid_conventions(spark):
     )
     df = spark.createDataFrame(pdf)
     out = df.select(
-        S2F.s2_cell_id_to_level(F.col("cell_id")).alias("lvl"),
         S2F.cell_id_to_level(F.col("cell_id")).alias("lvl_expr"),
-        S2F.s2_token_to_cell_id(F.col("tok")).alias("tok_cid"),
         S2F.token_to_cell_id(F.col("tok")).alias("tok_cid_expr"),
         S2F.lat_lon_to_cell_id(F.col("lat"), F.col("lon"), F.col("level")).alias("enc"),
         S2F.cell_id_to_lat_lon(F.col("cell_id")).alias("ll"),
     ).toPandas()
     # cell_id 1 is a valid leaf; 0, face-6 and null are not; 2 has odd lsb
-    assert out["lvl"].iloc[0] == 30 and pd.isna(out["lvl"]).tolist() == [False] + [True] * 4
     assert out["lvl_expr"].iloc[0] == 30 and pd.isna(out["lvl_expr"]).tolist() == [False] + [True] * 4
-    # token 'zzz' malformed, 'X' -> 0, 17-char -> null; both impls agree
-    assert pd.isna(out["tok_cid"]).tolist() == [False, True, True, False, True]
+    # token 'zzz' malformed, 'X' -> 0, 17-char -> null
     assert pd.isna(out["tok_cid_expr"]).tolist() == [False, True, True, False, True]
-    assert out["tok_cid"].iloc[3] == 0 and out["tok_cid_expr"].iloc[3] == 0
+    assert out["tok_cid_expr"].iloc[3] == 0
     # encode: null lat / null lon / level 99 -> null
     assert pd.isna(out["enc"]).tolist() == [False, True, False, True, True]
     # decode struct: invalid ids -> null members
@@ -176,7 +172,9 @@ def test_nullable_long_batch_does_not_corrupt(spark):
     """A LongType batch containing a null arrives in pandas as float64,
     destroying bits above 2^53 — the Column API must still return exact
     results for the valid rows sharing the batch (regression: it used to
-    silently emit the token of the wrong cell)."""
+    silently emit the token of the wrong cell). The Arrow UDFs carry the
+    check: exact leaf i/j and the decoded center; token and level come
+    from the native exprs on the same rows."""
     import numpy as np
 
     from s2cell_spark import functions as S2F
@@ -185,20 +183,29 @@ def test_nullable_long_batch_does_not_corrupt(spark):
     big = 4611686018427400249  # odd leaf id, > 2^53
     df = spark.createDataFrame([(big,), (None,)], "cid long").coalesce(1)
     got = {
-        r["cid"]: (r["tok"], r["lvl"], (r["ll"]["lat"] if r["ll"] else None))
+        r["cid"]: (
+            r["tok"],
+            r["lvl"],
+            (r["ll"]["lat"] if r["ll"] else None),
+            (tuple(r["fij"]) if r["fij"] else None),
+        )
         for r in df.select(
             "cid",
-            S2F.s2_cell_id_to_token(F.col("cid")).alias("tok"),
-            S2F.s2_cell_id_to_level(F.col("cid")).alias("lvl"),
+            S2F.cell_id_to_token(F.col("cid")).alias("tok"),
+            S2F.cell_id_to_level(F.col("cid")).alias("lvl"),
             S2F.cell_id_to_lat_lon(F.col("cid")).alias("ll"),
+            S2F.s2_cell_id_to_face_ij(F.col("cid")).alias("fij"),
         ).collect()
     }
-    want_tok = K.cell_id_to_token(np.array([big], dtype=np.uint64))[0]
-    want_lat = K.cell_id_to_lat_lon(np.array([big], dtype=np.uint64))[0][0]
+    cell = np.array([big], dtype=np.uint64)
+    want_tok = K.cell_id_to_token(cell)[0]
+    want_lat = K.cell_id_to_lat_lon(cell)[0][0]
+    want_fij = tuple(int(a[0]) for a in K.cell_id_to_face_ij(cell))
     assert got[big][0] == want_tok
     assert got[big][1] == 30
     assert abs(got[big][2] - want_lat) < 1e-12
-    assert got[None] == (None, None, None)
+    assert got[big][3] == want_fij
+    assert got[None] == (None, None, None, None)
 
 
 def test_face_ij_out_of_range_is_null(spark):
