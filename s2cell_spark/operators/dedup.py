@@ -320,10 +320,19 @@ def minhash_near_dup_pairs(
     cand = minhash_lsh_candidates(docs, num_perm, bands, id_col, wsets=wsets)
     if wsets is None:
         wsets = shingled_docs(docs, id_col)
-    joined = (
-        cand.join(wsets.withColumnRenamed("doc", "doc_a").withColumnRenamed("ws", "ws_a"), on="doc_a")
-        .join(wsets.withColumnRenamed("doc", "doc_b").withColumnRenamed("ws", "ws_b"), on="doc_b")
-    )
+    return verify_candidate_pairs(cand, wsets, threshold_bp)
+
+
+def verify_candidate_pairs(cand: DataFrame, wsets: DataFrame, threshold_bp: int) -> DataFrame:
+    """(doc_a, doc_b, jacc_bp) of the candidate (doc_a, doc_b) pairs whose
+    exact shingle-set Jaccard, in floored basis points, reaches
+    `threshold_bp`. `wsets` is (doc, ws); each pair joins it twice and
+    intersects the two arrays — no shared-shingle join."""
+
+    def side(s: str) -> DataFrame:
+        return wsets.select(F.col("doc").alias(f"doc_{s}"), F.col("ws").alias(f"ws_{s}"))
+
+    joined = cand.join(side("a"), on="doc_a").join(side("b"), on="doc_b")
     # cast BEFORE the multiply: size() is int32 and 10000 * inter wraps
     # past ~214k shared shingles (real for long near-dup docs at scale)
     inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("long")

@@ -54,7 +54,11 @@ from pyspark.sql import functions as F
 
 from s2cell_spark.functions.udfs import arrow_frame
 from s2cell_spark.operators.components import connected_components
-from s2cell_spark.operators.dedup import minhash_banded, shingled_docs
+from s2cell_spark.operators.dedup import (
+    minhash_banded,
+    shingled_docs,
+    verify_candidate_pairs,
+)
 
 _BANDED_SCHEMA = "doc long, band int, bucket string"
 _WSETS_SCHEMA = "doc long, ws array<string>"
@@ -87,8 +91,9 @@ def dup_clusters_refresh(
     spark = batch_df.sparkSession
     last_path = os.path.join(state_dir, "_last_batch.json")
     if os.path.exists(last_path):
-        if batch_id <= json.load(open(last_path))["batch_id"]:
-            return  # replay of an already-committed batch
+        with open(last_path) as f:
+            if batch_id <= json.load(f)["batch_id"]:
+                return  # replay of an already-committed batch
     docs = batch_df.select(F.col(id_col).cast("long").alias(id_col), "text")
     # materialize the per-batch derived state BEFORE any state writes —
     # batch_df is only valid inside this call, and the new banding rows
@@ -120,24 +125,9 @@ def dup_clusters_refresh(
         )
         .distinct()
     )
-    all_sets = old_sets.unionByName(new_sets)
-    j = (
-        cand.join(
-            all_sets.select(F.col("doc").alias("doc_a"), F.col("ws").alias("ws_a")),
-            on="doc_a",
-        )
-        .join(
-            all_sets.select(F.col("doc").alias("doc_b"), F.col("ws").alias("ws_b")),
-            on="doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("long")
-    union = F.size("ws_a").cast("long") + F.size("ws_b").cast("long") - inter
-    verified = (
-        j.withColumn("jacc_bp", F.floor(F.lit(10000) * inter / union).cast("long"))
-        .filter(F.col("jacc_bp") >= threshold_bp)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    )
+    verified = verify_candidate_pairs(
+        cand, old_sets.unionByName(new_sets), threshold_bp
+    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
 
     labels = connected_components(
         stars.unionByName(verified), src="u", dst="v"
