@@ -1,11 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads ride as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-``mapInArrow`` stages over Arrow record batches. The decode step itself
-is STUBBED in this container (no image/audio libs — clearly marked
-below); everything Spark-side — schema, batch shape, partitioning, UDF
-signatures, the deterministic fallback featurizer — is real and tested.
+struct; feature extraction runs as a ``mapInArrow`` stage over Arrow
+record batches and frame sampling is a native explode. There is no media
+decoder (no image/audio libraries are installed): features come from a
+deterministic payload-hash featurizer, and every row says so in its
+``decoded = "stub"`` column. Everything Spark-side — schema, batch
+shape, partitioning, UDF signatures — is real and tested; a real
+decoder replaces :func:`deterministic_features_batch` in
+:func:`extract_features`.
 
 Pattern at 100 TB: payload tables are wide; always project (key, media,
 meta) only, repartition by size-balanced key ranges before the Python
@@ -54,32 +57,6 @@ def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def media_decoder_available() -> bool:
-    """Capability probe, decided ONCE (import check) — not by raising and
-    catching per row inside the batch loop. This container ships no
-    image/audio libraries, so it returns False and the pipeline routes to
-    the vectorized deterministic featurizer."""
-    try:  # pragma: no cover - decode libs absent in this container
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_media(payload: bytes, media_type: str) -> np.ndarray:
-    """REAL DECODER STUB — this container ships no image/audio libraries.
-
-    On a production cluster this dispatches to PIL/torchaudio/pyav. Here
-    it raises so nothing silently fakes decode; use
-    :func:`deterministic_features_batch` for tested plumbing.
-    """
-    raise NotImplementedError(
-        "media decode requires PIL/torchaudio/pyav — not available in this "
-        "container; wire the real decoder here on a production image"
-    )
-
-
 def deterministic_features_batch(payloads: list[bytes], dim: int = 16) -> np.ndarray:
     """Vectorized deterministic fake featurizer: sha256(payload) ->
     (n, dim) float64 in [0, 1). The only per-row Python is the sha256
@@ -98,12 +75,10 @@ def deterministic_features_batch(payloads: list[bytes], dim: int = 16) -> np.nda
 
 
 def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
-    """(doc_id, media_type, n_bytes, feature[dim]) via mapInArrow.
-
-    Decoder dispatch happens once per executor (capability probe), not
-    per row; the fallback featurizer is batch-vectorized (~7x faster
-    than the former per-row try/except loop). `decoded` flags which path
-    produced each batch."""
+    """(doc_id, media_type, n_bytes, decoded, feature[dim]) via
+    mapInArrow. Features come from the batch-vectorized deterministic
+    featurizer; `decoded` is always ``"stub"``, marking that no media was
+    decoded (module docstring)."""
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -115,39 +90,18 @@ def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        use_real = media_decoder_available()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             media = batch.column("media")
-            payloads = media.to_pylist()
-            media_types = pc.struct_field(batch.column("meta"), "media_type")
-            feats = None
-            mode = "stub"
-            if use_real:
-                # the probe checks library availability, not that
-                # decode_media is actually wired (it ships as a stub) —
-                # so a probe-true environment must still fall back per
-                # batch instead of crashing the stage (ADVICE r2)
-                try:
-                    feats = np.stack(
-                        [
-                            decode_media(p, m or "unknown")
-                            for p, m in zip(payloads, media_types.to_pylist())
-                        ]
-                    )
-                    mode = "real"
-                except NotImplementedError:
-                    feats = None
-            if feats is None:
-                feats = deterministic_features_batch(payloads, dim)
+            feats = deterministic_features_batch(media.to_pylist(), dim)
             n, width = feats.shape
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("doc_id").cast(pa.int64()),
-                    media_types,
+                    pc.struct_field(batch.column("meta"), "media_type"),
                     pc.binary_length(media).cast(pa.int64()),
-                    pa.array([mode] * n, type=pa.string()),
+                    pa.array(["stub"] * n, type=pa.string()),
                     pa.ListArray.from_arrays(
                         np.arange(0, n * width + 1, width, dtype=np.int32),
                         numpy_to_arrow(feats.ravel()),
@@ -161,8 +115,8 @@ def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
 
 def frame_sample_plan(media_df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling PLAN: one row per (doc_id, frame_ts_ms) —
-    the explode is native; actual frame decode goes through
-    :func:`decode_media` on a real stack."""
+    the explode is native. Decoding the frames themselves needs a media
+    decoder, which this package does not ship (module docstring)."""
     vids = media_df.filter(F.col("meta.media_type") == "video")
     return vids.select(
         "doc_id",
