@@ -3,11 +3,11 @@
 Only the operations that genuinely need float math cross the JVM->Python
 Arrow boundary: the encode (an opaque plan node, and the only form with
 a per-row level), the decode to the cell center, neighbors and face/IJ
-in both directions. These five are also the
-Python UDFs :func:`register_sql_functions` binds. Every bit/token
-operation (level, validity, token, parent, ranges) exists only as a
-native Catalyst expr in :mod:`s2cell_spark.functions.exprs`, which
-codegens and pushes down (a predicate behind a Python UDF does not).
+in both directions. These five are also the Python UDFs
+:func:`register_sql_functions` binds. Every bit/token operation (level,
+validity, token, parent, ranges) exists only as a native Catalyst expr
+in :mod:`s2cell_spark.functions.exprs`, which codegens and pushes down
+(a predicate behind a Python UDF does not).
 
 Null convention (SURVEY.md §1.2): invalid input rows yield null output —
 the reference raises InvalidCellID/InvalidToken scalar-side
